@@ -1625,7 +1625,7 @@ def _w_versioned_merge_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """MERGE with when_not_matched_by_source='delete' (Delta's third
-    MERGE clause, writers/versioned.py:_merge_by_source_delete): target
+    MERGE clause, writers/versioned.py:_merge_with_keys): target
     rows matching no source key are removed, so update+insert+by-source-
     delete makes the table an EXACT MIRROR of the source — the
     CDC-sync/retention primitive. Scale shape asserted in-query: target

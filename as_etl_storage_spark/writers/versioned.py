@@ -3054,10 +3054,6 @@ class VersionedTable:
 
         return _ctx()
 
-    #: set to "0" to run each commit's independent staging writes
-    #: sequentially (the pre-r17 behavior) instead of from driver threads
-    _OVERLAP_ENV = "SPARK_GRAFT_OVERLAP_DML_WRITES"
-
     def _overlapped(self, *thunks):
         """Run a commit's INDEPENDENT staging writes (touched-file
         rewrite, insert files, CDF sidecar) as concurrent driver-thread
@@ -3069,13 +3065,12 @@ class VersionedTable:
         every sibling future is still awaited (a half-staged sibling
         only leaves unreferenced files for vacuum's grace sweep — the
         same exposure a failure BETWEEN the sequential writes always
-        had), then the first error re-raises."""
-        live = [t for t in thunks if t is not None]
-        if len(live) <= 1 or os.environ.get(self._OVERLAP_ENV, "1") == "0":
-            return [t() if t is not None else None for t in thunks]
+        had), then the first error re-raises. Job descriptions are
+        thread-local, so each thunk sets its own label."""
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(live)) as pool:
+        live = [t for t in thunks if t is not None]
+        with ThreadPoolExecutor(max_workers=max(1, len(live))) as pool:
             futs = [
                 pool.submit(t) if t is not None else None for t in thunks
             ]
@@ -4149,7 +4144,6 @@ class VersionedTable:
         )
         stored, tombstones = self._schema_record_at(base)
         mapping = self._mapping_at(base)
-        pb = self._partition_by_at(base)
         cons = self._constraints_at(base)
         df, new_schema = self._align(
             df, stored, merge_schema, "replace_where", tombstones, mapping,
@@ -4173,91 +4167,51 @@ class VersionedTable:
                 F.lit(True),
             )
         )
-        ins_pinned = None
-        if hidden_ids:
-            ins_pinned = enforced.persist()
-            enforced = self._with_identity_allocation(
-                ins_pinned, hidden_ids
-            )
-        rw_sch = self._scan_schema(base)
-        if hidden_ids:
-            rw_sch = self._with_row_id(rw_sch)
         # phase 1 (the DML shape): ONE column-pruned scan finds the files
         # holding at least one matching row; everything else is carried
-        touched, untouched = self._split_touched(base, cond, candidates)
-        new_files: list[str] = []
-        cdc: list[str] = []
-        try:
-            if touched:
-                scan_t = self._scan_files(
-                    touched, rw_sch, self._dv_at(base),
-                    mapping=mapping, partition_by=pb,
-                ).persist()
-                try:
-                    # boundary rows survive; files wholly inside the
-                    # predicate contribute nothing and are dropped with no
-                    # rewrite beyond this one fused pass. The boundary
-                    # rewrite, the delete CDF sidecar and the incoming
-                    # slice's files are three independent jobs —
-                    # overlapped (see _overlapped)
-                    kept_w, cdc_w, ins = self._overlapped(
-                        lambda: self._write_data_files(
-                            scan_t.where(~cond), pb, mapping
-                        ),
-                        lambda: self._write_cdc_files(
-                            scan_t.where(cond).withColumn(
-                                "_change_type", F.lit("delete")
-                            ),
-                            mapping,
-                        ),
-                        lambda: self._write_data_files(
-                            self._checked(enforced, cons), pb, mapping
-                        ),
-                    )
-                    new_files += kept_w
-                    cdc += cdc_w
-                finally:
-                    scan_t.unpersist()
-            else:
-                ins = self._write_data_files(
-                    self._checked(enforced, cons), pb, mapping
-                )
-        finally:
-            if ins_pinned is not None:
-                ins_pinned.unpersist()
-        new_files += ins
-        if ins:
-            # insert change rows come from the COMMITTED files, not a
-            # re-evaluation of the incoming plan (a non-deterministic
-            # source must record exactly what it wrote)
-            ins_sch = T.StructType.fromJson(new_schema)
-            if hidden_ids:
-                ins_sch = self._with_row_id(ins_sch)
-            cdc += self._write_cdc_files(
-                self._scan_files(
-                    ins,
-                    ins_sch,
-                    mapping=mapping,
-                ).withColumn("_change_type", F.lit("insert")),
-                mapping,
+        with self._job_label("replace_where:discovery"):
+            touched, untouched = self._split_touched(
+                base, cond, candidates
             )
-        known = self._stats_at(base)
-        return self._commit(
-            untouched + new_files,
+
+        def _build(scan_t, allocate):
+            # boundary rows survive; files wholly inside the predicate
+            # contribute nothing and are dropped with no rewrite beyond
+            # this one fused pass. On a row-tracked table the incoming
+            # slice allocates fresh ids (hidden_ids is the whole idmap:
+            # visible identity columns are refused above)
+            ins = self._checked(allocate(enforced), cons)
+            if scan_t is None:
+                return None, [], ins
+            return (
+                scan_t.where(~cond),
+                [
+                    scan_t.where(cond).withColumn(
+                        "_change_type", F.lit("delete")
+                    )
+                ],
+                ins,
+            )
+
+        # insert change rows come from the COMMITTED files, not a
+        # re-evaluation of the incoming plan (a non-deterministic source
+        # must record exactly what it wrote)
+        ins_sch = T.StructType.fromJson(new_schema)
+        if hidden_ids:
+            ins_sch = self._with_row_id(ins_sch)
+        return self._rewrite_commit(
             "replace_where",
             base,
-            cdc=cdc,
-            known_stats={f: known[f] for f in untouched if f in known},
-            partition_by=pb,
+            touched,
+            untouched,
+            _build,
+            params={"predicate": self._param_repr(predicate)},
+            rebase_on_appends=self._phys_triples(triples, mapping),
+            idmap=idmap,
+            insert_cdf_schema=ins_sch,
             schema=new_schema if schema_evolved else None,
             enforced_schema=stored,
             enforced_constraints=cons,
-            rebase_on_appends=self._phys_triples(triples, mapping),
-            identity=(idmap or None) if hidden_ids else None,
-            identity_allocated=bool(hidden_ids),
-            identity_stat_files=ins if hidden_ids else None,
-            enforced_identity=(idmap or None) if hidden_ids else None,
-            params={"predicate": self._param_repr(predicate)},
         )
 
     def replace(self, df: DataFrame, merge_keys: list[str]) -> int:
@@ -4607,6 +4561,176 @@ class VersionedTable:
             [f for f in files if os.path.basename(f) not in touched],
         )
 
+    def _dml_scan(
+        self,
+        base: int,
+        files: list[str],
+        evolved_schema: dict | None = None,
+    ) -> DataFrame:
+        """The target-side scan every rewrite-style DML reads ``files``
+        through: the declared table schema, plus ``_row_id`` on a
+        row-tracked table (survivors keep their ids through the rewrite;
+        CDF rows name the changed ids), null-filled up to
+        ``evolved_schema`` when the op evolves the schema, so rewrites,
+        inserts and change rows compose under one schema."""
+        tracked = self._row_tracked_at(base)
+        sch = self._scan_schema(base)
+        if tracked:
+            sch = self._with_row_id(sch)
+        df = self._scan_files(
+            files, sch, self._dv_at(base),
+            mapping=self._mapping_at(base),
+            partition_by=self._partition_by_at(base),
+        )
+        if evolved_schema is not None:
+            df, _ = self._align(
+                df, evolved_schema, False, "merge",
+                passthrough=(self._ROW_ID,) if tracked else (),
+            )
+        return df
+
+    def _rewrite_commit(
+        self,
+        op: str,
+        base: int,
+        touched: list[str],
+        untouched: list[str],
+        build,
+        *,
+        params: dict,
+        rebase_on_appends: list | None = None,
+        evolved_schema: dict | None = None,
+        idmap: dict | None = None,
+        mark_counts_rewrites: bool = False,
+        insert_cdf_schema: "T.StructType | None" = None,
+        **commit_kw,
+    ) -> int | None:
+        """The second half of every rewrite-style row-level DML (delete,
+        update, replace_where, merge) — Delta's shape for all of them:
+        rewrite the touched files, stage inserts and change rows, commit
+        add/remove/cdc in one manifest. Phase 1 (finding ``touched``) is
+        the caller's.
+
+        ``build(scan, allocate)`` turns the persisted touched-file scan
+        (None when nothing is touched) into ``(rewritten, cdf_frames,
+        insert)``: the rows replacing the touched files (None: they are
+        dropped outright), the change rows, and the fresh inserted rows
+        (None: no inserts). ``allocate(df)`` pins ``df`` and assigns
+        ``idmap``'s identity values in-plan; an allocation makes the
+        commit advance the identity high-water mark from the insert
+        files' footer ``#rows`` (all staged files with
+        ``mark_counts_rewrites`` — over-advancing only widens a gap).
+
+        The rewrite, insert and CDF writes are independent jobs over the
+        persisted frames, staged concurrently (:meth:`_overlapped`) and
+        labelled ``vt:<op>:rewrite|insert|cdf``; each data-file thread
+        also reads its own files' footer stats, so the commit re-reads
+        no footer: untouched files reuse their manifest stats.
+        ``insert_cdf_schema``: record the insert change rows from the
+        COMMITTED insert files instead (one more job after staging) — a
+        non-deterministic, unpinned incoming frame must record exactly
+        what it wrote. ``evolved_schema``: the schema an evolving op
+        (merge_schema) commits; target-side scans align to it and a
+        concurrent schema change aborts the commit."""
+        from functools import reduce
+
+        pb = self._partition_by_at(base)
+        mapping = self._mapping_at(base)
+        pinned: list[DataFrame] = []
+
+        def allocate(df: DataFrame) -> DataFrame:
+            if not idmap:
+                return df
+            p = df.persist()
+            pinned.append(p)
+            return self._with_identity_allocation(p, idmap)
+
+        def staged(phase: str, frame: DataFrame | None):
+            if frame is None:
+                return None
+
+            def run():
+                with self._job_label(f"{op}:{phase}"):
+                    fs = self._write_data_files(frame, pb, mapping)
+                    return fs, self._collect_stats(fs)
+
+            return run
+
+        scan_t = (
+            self._dml_scan(base, touched, evolved_schema).persist()
+            if touched
+            else None
+        )
+        try:
+            rewritten, cdf_frames, insert = build(scan_t, allocate)
+
+            def cdf():
+                with self._job_label(f"{op}:cdf"):
+                    return self._write_cdc_files(
+                        reduce(lambda a, b: a.unionByName(b), cdf_frames),
+                        mapping,
+                    )
+
+            rw, ins, cdc = self._overlapped(
+                staged("rewrite", rewritten),
+                staged("insert", insert),
+                cdf if cdf_frames else None,
+            )
+        finally:
+            if scan_t is not None:
+                scan_t.unpersist()
+            for p in pinned:
+                p.unpersist()
+        rw_files, rw_stats = rw or ([], {})
+        ins_files, ins_stats = ins or ([], {})
+        cdc = cdc or []
+        if insert_cdf_schema is not None and ins_files:
+            with self._job_label(f"{op}:cdf"):
+                cdc += self._write_cdc_files(
+                    self._scan_files(
+                        ins_files, insert_cdf_schema, mapping=mapping
+                    ).withColumn("_change_type", F.lit("insert")),
+                    mapping,
+                )
+        new_files = rw_files + ins_files
+        known = self._stats_at(base)
+        if evolved_schema is not None:
+            # the rows were aligned against the base's schema (on a
+            # legacy log, the files' DERIVED schema — the same fallback
+            # append enforces): a concurrent schema change must abort
+            # the commit, never be stomped
+            commit_kw.update(
+                schema=evolved_schema,
+                enforced_schema=(
+                    self._schema_at(base) or self._derived_schema_json(base)
+                ),
+                mapping=mapping,
+            )
+        if pinned:
+            commit_kw.update(
+                identity=idmap,
+                identity_allocated=True,
+                identity_stat_files=(
+                    new_files if mark_counts_rewrites else ins_files
+                ),
+                enforced_identity=idmap,
+            )
+        return self._commit(
+            untouched + new_files,
+            op,
+            base,
+            cdc=cdc,
+            known_stats={
+                **{f: known[f] for f in untouched if f in known},
+                **rw_stats,
+                **ins_stats,
+            },
+            partition_by=pb,
+            rebase_on_appends=rebase_on_appends,
+            params=params,
+            **commit_kw,
+        )
+
     def delete(
         self,
         predicate,
@@ -4686,60 +4810,30 @@ class VersionedTable:
             )
         if not touched:
             return None
-        pb = self._partition_by_at(base)
-        mapping = self._mapping_at(base)
-        sch = self._scan_schema(base)
-        if self._row_tracked_at(base):
-            # rewrite-side scan declares _row_id so survivors keep their
-            # ids (deleted ids leave with their rows and never reissue —
-            # the high-water mark only advances)
-            sch = self._with_row_id(sch)
-        scan_t = self._scan_files(
-            touched, sch, self._dv_at(base),
-            mapping=mapping, partition_by=pb,
-        ).persist()
-        try:
-            # the survivor rewrite and the CDF sidecar are independent
-            # jobs over the same persisted scan — overlapped so the
-            # second back-fills the first's task tail; the rewrite thread
-            # also reads its own files' footer stats so the commit's stat
-            # collection overlaps the CDF write (pipelined manifest I/O)
-            def _rw():
-                with self._job_label("delete:rewrite"):
-                    fs = self._write_data_files(
-                        scan_t.where(~cond), pb, mapping
-                    )
-                    return fs, self._collect_stats(fs)
-
-            def _cdf():
-                with self._job_label("delete:cdf"):
-                    return self._write_cdc_files(
-                        scan_t.where(cond).withColumn(
-                            "_change_type", F.lit("delete")
-                        ),
-                        mapping,
-                    )
-
-            staged, cdc = self._overlapped(_rw, _cdf)
-            kept_files, staged_stats = staged
-        finally:
-            scan_t.unpersist()
-        known = self._stats_at(base)
-        return self._commit(
-            untouched + kept_files,
+        # survivors rewrite (keeping their _row_id: deleted ids leave
+        # with their rows and never reissue), the matched rows become
+        # CDF delete rows
+        return self._rewrite_commit(
             "delete",
             base,
-            cdc=cdc,
-            known_stats={
-                **{f: known[f] for f in untouched if f in known},
-                **staged_stats,
-            },
-            partition_by=pb,
-            rebase_on_appends=self._phys_triples(triples, mapping),
+            touched,
+            untouched,
+            lambda scan_t, _allocate: (
+                scan_t.where(~cond),
+                [
+                    scan_t.where(cond).withColumn(
+                        "_change_type", F.lit("delete")
+                    )
+                ],
+                None,
+            ),
             params={
                 "mode": "rewrite",
                 "predicate": self._param_repr(predicate),
             },
+            rebase_on_appends=self._phys_triples(
+                triples, self._mapping_at(base)
+            ),
         )
 
     def _delete_dv(
@@ -4940,26 +5034,21 @@ class VersionedTable:
                 )
             return out.drop(hit)
 
-        touched, untouched = self._split_touched(base, cond, candidates)
+        with self._job_label("update:discovery"):
+            touched, untouched = self._split_touched(
+                base, cond, candidates
+            )
         if not touched:
             return None
-        pb = self._partition_by_at(base)
         cons = self._constraints_at(base)
-        mapping = self._mapping_at(base)
-        sch = self._scan_schema(base)
-        # derived from the idmap already in hand — no second log walk
+        # derived from the idmap already in hand — no second log walk.
+        # Updated rows KEEP their ids (stable row identity is the whole
+        # point): _row_id rides the scan, flows through the per-column
+        # select untouched (never assignable — the identity guard above
+        # covers it), and passes the re-align
         tracked = any(sp.get("hidden") for sp in idmap.values())
-        if tracked:
-            # updated rows KEEP their ids (stable row identity is the
-            # whole point): _row_id rides the scan, flows through the
-            # per-column select untouched (never assignable — the
-            # identity guard above covers it), and passes the re-align
-            sch = self._with_row_id(sch)
-        scan_t = self._scan_files(
-            touched, sch, self._dv_at(base),
-            mapping=mapping, partition_by=pb,
-        ).persist()
-        try:
+
+        def _build(scan_t, _allocate):
             # re-align the rewritten rows: an assignment whose expression
             # drifts a column's type (v = 'oops') must fail HERE, not
             # poison later declared-schema scans of the rewritten files
@@ -4969,38 +5058,32 @@ class VersionedTable:
                 passthrough=(self._ROW_ID,) if tracked else (),
             )
             matched = scan_t.where(cond)
-            # rewrite and CDF sidecar: independent jobs over the same
-            # persisted scan, overlapped (see _overlapped)
-            new_files, cdc = self._overlapped(
-                lambda: self._write_data_files(
-                    self._checked(rewritten, cons), pb, mapping
-                ),
-                lambda: self._write_cdc_files(
+            return (
+                self._checked(rewritten, cons),
+                [
                     matched.withColumn(
                         "_change_type", F.lit("update_preimage")
-                    ).unionByName(
-                        _updated(matched, F.lit(True)).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
                     ),
-                    mapping,
-                ),
+                    _updated(matched, F.lit(True)).withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    ),
+                ],
+                None,
             )
-        finally:
-            scan_t.unpersist()
-        known = self._stats_at(base)
-        return self._commit(
-            untouched + new_files,
+
+        return self._rewrite_commit(
             "update",
             base,
-            cdc=cdc,
-            known_stats={f: known[f] for f in untouched if f in known},
-            partition_by=pb,
-            rebase_on_appends=self._phys_triples(triples, mapping),
+            touched,
+            untouched,
+            _build,
             params={
                 "predicate": self._param_repr(predicate),
                 "assignments": self._param_repr(assignments),
             },
+            rebase_on_appends=self._phys_triples(
+                triples, self._mapping_at(base)
+            ),
         )
 
     def _matched_pairs(
@@ -5473,6 +5556,21 @@ class VersionedTable:
         when_matched_set: dict[str, str] | None = None,
         evolved_schema: dict | None = None,
     ) -> int | None:
+        """Classify the target files, then hand the rewrite to
+        :meth:`_rewrite_commit`. Touched files are those holding a
+        KEY-matched target row (narrowed by a matched condition).
+
+        With ``when_not_matched_by_source='delete'`` every target file
+        may hold doomed unmatched rows, so nothing is carried by name:
+        files outside the candidate set, or holding no key match,
+        contain ONLY doomed rows — they are dropped WHOLESALE (read once
+        for their CDF delete rows, never rewritten); only key-matched
+        files rewrite. A by-source CONDITION disables the wholesale drop
+        (an unmatched row survives unless the condition says otherwise),
+        so every file is touched. The by-source read set is the whole
+        table, so it commits with the abort-on-anything conflict rule."""
+        from functools import reduce
+
         if mapping is None:
             mapping = self._mapping_at(base)
         # the schema the REWRITE side must land under: when the merge
@@ -5486,74 +5584,22 @@ class VersionedTable:
             else self._schema_at(base)
         )
         idmap = self._identity_at(base)
-        # cardinality rule: among KEY-MATCHED rows, a duplicated source
-        # key means one target row has two candidate replacements. The
-        # check itself runs fused with the touched-file discovery below
-        # (one Spark job for both — they are independent subtrees over
-        # the same persisted key frames); this builds the subtree only.
-        dup_probe = None
-        if when_matched is not None and candidates:
-            dup_probe = (
-                source.join(cand_keys, on=on, how="left_semi")
-                .groupBy(*on)
-                .count()
-                .where(F.col("count") > 1)
-                .limit(1)
-                .select(F.lit("__dup__").alias(self._FILE_NAME))
-            )
-        if when_not_matched_by_source == "delete":
-            # the by-source path does its own touched-file derivation, so
-            # the cardinality check runs standalone here (unfused)
-            if dup_probe is not None and dup_probe.limit(1).count():
-                raise VersionedTableError(
-                    "merge source has duplicate keys among matched rows — "
-                    "a target row would match multiple source rows; "
-                    "de-duplicate the source on the merge keys first"
-                )
-            return self._merge_by_source_delete(
-                source,
-                on,
-                when_matched,
-                when_not_matched,
-                base,
-                files,
-                pb,
-                src_keys,
-                cand_keys,
-                candidates,
-                mapping,
-                when_matched_condition,
-                when_not_matched_condition,
-                when_not_matched_by_source_condition,
-                when_matched_set,
-                evolved_schema,
-            )
-
-        def _inserts():
-            ins = source.join(cand_keys, on=on, how="left_anti")
-            if when_not_matched_condition is not None:
-                # narrows the insert clause: source rows failing it are
-                # dropped, not inserted (bare names = source columns)
-                ins = ins.where(
-                    self._as_condition(when_not_matched_condition)
-                )
-            return ins
-
-        ins_pinned: list[DataFrame] = []
-
-        def _allocated(ins: DataFrame) -> DataFrame:
-            # identity: inserted rows allocate from the current mark,
-            # in-plan (see _with_identity_allocation); pinned so the
-            # allocation's two lineages agree, unpinned after commit
-            if not idmap:
-                return ins
-            p = ins.persist()
-            ins_pinned.append(p)
-            return self._with_identity_allocation(p, idmap)
-
-        touched: list[str] = []
-        untouched = files
-        if when_matched is not None and candidates:
+        by_source = when_not_matched_by_source == "delete"
+        bcond = (
+            self._as_condition(when_not_matched_by_source_condition)
+            if when_not_matched_by_source_condition is not None
+            else None
+        )
+        # ONE discovery collect: the touched-file names plus the
+        # cardinality rule's probe (among KEY-matched rows, a duplicated
+        # source key means one target row has two candidate
+        # replacements). They are independent subtrees over the same
+        # persisted key frames, so the fused probe costs rows (0 or 1),
+        # not a separate action
+        probes: list[DataFrame] = []
+        if candidates and bcond is None and (
+            by_source or when_matched is not None
+        ):
             disc = self._scan_files(
                 candidates,
                 self._scan_schema(base),
@@ -5562,28 +5608,35 @@ class VersionedTable:
                 mapping=mapping,
                 partition_by=pb,
             )
-            if when_matched_condition is not None:
+            if when_matched_condition is not None and not by_source:
                 # condition-narrowed discovery: a file whose key matches
                 # are all condition-false holds nothing the clause
                 # applies to — carried by name, never rewritten (Delta
                 # evaluates the full match condition in its touched-file
-                # scan for the same reason)
+                # scan for the same reason). By-source must still
+                # rewrite such a file: its unmatched rows are doomed
                 pair_c, _ = self._matched_pairs(disc, source, on)
                 disc = pair_c.where(
                     self._as_condition(when_matched_condition)
                 )
             else:
                 disc = disc.join(src_keys, on=on, how="left_semi")
-            disc = disc.select(self._FILE_NAME).distinct()
-            if dup_probe is not None:
-                # fused cardinality check: the dup probe is a second
-                # independent subtree over the same persisted key frames,
-                # so running it in the SAME collect costs rows (0 or 1),
-                # not a job — the standalone probe was a full extra job
-                # per merge
-                disc = disc.unionByName(dup_probe)
+            probes.append(disc.select(self._FILE_NAME).distinct())
+        if when_matched is not None and candidates:
+            probes.append(
+                source.join(cand_keys, on=on, how="left_semi")
+                .groupBy(*on)
+                .count()
+                .where(F.col("count") > 1)
+                .limit(1)
+                .select(F.lit("__dup__").alias(self._FILE_NAME))
+            )
+        t_set: set[str] = set()
+        if probes:
             with self._job_label("merge:discovery"):
-                t_rows = disc.collect()
+                t_rows = reduce(
+                    lambda a, b: a.unionByName(b), probes
+                ).collect()
             t_set = {r[self._FILE_NAME] for r in t_rows}
             if "__dup__" in t_set:
                 raise VersionedTableError(
@@ -5591,512 +5644,164 @@ class VersionedTable:
                     "a target row would match multiple source rows; "
                     "de-duplicate the source on the merge keys first"
                 )
-            touched = [f for f in files if os.path.basename(f) in t_set]
-            untouched = [
-                f for f in files if os.path.basename(f) not in t_set
-            ]
-        cdc_frames: list[DataFrame] = []
-        new_files: list[str] = []
-        # derived from the idmap already in hand — no second log walk
-        tracked = any(sp.get("hidden") for sp in idmap.values())
-        pt = (self._ROW_ID,) if tracked else ()
-        if touched:
-            sch = self._scan_schema(base)
-            if tracked:
-                # matched rows KEEP their ids (_matched_split's identity
-                # list includes _row_id, so whole-row updates take the
-                # TARGET's id); kept rows carry theirs; inserts allocate
-                sch = self._with_row_id(sch)
-            scan_t = self._scan_files(
-                touched, sch, self._dv_at(base),
-                mapping=mapping, partition_by=pb,
-            )
-            if evolved_schema is not None:
-                # rewritten rows land under the EVOLVED schema: kept
-                # rows null-fill the new columns (one zero-cost select)
-                scan_t, _ = self._align(
-                    scan_t, evolved_schema, False, "merge", passthrough=pt
-                )
-            scan_t = scan_t.persist()
-            try:
-                kept = scan_t.join(src_keys, on=on, how="left_anti")
-                cons = self._constraints_at(base)
-                matched_t = scan_t.join(src_keys, on=on, how="left_semi")
-                # split the matched rows by the clause condition: the
-                # clause applies to apply_pre (each target row — Delta's
-                # whenMatchedUpdateAll multiplicity: duplicate-key
-                # targets keep theirs), condition-false rows carry
-                apply_pre, updated, carry = self._matched_split(
-                    matched_t, source, on, when_matched_condition,
-                    when_matched_set, self._generated_at(base),
-                    sorted(idmap),
-                )
-                if when_matched == "update":
-                    if when_matched_set is not None:
-                        # SET expressions can drift a column's type —
-                        # re-align so the rewritten files can't poison
-                        # later declared-schema scans (same rule as
-                        # update()'s assignments)
-                        updated, _ = self._align(
-                            updated, eff_schema, False, "merge",
-                            passthrough=pt,
-                        )
-                    rewritten = kept.unionByName(
-                        self._checked(updated, cons)
-                    )
-                else:  # delete
-                    rewritten = kept
-                if carry is not None:
-                    rewritten = rewritten.unionByName(carry)
-                if when_matched == "update":
-                    cdc_frames.append(
-                        apply_pre.withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    # one postimage PER updated target row, pairing the
-                    # preimages (not one per source key)
-                    cdc_frames.append(
-                        updated.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                else:
-                    cdc_frames.append(
-                        apply_pre.withColumn("_change_type", F.lit("delete"))
-                    )
-                ins_checked = None
-                if when_not_matched == "insert":
-                    raw_ins = _inserts()
-                    # the isEmpty() pre-check costs a full anti-join job
-                    # and buys nothing without identity columns: writing
-                    # an empty frame stages zero part files (new_files
-                    # gains nothing) and the empty CDC branch adds zero
-                    # change rows. With identity columns the gate stays —
-                    # an unconditional _allocated() would record identity
-                    # watermark fields in the log for a zero-insert merge.
-                    if not idmap or not raw_ins.isEmpty():
-                        inserts = _allocated(raw_ins)
-                        ins_checked = self._checked(inserts, cons)
-                        cdc_frames.append(
-                            inserts.withColumn("_change_type", F.lit("insert"))
-                        )
-                from functools import reduce
-
-                # the touched-file rewrite, the insert files and the CDF
-                # sidecar are three independent jobs over the persisted
-                # scan/source frames — overlapped (see _overlapped);
-                # manifest order (rewrite files, then inserts) unchanged.
-                # Each data thunk also reads its own files' footer stats
-                # IN ITS THREAD, so the commit's stat collection overlaps
-                # the sibling writes instead of running as a serial
-                # driver loop after all three finish (r18: pipelined
-                # manifest I/O)
-                def _staged(label: str, frame: DataFrame):
-                    def run():
-                        with self._job_label(label):
-                            fs = self._write_data_files(frame, pb, mapping)
-                            return fs, self._collect_stats(fs)
-
-                    return run
-
-                def _cdf():
-                    with self._job_label("merge:cdf"):
-                        return self._write_cdc_files(
-                            reduce(
-                                lambda a, b: a.unionByName(b), cdc_frames
-                            ),
-                            mapping,
-                        )
-
-                rw, ins, cdc = self._overlapped(
-                    _staged("merge:rewrite", rewritten),
-                    _staged("merge:insert", ins_checked)
-                    if ins_checked is not None
-                    else None,
-                    _cdf,
-                )
-                rw_files, rw_stats = rw
-                ins_files, ins_stats = ins if ins is not None else ([], {})
-                staged_stats = {**rw_stats, **ins_stats}
-                new_files += rw_files + ins_files
-            finally:
-                scan_t.unpersist()
-                for p in ins_pinned:
-                    p.unpersist()
+        if by_source and bcond is not None:
+            touched, untouched, dropped = list(files), [], []
         else:
-            if when_not_matched != "insert":
-                return None  # no matches, nothing to insert
-            raw_ins = _inserts()
-            if raw_ins.isEmpty():
-                return None  # nothing matched AND nothing new
-            try:
-                inserts = _allocated(raw_ins)
+            touched = [f for f in files if os.path.basename(f) in t_set]
+            rest = [f for f in files if os.path.basename(f) not in t_set]
+            untouched, dropped = ([], rest) if by_source else (rest, [])
+        inserts = None
+        if when_not_matched == "insert":
+            inserts = source.join(cand_keys, on=on, how="left_anti")
+            if when_not_matched_condition is not None:
+                # narrows the insert clause: source rows failing it are
+                # dropped, not inserted (bare names = source columns)
+                inserts = inserts.where(
+                    self._as_condition(when_not_matched_condition)
+                )
+            # writing an empty insert frame still stages one 0-row file,
+            # so the isEmpty() probe (a full anti-join job) decides
+            # whether to write at all — except on the plain merge's hot
+            # path, where a key match already proved there is a rewrite
+            # to commit and the probe costs more than the empty file.
+            # An identity allocation always probes: it would record
+            # watermark fields for a zero-insert merge
+            if (idmap or by_source or not t_set) and inserts.isEmpty():
+                inserts = None
+        if not touched and not dropped and inserts is None:
+            return None  # nothing matched AND nothing new
+        cons = self._constraints_at(base)
+        pt = (
+            (self._ROW_ID,)
+            if any(sp.get("hidden") for sp in idmap.values())
+            else ()
+        )
 
-                def _ins_only():
-                    with self._job_label("merge:insert"):
-                        fs = self._write_data_files(
-                            self._checked(
-                                inserts, self._constraints_at(base)
-                            ),
-                            pb,
-                            mapping,
+        def _build(scan_t, allocate):
+            cdf: list[DataFrame] = []
+            rewritten = None
+            if scan_t is not None:
+                kept = scan_t.join(src_keys, on=on, how="left_anti")
+                if by_source:
+                    # unmatched rows in touched files go — unless a
+                    # by-source condition spares them
+                    doomed = kept if bcond is None else kept.where(bcond)
+                    cdf.append(
+                        doomed.withColumn("_change_type", F.lit("delete"))
+                    )
+                    kept = None if bcond is None else kept.where(~bcond)
+                matched_t = scan_t.join(src_keys, on=on, how="left_semi")
+                parts = [kept]
+                if when_matched is None:
+                    # matched rows carried as-is (rewritten only because
+                    # their files lose doomed by-source rows)
+                    parts.append(matched_t)
+                else:
+                    # split the matched rows by the clause condition: the
+                    # clause applies to apply_pre (each target row —
+                    # Delta's whenMatchedUpdateAll multiplicity:
+                    # duplicate-key targets keep theirs), condition-false
+                    # rows carry. On a row-tracked table _row_id is in
+                    # the identity list, so updates keep the TARGET's id
+                    apply_pre, updated, carry = self._matched_split(
+                        matched_t, source, on, when_matched_condition,
+                        when_matched_set, self._generated_at(base),
+                        sorted(idmap),
+                    )
+                    if when_matched == "update":
+                        if when_matched_set is not None:
+                            # SET expressions can drift a column's type —
+                            # re-align so the rewritten files can't poison
+                            # later declared-schema scans (same rule as
+                            # update()'s assignments)
+                            updated, _ = self._align(
+                                updated, eff_schema, False, "merge",
+                                passthrough=pt,
+                            )
+                        parts.append(self._checked(updated, cons))
+                        cdf.append(
+                            apply_pre.withColumn(
+                                "_change_type", F.lit("update_preimage")
+                            )
                         )
-                        return fs, self._collect_stats(fs)
-
-                def _cdf_only():
-                    with self._job_label("merge:cdf"):
-                        return self._write_cdc_files(
-                            inserts.withColumn(
-                                "_change_type", F.lit("insert")
-                            ),
-                            mapping,
+                        # one postimage PER updated target row, pairing
+                        # the preimages (not one per source key)
+                        cdf.append(
+                            updated.withColumn(
+                                "_change_type", F.lit("update_postimage")
+                            )
                         )
+                    else:  # delete
+                        cdf.append(
+                            apply_pre.withColumn(
+                                "_change_type", F.lit("delete")
+                            )
+                        )
+                    parts.append(carry)
+                parts = [p for p in parts if p is not None]
+                if parts:
+                    rewritten = reduce(lambda a, b: a.unionByName(b), parts)
+            ins = None
+            if inserts is not None:
+                allocated = allocate(inserts)
+                ins = self._checked(allocated, cons)
+                cdf.append(
+                    allocated.withColumn("_change_type", F.lit("insert"))
+                )
+            if dropped:
+                # read once for the change feed only — these files are
+                # dropped from the snapshot by NAME, zero rewrite
+                cdf.append(
+                    self._dml_scan(base, dropped, evolved_schema).withColumn(
+                        "_change_type", F.lit("delete")
+                    )
+                )
+            return rewritten, cdf, ins
 
-                staged, cdc = self._overlapped(_ins_only, _cdf_only)
-                new_files, staged_stats = staged
-            finally:
-                for p in ins_pinned:
-                    p.unpersist()
-        known = self._stats_at(base)
-        return self._commit(
-            untouched + new_files,
+        params = {
+            "on": list(on),
+            "when_matched": when_matched,
+            "when_not_matched": when_not_matched,
+            "when_matched_condition": self._param_repr(
+                when_matched_condition
+            ),
+            "when_not_matched_condition": self._param_repr(
+                when_not_matched_condition
+            ),
+            "when_matched_set": self._param_repr(when_matched_set),
+        }
+        if by_source:
+            params["when_not_matched_by_source"] = "delete"
+            params["when_not_matched_by_source_condition"] = (
+                self._param_repr(when_not_matched_by_source_condition)
+            )
+        # new_files may legitimately be EMPTY (a by-source merge deleting
+        # everything, inserting nothing): the snapshot commits as
+        # files: [] and read() serves it from the log-recorded schema
+        return self._rewrite_commit(
             "merge",
             base,
-            cdc=cdc,
-            known_stats={
-                **{f: known[f] for f in untouched if f in known},
-                **staged_stats,
-            },
-            partition_by=pb,
-            # an EVOLVING merge records the new schema; its rows were
-            # aligned against the base's, so a concurrent schema change
-            # must abort it (enforced_schema), never be stomped. On a
-            # legacy log the base schema is the files' DERIVED schema
-            # (same fallback append enforces).
-            schema=evolved_schema,
-            enforced_schema=(
-                (self._schema_at(base) or self._derived_schema_json(base))
-                if evolved_schema is not None
-                else None
-            ),
-            mapping=mapping if evolved_schema is not None else None,
-            # identity: an inserting merge advances the watermark from
-            # its own new files' row counts (over-advance = gap, safe)
-            # and aborts if a concurrent commit moved the mark
-            identity=(idmap or None) if ins_pinned else None,
-            identity_allocated=bool(ins_pinned),
-            identity_stat_files=new_files if ins_pinned else None,
-            enforced_identity=(idmap or None) if ins_pinned else None,
+            touched,
+            untouched,
+            _build,
+            params=params,
             # a concurrent append whose files cannot intersect the source
             # key envelope cannot hold a matchable key: the matched/insert
             # split is unaffected, so the merge rebases over it (Delta's
-            # ConcurrentAppendException scope for MERGE)
-            rebase_on_appends=self._phys_triples(envelope, mapping),
-            params={
-                "on": list(on),
-                "when_matched": when_matched,
-                "when_not_matched": when_not_matched,
-                "when_matched_condition": self._param_repr(
-                    when_matched_condition
-                ),
-                "when_not_matched_condition": self._param_repr(
-                    when_not_matched_condition
-                ),
-                "when_matched_set": self._param_repr(when_matched_set),
-            },
+            # ConcurrentAppendException scope for MERGE). Not by-source:
+            # the appended rows would need a deletion it never saw
+            rebase_on_appends=(
+                None if by_source else self._phys_triples(envelope, mapping)
+            ),
+            evolved_schema=evolved_schema,
+            idmap=idmap,
+            # an inserting merge advances the watermark from ALL its new
+            # files' row counts (over-advance = gap, safe)
+            mark_counts_rewrites=True,
         )
 
     # -- read -----------------------------------------------------------
     _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "in", "isnull", "notnull")
-
-    def _merge_by_source_delete(
-        self,
-        source: DataFrame,
-        on: list[str],
-        when_matched: str | None,
-        when_not_matched: str | None,
-        base: int,
-        files: list[str],
-        pb: list[str],
-        src_keys: DataFrame,
-        cand_keys: DataFrame,
-        candidates: list[str],
-        mapping: dict[str, str],
-        when_matched_condition=None,
-        when_not_matched_condition=None,
-        when_not_matched_by_source_condition=None,
-        when_matched_set: dict[str, str] | None = None,
-        evolved_schema: dict | None = None,
-    ) -> int | None:
-        """MERGE with ``when_not_matched_by_source='delete'``: target
-        rows matching no source key are removed. Scale shape: files
-        outside the candidate set, or holding no key match, contain ONLY
-        doomed rows — they are dropped from the snapshot WHOLESALE
-        (scanned once for their CDF delete rows, never rewritten); only
-        key-matched files rewrite. A by-source CONDITION disables the
-        wholesale drop (an unmatched row now survives unless the
-        condition says otherwise, so every file is read and rewritten
-        keeping its condition-false rows). Commits with the
-        abort-on-anything conflict rule: the read set is the whole
-        table."""
-        sch = self._scan_schema(base)
-        idmap = self._identity_at(base)
-        tracked = any(sp.get("hidden") for sp in idmap.values())
-        pt = (self._ROW_ID,) if tracked else ()
-        if tracked:
-            # every target-side scan here feeds either a rewrite (ids
-            # must survive) or a CDF delete frame (ids name the doomed
-            # rows) — _row_id rides all of them
-            sch = self._with_row_id(sch)
-        dv = self._dv_at(base)
-        cons = self._constraints_at(base)
-        eff_schema = (
-            evolved_schema
-            if evolved_schema is not None
-            else self._schema_at(base)
-        )
-
-        def _to_eff(df: DataFrame) -> DataFrame:
-            # evolving merge: every target-side frame (rewrites AND the
-            # wholesale-drop CDF scans) null-fills the new columns so
-            # the downstream unions compose under one schema
-            if evolved_schema is None:
-                return df
-            return self._align(
-                df, evolved_schema, False, "merge", passthrough=pt
-            )[0]
-
-        bcond = (
-            self._as_condition(when_not_matched_by_source_condition)
-            if when_not_matched_by_source_condition is not None
-            else None
-        )
-        # key-matched files among the candidates (the only rewrites when
-        # the by-source clause is unconditional)
-        t_set: set[str] = set()
-        if candidates:
-            t_rows = (
-                self._scan_files(
-                    candidates, sch, dv, keep_identity=True,
-                    mapping=mapping, partition_by=pb,
-                )
-                .join(src_keys, on=on, how="left_semi")
-                .select(self._FILE_NAME)
-                .distinct()
-                .collect()
-            )
-            t_set = {r[self._FILE_NAME] for r in t_rows}
-        if bcond is not None:
-            # conditional by-source delete: no file holds ONLY doomed
-            # rows a priori — every file rewrites, keeping unmatched
-            # rows the condition spares
-            touched = list(files)
-            dropped_whole: list[str] = []
-        else:
-            touched = [f for f in files if os.path.basename(f) in t_set]
-            dropped_whole = [
-                f for f in files if os.path.basename(f) not in t_set
-            ]
-
-        def _inserts():
-            ins = source.join(cand_keys, on=on, how="left_anti")
-            if when_not_matched_condition is not None:
-                ins = ins.where(
-                    self._as_condition(when_not_matched_condition)
-                )
-            return ins
-
-        # idmap fetched once at the top (tracked derives from it)
-        ins_pinned: list[DataFrame] = []
-
-        def _allocated(ins: DataFrame) -> DataFrame:
-            # identity inserts allocate in-plan from the current mark
-            # (same contract as the plain merge path)
-            if not idmap:
-                return ins
-            p = ins.persist()
-            ins_pinned.append(p)
-            return self._with_identity_allocation(p, idmap)
-
-        new_files: list[str] = []
-        cdc_frames: list[DataFrame] = []
-        if touched:
-            scan_t = _to_eff(
-                self._scan_files(
-                    touched, sch, dv, mapping=mapping, partition_by=pb,
-                )
-            ).persist()
-            try:
-                matched_t = scan_t.join(src_keys, on=on, how="left_semi")
-                # by-source delete: unmatched rows in touched files go —
-                # unless a by-source condition spares them
-                unmatched_t = scan_t.join(src_keys, on=on, how="left_anti")
-                if bcond is not None:
-                    doomed_u = unmatched_t.where(bcond)
-                    carried_u = unmatched_t.where(~bcond)
-                else:
-                    doomed_u, carried_u = unmatched_t, None
-                cdc_frames.append(
-                    doomed_u.withColumn("_change_type", F.lit("delete"))
-                )
-                rewritten_frames: list[DataFrame] = []
-                if carried_u is not None:
-                    rewritten_frames.append(carried_u)
-                # split matched rows by the matched-clause condition:
-                # condition-false rows carry (each target row, dup-key
-                # multiplicity preserved — same rule as the plain path)
-                apply_pre, updated, carry_m = self._matched_split(
-                    matched_t, source, on, when_matched_condition,
-                    when_matched_set, self._generated_at(base),
-                    sorted(idmap),
-                )
-                if carry_m is not None:
-                    rewritten_frames.append(carry_m)
-                if when_matched == "update":
-                    if when_matched_set is not None:
-                        updated, _ = self._align(
-                            updated, eff_schema, False, "merge",
-                            passthrough=pt,
-                        )
-                    rewritten_frames.append(self._checked(updated, cons))
-                    cdc_frames.append(
-                        apply_pre.withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    cdc_frames.append(
-                        updated.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                elif when_matched == "delete":
-                    cdc_frames.append(
-                        apply_pre.withColumn(
-                            "_change_type", F.lit("delete")
-                        )
-                    )
-                else:  # None: matched rows carried as-is (but rewritten —
-                    # their files lose the doomed unmatched rows)
-                    rewritten_frames.append(matched_t)
-                if rewritten_frames:
-                    from functools import reduce as _reduce
-
-                    new_files += self._write_data_files(
-                        _reduce(
-                            lambda a, b: a.unionByName(b), rewritten_frames
-                        ),
-                        pb,
-                        mapping,
-                    )
-                if when_not_matched == "insert":
-                    raw_ins = _inserts()
-                    if not raw_ins.isEmpty():
-                        inserts = _allocated(raw_ins)
-                        new_files += self._write_data_files(
-                            self._checked(inserts, cons), pb, mapping
-                        )
-                        cdc_frames.append(
-                            inserts.withColumn(
-                                "_change_type", F.lit("insert")
-                            )
-                        )
-                if dropped_whole:
-                    # read once for the change feed only — these files
-                    # are dropped from the snapshot by NAME, zero rewrite
-                    cdc_frames.append(
-                        _to_eff(
-                            self._scan_files(
-                                dropped_whole, sch, dv, mapping=mapping,
-                                partition_by=pb,
-                            )
-                        ).withColumn("_change_type", F.lit("delete"))
-                    )
-                from functools import reduce
-
-                cdc = self._write_cdc_files(
-                    reduce(lambda a, b: a.unionByName(b), cdc_frames),
-                    mapping,
-                )
-            finally:
-                # unpersist on the error path too (same rule as the plain
-                # merge path): a failed write/CDF action must not leak the
-                # pinned insert frames for the session lifetime
-                scan_t.unpersist()
-                for p in ins_pinned:
-                    p.unpersist()
-        else:
-            # no key-matched file: the whole table is doomed rows
-            try:
-                if when_not_matched == "insert":
-                    raw_ins = _inserts()
-                    if not raw_ins.isEmpty():
-                        inserts = _allocated(raw_ins)
-                        new_files += self._write_data_files(
-                            self._checked(inserts, cons), pb, mapping
-                        )
-                        cdc_frames.append(
-                            inserts.withColumn(
-                                "_change_type", F.lit("insert")
-                            )
-                        )
-                if dropped_whole:
-                    cdc_frames.append(
-                        _to_eff(
-                            self._scan_files(
-                                dropped_whole, sch, dv, mapping=mapping,
-                                partition_by=pb,
-                            )
-                        ).withColumn("_change_type", F.lit("delete"))
-                    )
-                if not cdc_frames:
-                    return None  # empty table, nothing to insert
-                from functools import reduce
-
-                cdc = self._write_cdc_files(
-                    reduce(lambda a, b: a.unionByName(b), cdc_frames),
-                    mapping,
-                )
-            finally:
-                for p in ins_pinned:
-                    p.unpersist()  # write/CDF actions are materialized
-        # new_files may legitimately be EMPTY (everything deleted,
-        # nothing inserted): the snapshot commits as files: [] and
-        # read() serves it from the log-recorded schema
-        return self._commit(
-            new_files,
-            "merge",
-            base,
-            cdc=cdc,
-            partition_by=pb,
-            schema=evolved_schema,
-            enforced_schema=(
-                (self._schema_at(base) or self._derived_schema_json(base))
-                if evolved_schema is not None
-                else None
-            ),
-            mapping=mapping if evolved_schema is not None else None,
-            identity=(idmap or None) if ins_pinned else None,
-            identity_allocated=bool(ins_pinned),
-            identity_stat_files=new_files if ins_pinned else None,
-            enforced_identity=(idmap or None) if ins_pinned else None,
-            params={
-                "on": list(on),
-                "when_matched": when_matched,
-                "when_not_matched": when_not_matched,
-                "when_not_matched_by_source": "delete",
-                "when_matched_condition": self._param_repr(
-                    when_matched_condition
-                ),
-                "when_not_matched_condition": self._param_repr(
-                    when_not_matched_condition
-                ),
-                "when_not_matched_by_source_condition": self._param_repr(
-                    when_not_matched_by_source_condition
-                ),
-                "when_matched_set": self._param_repr(when_matched_set),
-            },
-        )
 
     @staticmethod
     def _file_may_match(

@@ -3903,6 +3903,73 @@ def test_merge_by_source_aborts_on_any_concurrent_commit(spark, tmp_path):
         vt.merge(src, ["id"], when_not_matched_by_source="delete")
 
 
+@pytest.mark.parametrize("by_source_condition", [None, "id > 10"])
+def test_merge_by_source_rejects_duplicate_source_keys(
+    spark, tmp_path, by_source_condition
+):
+    """The cardinality rule holds on the by-source path too: a source
+    with duplicate keys among matched rows raises before anything
+    commits — with an unconditional by-source clause (probe fused into
+    the touched-file discovery) and a conditional one (every file is
+    touched, so the probe runs alone)."""
+    from pyspark.sql import functions as F
+
+    vt = VersionedTable(spark, str(tmp_path / "mbd"))
+    vt.overwrite(spark.range(20).select("id", F.lit("t").alias("v")))
+    v_pre = vt.latest_version()
+    src = spark.createDataFrame(
+        [(3, "a"), (3, "b"), (7, "c")], "id: long, v: string"
+    )
+    with pytest.raises(VersionedTableError, match="duplicate keys"):
+        vt.merge(
+            src,
+            ["id"],
+            when_not_matched_by_source="delete",
+            when_not_matched_by_source_condition=by_source_condition,
+        )
+    assert vt.latest_version() == v_pre
+    assert sorted(r.id for r in vt.read().collect()) == list(range(20))
+
+
+@pytest.mark.parametrize(
+    "op", ["delete", "update", "replace_where", "merge", "merge_by_source"]
+)
+def test_dml_commit_stats_match_footers(spark, tmp_path, op):
+    """Every file a rewrite-style DML commit adds is recorded with the
+    stats its footer holds: the stats the staging threads collect are
+    exactly what _collect_stats reads back from the committed files."""
+    from pyspark.sql import functions as F
+
+    def rows(lo, hi, v):
+        return spark.range(lo, hi).select(
+            "id", (F.col("id") % 7).alias("g"), F.lit(v).alias("v")
+        )
+
+    vt = VersionedTable(spark, str(tmp_path / op))
+    # three files with disjoint key ranges: 0..49, 50..99, 100..149
+    vt.overwrite(rows(0, 50, "old"))
+    vt.append(rows(50, 100, "old"))
+    vt.append(rows(100, 150, "old"))
+    base = vt.latest_version()
+    src = rows(40, 60, "new").unionByName(rows(500, 505, "new"))
+    run = {
+        "delete": lambda: vt.delete("id BETWEEN 40 AND 60"),
+        "update": lambda: vt.update("id BETWEEN 40 AND 60", {"v": "'upd'"}),
+        "replace_where": lambda: vt.replace_where(
+            rows(40, 61, "new"), "id BETWEEN 40 AND 60"
+        ),
+        "merge": lambda: vt.merge(src, ["id"]),
+        "merge_by_source": lambda: vt.merge(
+            src, ["id"], when_not_matched_by_source="delete"
+        ),
+    }
+    v = run[op]()
+    added = sorted(set(vt._state(v)) - set(vt._state(base)))
+    assert added
+    recorded = vt._stats_at(v)
+    assert {f: recorded[f] for f in added} == vt._collect_stats(added)
+
+
 def test_compact_liveness_under_continuous_ingest(spark, tmp_path):
     """The OPTIMIZE-starvation scenario the file-level OCC exists for:
     an appender thread commits continuously while compact runs — the
