@@ -58,6 +58,7 @@ import os
 import re
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,6 +103,76 @@ INCREMENTAL_CHAIN_MAX = 9
 #: O(files) JSON parse in the log path. Small snapshots skip it: the
 #: manifest parse they would avoid is already trivial.
 SNAPSHOT_CHECKPOINT_MIN_FILES = 64
+
+
+class _OpPolicy(NamedTuple):
+    #: the op can remove or change a row: a ``vt.appendOnly`` table
+    #: refuses it at the commit gate (Delta's delta.appendOnly)
+    changes_rows: bool
+    #: False records ``data_change: false`` — the version re-packs the
+    #: same rows or changes only metadata, so incremental consumers skip
+    #: it instead of erroring into a full re-read
+    data_change: bool
+    #: a concurrent commit is no conflict: an append delta composes with
+    #: any winner by construction, an overwrite is whole-table
+    #: last-writer-wins. Every other op was computed against its base
+    #: snapshot and aborts (past the rebase over concurrent pure appends
+    #: that ``rebase_on_appends`` allows)
+    composes: bool
+
+
+_CHANGES_ROWS = _OpPolicy(True, True, False)
+_NO_DATA_CHANGE = _OpPolicy(False, False, False)
+
+#: THE per-op commit policy: every op that commits has exactly one row.
+_OP_POLICY: dict[str, _OpPolicy] = {
+    "append": _OpPolicy(False, True, True),
+    "overwrite": _OpPolicy(True, True, True),
+    **dict.fromkeys(
+        (
+            "delete",
+            "update",
+            "merge",
+            "replace",
+            "replace_where",
+            "overwrite_partitions",
+            "restore",
+        ),
+        _CHANGES_ROWS,
+    ),
+    # clone/convert: the target-must-be-empty pre-check is TOCTOU; a
+    # collision means another writer beat us to the fresh log, and
+    # publishing on top would silently replace their content
+    "clone": _OpPolicy(False, True, False),
+    "convert": _OpPolicy(False, True, False),
+    # compact and the row-tracking backfill rewrite the SAME rows (the
+    # backfill only materializes the hidden id column) from a snapshot
+    # a last-writer-wins commit would make stale; metadata-only DDL was
+    # validated against its base (a drop's not-found check included)
+    **dict.fromkeys(
+        (
+            "compact",
+            "enable_row_tracking",
+            "set_properties",
+            "unset_properties",
+            "add_constraint",
+            "drop_constraint",
+            "add_column",
+            "add_generated_column",
+            "add_identity_column",
+            "drop_column",
+            "widen_column",
+            "rename_column",
+        ),
+        _NO_DATA_CHANGE,
+    ),
+}
+
+#: table properties every full snapshot carries forward unless the
+#: commit sets them (restore passes its source version's maps,
+#: overwrite_schema resets the generated map): the ``_walk_to`` keys a
+#: snapshot or checkpoint must record so the walk terminates on them.
+_CARRIED = ("constraints", "properties", "generated", "identity")
 
 
 def _layout_only(manifest: dict) -> bool:
@@ -874,8 +945,9 @@ class VersionedTable:
         if not files:
             # empty snapshot: metadata-only enablement (the spec + flag);
             # the first insert allocates from the mark
-            return self._commit_metadata(
-                base, "enable_row_tracking", identity=new_idmap
+            return self._commit(
+                None, "enable_row_tracking", base, new_files=[],
+                identity=new_idmap,
             )
         # backfill: one rewrite of the SCOPED files materializing ids
         # for their rows (ids that already exist — a re-enable after a
@@ -928,7 +1000,7 @@ class VersionedTable:
             partition_by=pb,
             known_stats=carry_stats,
             identity=new_idmap,
-            identity_allocated=True,
+            identity_files=carry_files + new_files,
             enforced_identity=idmap or None,
             mapping=write_mapping if phys_clash else None,
             params={
@@ -1455,8 +1527,8 @@ class VersionedTable:
                     f"{key} names unknown columns {missing}; "
                     f"table columns: {sorted(have)}"
                 )
-        return self._commit_metadata(
-            base, "set_properties", properties=merged
+        return self._commit(
+            None, "set_properties", base, new_files=[], properties=merged
         )
 
     def unset_properties(self, keys: list[str]) -> int:
@@ -1468,8 +1540,8 @@ class VersionedTable:
         merged = self._properties_at(base)
         for k in keys:
             merged.pop(k, None)
-        return self._commit_metadata(
-            base, "unset_properties", properties=merged
+        return self._commit(
+            None, "unset_properties", base, new_files=[], properties=merged
         )
 
     @classmethod
@@ -1580,7 +1652,9 @@ class VersionedTable:
                 f"CHECK ({expr})"
             )
         cons[name] = expr
-        return self._commit_metadata(base, "add_constraint", cons)
+        return self._commit(
+            None, "add_constraint", base, new_files=[], constraints=cons
+        )
 
     def drop_constraint(self, name: str) -> int:
         base = self.latest_version()
@@ -1592,7 +1666,9 @@ class VersionedTable:
                 f"no constraint {name!r}; have {sorted(cons)}"
             )
         del cons[name]
-        return self._commit_metadata(base, "drop_constraint", cons)
+        return self._commit(
+            None, "drop_constraint", base, new_files=[], constraints=cons
+        )
 
     # -- column DDL (metadata-only, enabled by the log-recorded schema) --
     def _recorded_schema_for_ddl(self, base: int, op: str) -> "T.StructType":
@@ -1655,8 +1731,9 @@ class VersionedTable:
             # column and the new column reads NULL from them
             mapping = {**mapping, name: f"col-{uuid.uuid4().hex[:12]}"}
         evolved = T.StructType([*sch.fields, T.StructField(name, dt, True)])
-        return self._commit_metadata(
-            base, "add_column", schema=evolved.jsonValue(),
+        return self._commit(
+            None, "add_column", base, new_files=[],
+            schema=evolved.jsonValue(),
             dropped=tombstones, mapping=mapping,
         )
 
@@ -1750,9 +1827,11 @@ class VersionedTable:
                 f"derive from allocated values"
             )
         evolved = T.StructType([*sch.fields, T.StructField(name, dt, True)])
-        return self._commit_metadata(
-            base,
+        return self._commit(
+            None,
             "add_generated_column",
+            base,
+            new_files=[],
             schema=evolved.jsonValue(),
             dropped=self._dropped_at(base),
             mapping=self._mapping_at(base),
@@ -1824,9 +1903,11 @@ class VersionedTable:
         evolved = T.StructType(
             [*sch.fields, T.StructField(name, T.LongType(), True)]
         )
-        return self._commit_metadata(
-            base,
+        return self._commit(
+            None,
             "add_identity_column",
+            base,
+            new_files=[],
             schema=evolved.jsonValue(),
             dropped=self._dropped_at(base),
             mapping=self._mapping_at(base),
@@ -1974,9 +2055,11 @@ class VersionedTable:
         )
         phys = self._physical(mapping, actual)
         mapping = {k: v for k, v in mapping.items() if k != actual}
-        return self._commit_metadata(
-            base,
+        return self._commit(
+            None,
             "drop_column",
+            base,
+            new_files=[],
             schema=T.StructType(keep).jsonValue(),
             dropped=[*self._dropped_at(base), phys],
             mapping=mapping,
@@ -2027,9 +2110,11 @@ class VersionedTable:
                 f"(overwrite(..., overwrite_schema=True))"
             )
         fields[i] = T.StructField(fields[i].name, dt, True)
-        return self._commit_metadata(
-            base,
+        return self._commit(
+            None,
             "widen_column",
+            base,
+            new_files=[],
             schema=T.StructType(fields).jsonValue(),
             dropped=self._dropped_at(base),
             mapping=self._mapping_at(base),
@@ -2132,94 +2217,15 @@ class VersionedTable:
         if new != phys:
             mapping[new] = phys
         fields[i] = T.StructField(new, fields[i].dataType, True)
-        return self._commit_metadata(
-            base,
+        return self._commit(
+            None,
             "rename_column",
+            base,
+            new_files=[],
             schema=T.StructType(fields).jsonValue(),
             dropped=tombstones,
             mapping=mapping,
         )
-
-    def _commit_metadata(
-        self,
-        base: int,
-        op: str,
-        constraints: dict[str, str] | None = None,
-        schema: dict | None = None,
-        dropped: list[str] | None = None,
-        mapping: dict[str, str] | None = None,
-        generated: dict[str, str] | None = None,
-        identity: dict[str, dict] | None = None,
-        properties: dict[str, str] | None = None,
-    ) -> int:
-        """Metadata-only commit: a delta manifest with an empty ``add``
-        (state unchanged, O(1) size) carrying the full constraint map
-        and/or the full schema (+ tombstones), plus ``data_change:
-        false`` so incremental consumers skip it. A key that is absent
-        simply doesn't interrupt that property's log walk — the previous
-        value stays in effect."""
-        latest = self.latest_version()
-        version = base + 1
-        manifest = {
-            "version": version,
-            "op": op,
-            "add": [],
-            "stats": {},
-            "data_change": False,
-            "base": base,
-            "ts": time.time(),
-        }
-        if constraints is not None:
-            manifest["constraints"] = constraints
-        if generated is not None:
-            manifest["generated"] = generated
-        if identity is not None:
-            manifest["identity"] = identity
-        if properties is not None:
-            manifest["properties"] = properties
-        if schema is not None:
-            manifest["schema"] = schema
-            manifest["dropped_columns"] = (
-                dropped if dropped is not None else self._dropped_at(base)
-            )
-            manifest["column_mapping"] = (
-                mapping if mapping is not None else self._mapping_at(base)
-            )
-        # feature flags introduced by DDL: a rename turns on column
-        # mapping, a widen turns on type widening — recorded the first
-        # time each is committed, so a pre-feature reader fails fast
-        # instead of misreading physical names / narrow files
-        feats = set(self._features_at(base))
-        if manifest.get("column_mapping"):
-            feats.add("column-mapping")
-        if op == "widen_column":
-            feats.add("type-widening")
-        if manifest.get("generated"):
-            # a pre-feature writer would append without computing or
-            # validating the generated columns — silently breaking the
-            # invariant; the flag makes it fail fast instead
-            feats.add("generated-columns")
-        if manifest.get("identity"):
-            # a pre-feature writer appending without allocating (or
-            # advancing the watermark) would write NULL ids / collide
-            feats.add("identity-columns")
-            if any(
-                isinstance(sp, dict) and sp.get("hidden")
-                for sp in manifest["identity"].values()
-            ):
-                # row tracking: a pre-feature DML rewrite would silently
-                # drop the hidden _row_id column from rewritten files
-                feats.add("row-tracking")
-        if feats:
-            manifest["features"] = sorted(feats)
-        if latest != base or not self._publish_manifest(version, manifest):
-            # any concurrent commit makes the ADD-time validation (and a
-            # drop's not-found check) stale — no silent retry
-            raise VersionedTableError(
-                f"concurrent commit advanced the log past base {base}; "
-                f"re-run the {op}"
-            )
-        return version
 
     def _stats_at(self, version: int) -> dict[str, dict]:
         """File → column-bounds map at ``version``: same walk as _state,
@@ -2334,22 +2340,14 @@ class VersionedTable:
             "version": version,
             "txns": self._txns_at(version),
             "partition_by": self._partition_by_at(version),
-            "constraints": self._constraints_at(version),
         }
-        props = self._properties_at(version)
-        if props:
-            meta["properties"] = props
-        gen = self._generated_at(version)
-        if gen:
-            meta["generated"] = gen
-        idm = self._identity_at(version)
-        if idm:
-            meta["identity"] = idm
-        sch, drp = self._schema_record_at(version)
-        if sch is not None:
-            meta["schema"] = sch
-            meta["dropped_columns"] = drp
-            meta["column_mapping"] = self._mapping_at(version)
+        for key in _CARRIED:
+            val, _ = self._walk_to(version, key)
+            if val:
+                meta[key] = val
+        meta.update(
+            self._schema_entries(version, *self._schema_record_at(version))
+        )
         feats = self._features_at(version)
         if feats:
             # the walk terminates at checkpoints: the protocol fence
@@ -2517,6 +2515,70 @@ class VersionedTable:
                     stats[f] = st
         return added, stats
 
+    def _schema_entries(
+        self,
+        version: int | None,
+        schema: dict | None,
+        dropped: list[str] | None = None,
+        mapping: dict[str, str] | None = None,
+    ) -> dict:
+        """The schema record a manifest or checkpoint carries ({} without
+        a schema): the schema with its dropped-column tombstones and its
+        column mapping beside it, parts not given carried from
+        ``version``. All three terminate the same walk, so the mapping
+        rides every schema-carrying record, even empty — one without it
+        would end the mapping walk early and resurrect a stale (or lose a
+        live) mapping."""
+        if schema is None:
+            return {}
+        if dropped is None:
+            dropped = [] if version is None else self._dropped_at(version)
+        if mapping is None:
+            mapping = {} if version is None else self._mapping_at(version)
+        return {
+            "schema": schema,
+            "dropped_columns": dropped,
+            "column_mapping": mapping,
+        }
+
+    def _manifest_features(
+        self, version: int | None, op: str, manifest: dict
+    ) -> list[str]:
+        """The feature flags a manifest records: the set in force at
+        ``version`` (monotone — Delta's protocol never downgrades) plus
+        what THIS commit introduces, so a pre-feature reader or writer
+        fails fast by name instead of misreading the table."""
+        feats = set(
+            self._features_at(version) if version is not None else ()
+        )
+        if manifest.get("column_mapping"):
+            # files store physical names that differ from the logical ones
+            feats.add("column-mapping")
+        if op == "widen_column":
+            # older files hold narrower types than the recorded schema
+            feats.add("type-widening")
+        if manifest.get("generated"):
+            # a pre-feature writer would append without computing or
+            # validating the generated columns — silently breaking the
+            # invariant
+            feats.add("generated-columns")
+        idm = manifest.get("identity") or {}
+        if idm:
+            # a pre-feature writer would neither allocate nor advance
+            # the watermark: NULL or colliding ids
+            feats.add("identity-columns")
+        if any(
+            isinstance(sp, dict) and sp.get("hidden") for sp in idm.values()
+        ):
+            # a pre-feature DML rewrite would silently DROP the hidden
+            # _row_id column from rewritten files
+            feats.add("row-tracking")
+        if any(os.path.isabs(f) for f in manifest.get("files", ())):
+            feats.add("external-files")  # a clone references its source
+        if manifest.get("dv"):
+            feats.add("deletion-vectors")
+        return sorted(feats)
+
     def _commit(
         self,
         files: list[str] | None,
@@ -2540,20 +2602,26 @@ class VersionedTable:
         params: dict | None = None,
         generated: dict[str, str] | None = None,
         identity: dict[str, dict] | None = None,
-        identity_allocated: bool = False,
-        identity_stat_files: list[str] | None = None,
+        identity_files: list[str] | None = None,
         enforced_identity: dict[str, dict] | None = None,
     ) -> int | None:
-        """Atomic commit via O_EXCL manifest create with Delta-style
-        conflict resolution on version collision. An *append* manifest is
-        a DELTA — it records only ``new_files`` under ``add`` — so commit
-        cost is O(new files) regardless of table size, and losing the
-        race needs no rebase: the delta composes with any winner's state
-        by construction (no full list is rewritten, so a concurrent
-        winner's files cannot be dropped). A *replace* (merge) fails on
-        collision — its kept/updated row split was computed against a
-        now-stale snapshot and must be re-run; an *overwrite* is
-        whole-table last-writer-wins and retries as-is.
+        """The one code path that writes a manifest: every commit, data
+        or metadata, is an atomic O_EXCL manifest create with Delta-style
+        conflict resolution on version collision, per the op's
+        _OP_POLICY row.
+
+        Two manifest shapes. Given only ``new_files`` (``files`` None)
+        the commit is a DELTA: ``add`` lists the new files and the
+        manifest records only the metadata the caller passed (an
+        append's evolved schema or advanced identity mark; a DDL's full
+        new map over an empty ``add``). Its cost is O(new files)
+        regardless of table size, a key it does not record leaves that
+        property's walk untouched, and losing the race needs no rebase:
+        no full list is rewritten, so a concurrent winner's files cannot
+        be dropped. Given ``files`` the commit is a full SNAPSHOT that
+        resets the state and carries every table property the caller did
+        not set (_CARRIED, the schema record, the kept files' deletion
+        vectors, the feature flags). Version 0 is always a snapshot.
 
         ``cdc``: change-data file names (under ``_cdc/``) recorded on
         row-level DML commits (delete/update/merge) — Delta's CDF
@@ -2561,6 +2629,10 @@ class VersionedTable:
         for files this commit KEEPS (the untouched side of a file-pruned
         DML rewrite) — footers are re-read only for files not covered, so
         a delete touching 3 of 10^6 files collects 3 footers, not 10^6.
+
+        ``identity_files``: the files holding the rows an identity
+        allocation numbered; their footer ``#rows`` advance the
+        ``identity`` high-water mark.
 
         ``enforced_partition_by``: the hive layout the commit's files
         were STAGED under (appends pass it) — a rebase past a concurrent
@@ -2580,26 +2652,24 @@ class VersionedTable:
         the predicate the op was computed against (Delta's
         ConcurrentAppendException check for DELETE/UPDATE/MERGE); any
         possibly-matching file, missing stats, or non-append concurrent
-        commit aborts as before. ``None`` = the original
-        abort-on-anything rule."""
+        commit aborts as before. ``None`` = the op's policy row decides."""
+        policy = _OP_POLICY[op]
         os.makedirs(self.log_dir, exist_ok=True)
         # per-file min/max from the footers just written (Delta's add-file
         # stats) — computed once; a commit-race retry reuses them
-        stat_files = list(new_files or []) if op == "append" else list(files or [])
+        stat_files = list(new_files or []) if files is None else list(files)
         known = known_stats or {}
         stats = self._collect_stats([f for f in stat_files if f not in known])
         stats.update({f: known[f] for f in stat_files if f in known})
-        if identity_allocated and identity:
+        if identity and identity_files is not None:
             # advance the high-water mark from the footer #rows ALREADY
-            # collected — no extra job, no driver-side row counting.
-            # Over-advancing is fine (rows the allocation never touched
-            # — a merge's rewrites — only widen a gap; identity is
-            # gap-tolerant by contract); under-advancing never happens
-            # because the allocation covered at most these rows.
+            # collected — no extra job, no driver-side row counting. The
+            # files hold every row the allocation numbered, so the mark
+            # never falls behind an allocated id; counting rows it did
+            # not number only widens a gap (identity is gap-tolerant by
+            # contract)
             n = sum(
-                int(stats[f]["#rows"])
-                for f in (identity_stat_files or stat_files)
-                if f in stats
+                int(stats[f]["#rows"]) for f in identity_files if f in stats
             )
             identity = {
                 c: {
@@ -2613,6 +2683,9 @@ class VersionedTable:
                 }
                 for c, sp in identity.items()
             }
+        given = dict(
+            zip(_CARRIED, (constraints, properties, generated, identity))
+        )
         for _ in range(50):
             latest = self.latest_version()
             if latest is not None:
@@ -2621,22 +2694,11 @@ class VersionedTable:
                 # here — committing on top of an ununderstood feature
                 # could violate invariants that feature maintains
                 self._check_features(latest)
-                if op in (
-                    "delete",
-                    "update",
-                    "merge",
-                    "overwrite",
-                    "replace",
-                    "replace_where",
-                    "overwrite_partitions",
-                    "restore",
-                ) and self._properties_at(latest).get(
+                if policy.changes_rows and self._properties_at(latest).get(
                     "vt.appendOnly"
                 ) == "true":
-                    # Delta's delta.appendOnly: the audit-table switch.
-                    # Appends, compaction (same rows) and metadata stay
-                    # allowed; anything that can remove or change a row
-                    # is refused AT COMMIT so no write beats the gate
+                    # Delta's delta.appendOnly: the audit-table switch,
+                    # refused AT COMMIT so no write beats the gate
                     raise VersionedTableError(
                         f"table at {self.path} is append-only "
                         f"(vt.appendOnly=true); {op} would remove or "
@@ -2710,11 +2772,7 @@ class VersionedTable:
                         f"{self._partition_by_at(latest)}); re-run the "
                         f"{op} against the new layout"
                     )
-                if (
-                    rebase_on_appends is not None
-                    and op
-                    in ("compact", "delete", "update", "merge", "replace_where")
-                ):
+                if rebase_on_appends is not None:
                     # file-level conflict resolution: compose with
                     # concurrent pure appends (raises on anything else,
                     # or on an append that may match the read predicate)
@@ -2733,277 +2791,120 @@ class VersionedTable:
                     stats.update(add_stats)
                     base_version = latest
                     continue  # re-enter with the rebased state
-                if op in (
-                    "replace",
-                    "compact",
-                    "delete",
-                    "update",
-                    "merge",
-                    "restore",
-                    "overwrite_partitions",
-                    "replace_where",
-                    # clone/convert: the target-must-be-empty pre-check
-                    # is TOCTOU; a collision here means another writer
-                    # beat us to the fresh log — publishing on top would
-                    # silently replace their content
-                    "clone",
-                    "convert",
-                    # the backfill rewrote a now-stale snapshot; a
-                    # last-writer-wins commit would drop the winner's rows
-                    "enable_row_tracking",
-                ):
+                if not policy.composes:
                     raise VersionedTableError(
                         f"concurrent commit advanced the log to {latest} past "
                         f"base {base_version}; {op} was computed against a "
                         f"stale snapshot — re-run the {op}"
                     )
-                # append: the delta needs no rebase; overwrite: whole-table
-                # last-writer-wins; both just take the next version number
                 base_version = latest
             version = (latest + 1) if latest is not None else 0
-            if op == "append" and version > 0:
-                manifest = {
-                    "version": version,
-                    "op": op,
-                    "add": list(new_files or []),
-                    "stats": stats,
-                    "base": base_version,
-                    "ts": time.time(),
-                }
+            manifest: dict = {"version": version, "op": op}
+            sch, drp = schema, dropped
+            if files is None and version > 0:
+                manifest.update(
+                    add=list(new_files or []),
+                    stats=stats,
+                    base=base_version,
+                    ts=time.time(),
+                )
                 if txn is not None:
                     manifest["txn"] = [txn[0], txn[1]]
-                flt = {
-                    f: self._pending_filters[f]
-                    for f in (new_files or [])
-                    if f in self._pending_filters
-                }
-                if flt:
-                    # bloom-filter sidecar refs ride the delta exactly
-                    # like stats (see _filters_at)
-                    manifest["filters"] = flt
-                if identity is not None:
-                    # an allocating append records the FULL updated spec
-                    # map — the identity walk terminates here, so the
-                    # advanced high-water mark is what the next
-                    # allocation reads
-                    manifest["identity"] = identity
-                if params:
-                    # Delta's operationParameters (audit trail)
-                    manifest["params"] = params
-                if schema is not None:
-                    # recorded only when the append EVOLVED the schema
-                    # (or first-recorded it on a legacy log) — delta
-                    # manifests stay O(new files) otherwise. A manifest
-                    # carrying "schema" always carries the tombstones
-                    # AND the column mapping alongside (all three
-                    # terminate the same walk)
-                    manifest["schema"] = schema
-                    manifest["dropped_columns"] = (
-                        dropped
-                        if dropped is not None
-                        else (
-                            self._dropped_at(base_version)
-                            if base_version is not None
-                            else []
-                        )
-                    )
-                    manifest["column_mapping"] = (
-                        mapping
-                        if mapping is not None
-                        else (
-                            self._mapping_at(base_version)
-                            if base_version is not None
-                            else {}
-                        )
-                    )
-            else:
-                # overwrite/replace reset the state — full snapshot; an
-                # append creating the table (version 0) is one too
-                if files is None:
-                    files = list(new_files or [])
-                txns = (
-                    self._txns_at(latest) if latest is not None else {}
+                manifest.update(
+                    {k: v for k, v in given.items() if v is not None}
                 )
+            else:
+                snap = files if files is not None else list(new_files or [])
+                txns = self._txns_at(latest) if latest is not None else {}
                 if txn is not None and txn[1] > txns.get(txn[0], -1):
                     txns[txn[0]] = txn[1]
-                cons = constraints
-                if cons is None:
-                    cons = (
-                        self._constraints_at(latest)
-                        if latest is not None
-                        else {}
-                    )
-                manifest = {
-                    "version": version,
-                    "op": op,
-                    "files": files,
-                    "stats": stats,
-                    "txns": txns,
-                    "base": base_version,
-                    "ts": time.time(),
-                }
+                manifest.update(
+                    files=snap,
+                    stats=stats,
+                    txns=txns,
+                    base=base_version,
+                    ts=time.time(),
+                )
                 if partition_by:
                     # Delta's metaData action: the snapshot's layout
                     manifest["partition_by"] = list(partition_by)
-                if op in ("compact", "enable_row_tracking"):
-                    # Delta's OPTIMIZE flag: same rows, new packing (the
-                    # row-tracking backfill rewrites the same rows too,
-                    # only materializing the hidden id column) —
-                    # incremental consumers skip this version wholesale
-                    # instead of erroring into a full re-read
-                    manifest["data_change"] = False
-                if cdc:
-                    # row-level change files (Delta CDF add-cdc-file):
-                    # what changed, readable without diffing snapshots
-                    manifest["cdc"] = list(cdc)
-                if self._pending_filters or os.path.isdir(
-                    os.path.join(self.path, "_filters")
-                ):
-                    # bloom-filter refs: fresh files take their pending
-                    # sidecar, kept files carry theirs forward (the
-                    # known_stats shape); guarded by the directory probe
-                    # so tables without the index pay nothing here
-                    carried_flt = (
-                        self._filters_at(latest)
-                        if latest is not None
-                        else {}
-                    )
-                    flt = {}
-                    for f in files:
-                        if f in self._pending_filters:
-                            flt[f] = self._pending_filters[f]
-                        elif f in carried_flt:
-                            flt[f] = carried_flt[f]
-                    if flt:
-                        manifest["filters"] = flt
-                if params:
-                    # Delta's operationParameters (audit trail)
-                    manifest["params"] = params
-                if cons:
-                    # constraints survive snapshot resets (table property)
-                    manifest["constraints"] = cons
-                props = properties
-                if props is None:
-                    # TBLPROPERTIES survive snapshot resets the same way
-                    props = (
-                        self._properties_at(latest)
-                        if latest is not None
-                        else {}
-                    )
-                if props:
-                    manifest["properties"] = props
-                gen = generated
-                if gen is None:
-                    # generated-column map survives snapshot resets the
-                    # same way (overwrite_schema passes {} to reset it
-                    # with the schema it described)
-                    gen = (
-                        self._generated_at(latest)
-                        if latest is not None
-                        else {}
-                    )
-                if gen:
-                    manifest["generated"] = gen
-                idm = identity
-                if idm is None:
-                    # identity specs + high-water mark survive snapshot
-                    # resets; a restore keeps the LATEST mark (rolling
-                    # the mark back could re-allocate ids still live in
-                    # retained history)
-                    idm = (
-                        self._identity_at(latest)
-                        if latest is not None
-                        else {}
-                    )
-                if idm:
-                    manifest["identity"] = idm
-                sch, drp, mp = schema, dropped, mapping
+                for key, val in given.items():
+                    if val is None and latest is not None:
+                        val, _ = self._walk_to(latest, key)
+                    if val:
+                        manifest[key] = val
                 if sch is None and latest is not None:
-                    # carry the recorded schema across snapshot resets
-                    # whose frame was scanned FROM the table (compact,
-                    # delete/update/merge rewrites, replace) — restore
-                    # passes its source version's schema explicitly
+                    # the frame was scanned FROM the table (compact, DML
+                    # rewrites, replace): its recorded schema carries
                     sch, carried = self._schema_record_at(latest)
                     if drp is None:
                         drp = carried
-                if sch is not None:
-                    manifest["schema"] = sch
-                    manifest["dropped_columns"] = (
-                        drp
-                        if drp is not None
-                        else (
-                            self._dropped_at(latest)
-                            if latest is not None
-                            else []
-                        )
-                    )
-                    # the mapping MUST ride every schema-carrying
-                    # manifest (even empty): a snapshot reset that
-                    # dropped it would terminate the mapping walk early
-                    # and resurrect a stale (or lose a live) mapping
-                    manifest["column_mapping"] = (
-                        mp
-                        if mp is not None
-                        else (
-                            self._mapping_at(latest)
-                            if latest is not None
-                            else {}
-                        )
-                    )
-                # feature flags: carry the base's set (monotone) and add
-                # what THIS commit introduces — deletion vectors, column
-                # mapping, external absolute references (clone). Embedded
-                # in every full-snapshot manifest so the walk never loses
-                # them across a rewrite (same rule as constraints).
-                feats = set(
-                    self._features_at(latest) if latest is not None else ()
-                )
-                if manifest.get("column_mapping"):
-                    feats.add("column-mapping")
-                if manifest.get("generated"):
-                    # a pre-feature writer would append without computing
-                    # or validating the generated columns — silently
-                    # breaking the invariant; the flag fails it fast
-                    feats.add("generated-columns")
-                if manifest.get("identity"):
-                    # same fail-fast rule: a pre-feature writer would
-                    # neither allocate nor advance the watermark
-                    feats.add("identity-columns")
-                    if any(
-                        isinstance(sp, dict) and sp.get("hidden")
-                        for sp in manifest["identity"].values()
-                    ):
-                        # a pre-feature DML rewrite would silently DROP
-                        # the hidden _row_id column from rewritten files
-                        feats.add("row-tracking")
-                if any(os.path.isabs(f) for f in files):
-                    feats.add("external-files")
                 live_dv = dv
                 if live_dv is None and latest is not None:
-                    # carry deletion vectors forward, restricted to files
-                    # still in THIS snapshot: an entry for a rewritten or
-                    # dropped file dies with the file (universally
-                    # correct — overwrite/compact reset to {}, partial
-                    # rewrites keep exactly the untouched files' entries)
+                    # deletion vectors carry restricted to files still in
+                    # THIS snapshot: an entry for a rewritten or dropped
+                    # file dies with the file (overwrite/compact reset to
+                    # {}, partial rewrites keep the untouched files')
+                    keep = set(snap)
                     live_dv = {
                         f: e
                         for f, e in self._dv_at(latest).items()
-                        if f in set(files)
+                        if f in keep
                     }
                 if live_dv:
                     manifest["dv"] = live_dv
-                    feats.add("deletion-vectors")
+            manifest.update(self._schema_entries(latest, sch, drp, mapping))
+            if not policy.data_change:
+                manifest["data_change"] = False
+            if cdc:
+                # row-level change files (Delta CDF add-cdc-file):
+                # what changed, readable without diffing snapshots
+                manifest["cdc"] = list(cdc)
+            if params:
+                # Delta's operationParameters (audit trail)
+                manifest["params"] = params
+            # bloom-filter sidecar refs ride the manifest like stats (see
+            # _filters_at): fresh files take their pending sidecar, a
+            # snapshot's kept files carry theirs — guarded by the
+            # directory probe so tables without the index pay nothing
+            carried_flt = (
+                self._filters_at(latest)
+                if "files" in manifest
+                and latest is not None
+                and (
+                    self._pending_filters
+                    or os.path.isdir(os.path.join(self.path, "_filters"))
+                )
+                else {}
+            )
+            flt = {
+                f: self._pending_filters.get(f, carried_flt.get(f))
+                for f in manifest.get("files", manifest.get("add"))
+                if f in self._pending_filters or f in carried_flt
+            }
+            if flt:
+                manifest["filters"] = flt
+            if "files" in manifest or not policy.data_change:
+                # feature flags ride every snapshot (the walk never loses
+                # them across a rewrite) and every metadata delta (the
+                # commits that introduce them); a data delta cannot
+                # introduce one
+                feats = self._manifest_features(latest, op, manifest)
                 if feats:
-                    manifest["features"] = sorted(feats)
+                    manifest["features"] = feats
             if not self._publish_manifest(version, manifest):
                 continue  # lost the commit race; loop re-reads the log
             self._pending_filters = {}
-            if op == "append" and version > 0 and version % self._checkpoint_interval(version) == 0:
-                # bound future readers' delta replay. Best-effort AFTER
-                # the commit point: the append IS committed, so a failure
-                # here (disk full, concurrent vacuum racing the manifest
-                # walk) must not surface as a failed append — a caller
-                # retrying a "failed" append would duplicate rows.
+            if (
+                "add" in manifest
+                and version % self._checkpoint_interval(version) == 0
+            ):
+                # bound future readers' delta replay — every delta counts
+                # toward the cadence, metadata deltas included. Best-effort
+                # AFTER the commit point: the commit IS published, so a
+                # failure here (disk full, concurrent vacuum racing the
+                # manifest walk) must not surface as a failed commit — a
+                # caller retrying a "failed" append would duplicate rows.
                 try:
                     self._write_checkpoint(version)
                 except Exception:  # noqa: BLE001 - readers replay deltas instead
@@ -3019,7 +2920,7 @@ class VersionedTable:
                 # property walk / checkpoint write terminates at the
                 # parquet footer instead of parsing this O(files) JSON
                 # manifest again. Best-effort for the same reason as the
-                # append cadence above.
+                # delta cadence above.
                 mf_path = os.path.join(self.log_dir, f"{version:08d}.json")
                 self._mf_cache[mf_path] = manifest
                 try:
@@ -3718,7 +3619,7 @@ class VersionedTable:
             # concurrent re-layout overwrite must fail, not mix layouts
             enforced_partition_by=pb,
             identity=idmap or None,
-            identity_allocated=bool(idmap),
+            identity_files=new_files,
             enforced_identity=idmap or None,
         )
         if v is None:
@@ -3969,7 +3870,7 @@ class VersionedTable:
             # overwrite_schema resets user identity specs but KEEPS the
             # hidden row-tracking spec (idmap is hidden-only there)
             identity=(idmap if overwrite_schema else (idmap or None)),
-            identity_allocated=bool(idmap),
+            identity_files=new_files,
             enforced_identity=idmap or None,
         )
 
@@ -4066,8 +3967,7 @@ class VersionedTable:
             schema=new_schema if schema_evolved else None,
             enforced_schema=stored,
             identity=(idmap or None) if hidden_ids else None,
-            identity_allocated=bool(hidden_ids),
-            identity_stat_files=new_files if hidden_ids else None,
+            identity_files=new_files,
             enforced_identity=(idmap or None) if hidden_ids else None,
         )
 
@@ -4271,7 +4171,7 @@ class VersionedTable:
             # the allocation covered only incoming rows; counting every
             # written row over-advances the mark, which is gap-safe
             identity=(idmap or None) if hidden else None,
-            identity_allocated=bool(hidden),
+            identity_files=new_files,
             enforced_identity=(idmap or None) if hidden else None,
         )
 
@@ -4601,7 +4501,6 @@ class VersionedTable:
         rebase_on_appends: list | None = None,
         evolved_schema: dict | None = None,
         idmap: dict | None = None,
-        mark_counts_rewrites: bool = False,
         insert_cdf_schema: "T.StructType | None" = None,
         **commit_kw,
     ) -> int | None:
@@ -4616,16 +4515,20 @@ class VersionedTable:
         insert)``: the rows replacing the touched files (None: they are
         dropped outright), the change rows, and the fresh inserted rows
         (None: no inserts). ``allocate(df)`` pins ``df`` and assigns
-        ``idmap``'s identity values in-plan; an allocation makes the
-        commit advance the identity high-water mark from the insert
-        files' footer ``#rows`` (all staged files with
-        ``mark_counts_rewrites`` — over-advancing only widens a gap).
+        ``idmap``'s identity values in-plan; only inserts allocate, so
+        the commit advances the identity high-water mark by exactly the
+        insert files' footer ``#rows``.
 
         The rewrite, insert and CDF writes are independent jobs over the
         persisted frames, staged concurrently (:meth:`_overlapped`) and
         labelled ``vt:<op>:rewrite|insert|cdf``; each data-file thread
         also reads its own files' footer stats, so the commit re-reads
-        no footer: untouched files reuse their manifest stats.
+        no footer: untouched files reuse their manifest stats. The same
+        stats find the 0-row files an empty frame stages (a rewrite
+        whose rows are all deleted, a merge that inserts nothing): they
+        are deleted and never committed, at no job cost — except on a
+        schema-less legacy log, where a file footer is the only record
+        of the table schema.
         ``insert_cdf_schema``: record the insert change rows from the
         COMMITTED insert files instead (one more job after staging) — a
         non-deterministic, unpinned incoming frame must record exactly
@@ -4636,6 +4539,7 @@ class VersionedTable:
 
         pb = self._partition_by_at(base)
         mapping = self._mapping_at(base)
+        stored = self._schema_at(base)
         pinned: list[DataFrame] = []
 
         def allocate(df: DataFrame) -> DataFrame:
@@ -4652,7 +4556,13 @@ class VersionedTable:
             def run():
                 with self._job_label(f"{op}:{phase}"):
                     fs = self._write_data_files(frame, pb, mapping)
-                    return fs, self._collect_stats(fs)
+                    st = self._collect_stats(fs)
+                if stored is not None:
+                    for f in fs:
+                        if st[f]["#rows"] == 0:
+                            os.remove(os.path.join(self.path, f))
+                            del st[f]
+                return [f for f in fs if f in st], st
 
             return run
 
@@ -4702,17 +4612,14 @@ class VersionedTable:
             commit_kw.update(
                 schema=evolved_schema,
                 enforced_schema=(
-                    self._schema_at(base) or self._derived_schema_json(base)
+                    stored or self._derived_schema_json(base)
                 ),
                 mapping=mapping,
             )
-        if pinned:
+        if pinned and ins_files:
             commit_kw.update(
                 identity=idmap,
-                identity_allocated=True,
-                identity_stat_files=(
-                    new_files if mark_counts_rewrites else ins_files
-                ),
+                identity_files=ins_files,
                 enforced_identity=idmap,
             )
         return self._commit(
@@ -5659,16 +5566,13 @@ class VersionedTable:
                 inserts = inserts.where(
                     self._as_condition(when_not_matched_condition)
                 )
-            # writing an empty insert frame still stages one 0-row file,
-            # so the isEmpty() probe (a full anti-join job) decides
-            # whether to write at all — except on the plain merge's hot
-            # path, where a key match already proved there is a rewrite
-            # to commit and the probe costs more than the empty file.
-            # An identity allocation always probes: it would record
-            # watermark fields for a zero-insert merge
-            if (idmap or by_source or not t_set) and inserts.isEmpty():
-                inserts = None
-        if not touched and not dropped and inserts is None:
+        if not touched and not dropped and (
+            inserts is None or inserts.isEmpty()
+        ):
+            # the isEmpty() probe (a full anti-join job) runs only when
+            # it decides whether the merge commits at all: beside a
+            # rewrite, an empty insert stages a 0-row file the kernel
+            # drops for free
             return None  # nothing matched AND nothing new
         cons = self._constraints_at(base)
         pt = (
@@ -5795,9 +5699,6 @@ class VersionedTable:
             ),
             evolved_schema=evolved_schema,
             idmap=idmap,
-            # an inserting merge advances the watermark from ALL its new
-            # files' row counts (over-advance = gap, safe)
-            mark_counts_rewrites=True,
         )
 
     # -- read -----------------------------------------------------------

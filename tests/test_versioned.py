@@ -7962,3 +7962,156 @@ def test_restore_boundary_scoped_rebackfill_and_stale_signal(
     assert not vt.row_tracking_stale()
     dense = vt.read(with_row_ids=True).where("_row_id IS NULL").count()
     assert dense == 0
+
+
+# ---------------------------------------------- one commit path (_commit) ---
+def test_merge_commits_no_empty_insert_file(spark, tmp_path):
+    """A plain merge whose inserts are all filtered out still rewrites
+    the key-matched file; the empty insert frame stages a 0-row file,
+    which the rewrite kernel deletes instead of committing."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.overwrite(spark.range(10).selectExpr("id AS k", "id AS v").coalesce(1))
+    src = spark.createDataFrame([(1, 100), (50, 500)], "k long, v long")
+    v = vt.merge(src, on=["k"], when_not_matched_condition="v < 0")
+    stats = vt._stats_at(v)
+    rows = [stats[f]["#rows"] for f in vt._state(v)]
+    assert 0 not in rows and sum(rows) == 10
+    assert sorted(r.v for r in vt.read().where("k = 1").collect()) == [100]
+
+
+def test_metadata_commit_on_cadence_writes_checkpoint(spark, tmp_path):
+    """Every delta manifest counts toward vt.checkpointInterval — a
+    metadata-only commit landing on the cadence checkpoints like an
+    append, so replay depth stays within one interval."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.overwrite(spark.range(5).coalesce(1))
+    vt.set_properties({"vt.checkpointInterval": "2"})
+    v = vt.add_constraint("id_nonneg", "id >= 0")
+    assert v == 2
+    assert vt._find_checkpoint(v) is not None
+    assert vt._constraints_at(v) == {"id_nonneg": "id >= 0"}
+
+
+def _dml_table(spark, path, identity: bool) -> VersionedTable:
+    """A partitioned table carrying every property a snapshot commit
+    must carry: a CHECK constraint, a TBLPROPERTY, a renamed and a
+    dropped column, deletion vectors, and an identity spec (a visible
+    identity column, or row tracking's hidden one for ops that refuse
+    visible identity)."""
+    vt = VersionedTable(spark, path)
+    vt.overwrite(
+        spark.createDataFrame([], "k long, v long, tmp string"),
+        partition_by=["k"],
+    )
+    if identity:
+        vt.add_identity_column("rid")
+    for lo in (0, 20):
+        vt.append(
+            spark.range(lo, lo + 20)
+            .selectExpr("id % 2 AS k", "id AS v", "'x' AS tmp")
+            .coalesce(1)
+        )
+    vt.rename_column("v", "val")
+    vt.drop_column("tmp")
+    vt.add_constraint("val_nonneg", "val >= 0")
+    vt.set_properties({"owner": "etl"})
+    if not identity:
+        vt.enable_row_tracking()
+    vt.delete("val = 39", mode="dv")
+    return vt
+
+
+_CARRY_OPS = {
+    "compact": (True, lambda vt, s: vt.compact(target_file_bytes=1 << 30)),
+    "delete": (True, lambda vt, s: vt.delete("val < 3")),
+    "delete_dv": (True, lambda vt, s: vt.delete("val < 3", mode="dv")),
+    "update": (
+        True,
+        lambda vt, s: vt.update("val < 3", {"val": "val + 100"}),
+    ),
+    "merge": (
+        True,
+        lambda vt, s: vt.merge(
+            s.createDataFrame([(0, 0), (1, 500)], "k long, val long"),
+            on=["val"],
+        ),
+    ),
+    "replace": (
+        False,
+        lambda vt, s: vt.replace(
+            s.createDataFrame([(0, 0), (1, 500)], "k long, val long"),
+            merge_keys=["val"],
+        ),
+    ),
+    "replace_where": (
+        False,
+        lambda vt, s: vt.replace_where(
+            s.createDataFrame([(0, 2)], "k long, val long"), "val < 3"
+        ),
+    ),
+    "overwrite_partitions": (
+        False,
+        lambda vt, s: vt.overwrite_partitions(
+            s.createDataFrame([(1, 7)], "k long, val long")
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_CARRY_OPS))
+def test_snapshot_commit_carries_table_properties(spark, tmp_path, op):
+    """Every full-snapshot commit carries each table property it does
+    not set — constraints, properties, generated columns, identity specs
+    (the mark may move), the schema record with its tombstones and
+    mapping, the layout and the feature flags — so no property walk
+    loses one across the rewrite."""
+    identity, run = _CARRY_OPS[op]
+    vt = _dml_table(spark, str(tmp_path / "t"), identity)
+
+    def props(v):
+        ids = {
+            c: {k: x for k, x in sp.items() if k != "high"}
+            for c, sp in vt._identity_at(v).items()
+        }
+        return (
+            vt._constraints_at(v),
+            vt._properties_at(v),
+            vt._generated_at(v),
+            ids,
+            vt._schema_record_at(v),
+            vt._mapping_at(v),
+            vt._partition_by_at(v),
+            vt._features_at(v),
+        )
+
+    base = vt.latest_version()
+    v = run(vt, spark)
+    assert v == base + 1 and "files" in vt._manifest(v)
+    assert props(v) == props(base)
+
+
+@pytest.mark.parametrize(
+    "op", ["merge", "replace", "replace_where", "overwrite_partitions", "dv"]
+)
+def test_append_only_refuses_every_row_changing_op(spark, tmp_path, op):
+    """vt.appendOnly refuses, at the commit gate, every op the policy
+    table marks as changing rows — not only delete/update/overwrite/
+    restore."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.overwrite(
+        spark.range(6).selectExpr("id % 2 AS k", "id AS v").coalesce(1),
+        partition_by=["k"],
+    )
+    vt.set_properties({"vt.appendOnly": "true"})
+    base = vt.latest_version()
+    src = spark.createDataFrame([(1, 1), (0, 10)], "k long, v long")
+    calls = {
+        "merge": lambda: vt.merge(src, on=["v"]),
+        "replace": lambda: vt.replace(src, merge_keys=["v"]),
+        "replace_where": lambda: vt.replace_where(src, "v >= 0"),
+        "overwrite_partitions": lambda: vt.overwrite_partitions(src),
+        "dv": lambda: vt.delete("v = 1", mode="dv"),
+    }
+    with pytest.raises(VersionedTableError, match="append-only"):
+        calls[op]()
+    assert vt.latest_version() == base
