@@ -14,10 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical RAM, capped at 48g. A heap larger than the
+    host would meet the kernel's OOM killer before Spark spilled to disk."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(48, ram // 2**31))}g"
+
+
 def get_spark(app_name: str = "as_etl_storage_spark") -> SparkSession:
     """Build (or reuse) the session.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract).
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract)
+    and ``SPARK_DRIVER_MEMORY`` for the driver heap (default: see
+    ``default_driver_memory``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -29,7 +38,10 @@ def get_spark(app_name: str = "as_etl_storage_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # wide aggregations (e.g. the 128-buffer minhash signature agg) fall

@@ -32,8 +32,10 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from functools import partialmethod
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from as_etl_storage_spark.spec import WriterSpec
@@ -178,30 +180,37 @@ class ParquetWriter:
         )
 
     # -- quarantine (W8 upgrade) ---------------------------------------
-    def split_quarantine(self, df: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+    def _reject_pred(self) -> str:
         pred = self.spec.quarantine_predicate
-        if not pred:
+        return f"NOT ({pred}) OR ({pred}) IS NULL"
+
+    def split_quarantine(self, df: DataFrame) -> tuple[DataFrame, Observation | None]:
+        """Clean rows plus an Observation counting the rejects in the first
+        job over the clean rows, which reads every source row. The filter
+        reads a flag set below the observed node, so a predicate that folds
+        to false cannot prune the node."""
+        if not self.spec.quarantine_predicate:
             return df, None
-        clean = df.where(pred)
-        reject = df.where(f"NOT ({pred}) OR ({pred}) IS NULL")
-        return clean, reject
+        rejects = Observation()
+        clean = (
+            df.withColumn("__reject", F.expr(self._reject_pred()))
+            .observe(rejects, F.count_if("__reject").alias("rows"))
+            .where(~F.col("__reject"))
+            .drop("__reject")
+        )
+        return clean, rejects
 
     # -- mode impls -----------------------------------------------------
-    # each impl returns the number of rows written by THIS job — counting
-    # the target after a write would be a full table scan at 100 TB.
-    def _append(self, df: DataFrame, path: str) -> int:
-        df.cache()
-        n = df.count()
-        self._write_df(df, path, "append")
-        df.unpersist()
-        return n
+    # each impl returns the rows written by THIS job, counted by an
+    # Observation in the write job: counting the target afterwards would
+    # scan the whole table, and cache + count + write reads the batch 3x
+    def _write_counted(self, df: DataFrame, path: str, mode: str) -> int:
+        rows = Observation()
+        self._write_df(df.observe(rows, F.count(F.lit(1)).alias("rows")), path, mode)
+        return int(rows.get["rows"])
 
-    def _overwrite(self, df: DataFrame, path: str) -> int:
-        df.cache()
-        n = df.count()
-        self._write_df(df, path, "overwrite")
-        df.unpersist()
-        return n
+    _append = partialmethod(_write_counted, mode="append")
+    _overwrite = partialmethod(_write_counted, mode="overwrite")
 
     def _merge_replace(self, df: DataFrame, path: str) -> int:
         """REPLACE/upsert: target rows whose key matches an incoming row are
@@ -243,9 +252,12 @@ class ParquetWriter:
                 "order-dependence is undefined on an unordered DataFrame"
             )
         kept = target.join(incoming.select(*keys).distinct(), on=keys, how="left_anti")
-        merged = kept.unionByName(incoming)
+        rows = Observation()
+        merged = kept.unionByName(
+            incoming.observe(rows, F.count(F.lit(1)).alias("rows"))
+        )
         self._rewrite_atomic(merged, path)
-        return incoming.count()
+        return int(rows.get["rows"])
 
     def _insert_ignore(self, df: DataFrame, path: str) -> int:
         """ignore mode: skip rows whose keys already exist in the target."""
@@ -293,7 +305,7 @@ class ParquetWriter:
         for attempt in range(max(1, self.spec.retry.max_retries)):
             try:
                 return fn()
-            except WriterError:
+            except (WriterError, AnalysisException):
                 raise  # semantic errors never retry
             except Exception as exc:  # transient I/O / executor loss
                 last = exc
@@ -326,55 +338,41 @@ class ParquetWriter:
             )
         if list(self.spec.columns) and list(self.spec.columns) != ["*"]:
             df = df.select(*self.spec.columns)
-        clean, reject = self.split_quarantine(df)
-        clean = self._arrange(clean)
-        rejected = 0
-        reject_path = ""
-        reject_cached = None
-        if reject is not None:
-            reject_path = self.reject_path()
-            reject_cached = reject.cache()
-            rejected = reject_cached.count()
-
         path = self.target_path()
         mode = self.spec.write_mode
-        try:
-            if self.spec.versioned:
-                written, path = self._write_versioned(clean)
-            elif mode in ("insert",):
-                self.check_schema_compat(clean)
-                written = self._with_retry(
-                    lambda: self._append(clean, path), "append"
-                )
-            elif mode == "overwrite":
-                written = self._with_retry(
-                    lambda: self._overwrite(clean, path), "overwrite"
-                )
-            elif mode == "replace":
-                written = self._with_retry(
-                    lambda: self._merge_replace(clean, path), "replace"
-                )
-            elif mode == "ignore":
-                # same W11 gate as insert: ignore APPENDS its fresh rows,
-                # so a drifted/retyped column would write mixed-schema
-                # files just like an unchecked insert (replace is
-                # implicitly protected — unionByName rejects type
-                # conflicts; overwrite legitimately redefines)
-                self.check_schema_compat(clean)
-                written = self._with_retry(
-                    lambda: self._insert_ignore(clean, path), "ignore"
-                )
-            else:  # pragma: no cover - spec.validate guards
-                raise WriterError(f"unknown writeMode {mode!r}")
-            # dead-letter rows are recorded only once the main write has
-            # SUCCEEDED: appending them first would double-count every bad
-            # row when a failed job is fixed and re-run (the re-run
-            # quarantines the same set again)
-            if reject_cached is not None and rejected:
-                self._write_df(reject_cached, reject_path, "append")
-        finally:
-            if reject_cached is not None:
-                reject_cached.unpersist()
+        if self.spec.versioned:
+            clean, rejects = self.split_quarantine(df)
+            written, path = self._write_versioned(self._arrange(clean))
+        else:
+            if mode in ("insert", "ignore"):
+                # W11 gate: ignore APPENDS its fresh rows, so a drifted/
+                # retyped column would write mixed-schema files just like
+                # an unchecked insert (replace is implicitly protected —
+                # unionByName rejects type conflicts; overwrite
+                # legitimately redefines)
+                self.check_schema_compat(df)
+            impl = {
+                "insert": self._append,
+                "overwrite": self._overwrite,
+                "replace": self._merge_replace,
+                "ignore": self._insert_ignore,
+            }[mode]
+
+            def attempt():
+                # Observations are made per attempt: a failed job completes
+                # them with the counts of the tasks that had finished
+                clean, rejects = self.split_quarantine(df)
+                return impl(self._arrange(clean), path), rejects
+
+            written, rejects = self._with_retry(attempt, mode)
+        rejected = 0 if rejects is None else int(rejects.get["rows"])
+        reject_path = "" if rejects is None else self.reject_path()
+        # dead-letter rows are recorded only once the main write has
+        # SUCCEEDED: appending them first would double-count every bad
+        # row when a failed job is fixed and re-run (the re-run
+        # quarantines the same set again)
+        if rejected:
+            self._write_df(df.where(self._reject_pred()), reject_path, "append")
 
         self.run_post_sql()
         return WriteResult(

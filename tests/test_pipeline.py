@@ -201,6 +201,96 @@ class TestWriter:
         assert res.written == total - bad
         assert res.rejected == bad
 
+    def _jobs_of(self, spark, job) -> tuple:
+        """(result, Spark jobs the run launched) — the job-group idiom."""
+        import time
+
+        sc = spark.sparkContext
+        group = f"writer_jobs_{time.monotonic_ns()}"
+        sc.setJobGroup(group, "run_job")
+        try:
+            res = run_job(spark, job)
+        finally:
+            sc.setJobGroup("", "")
+        return res, sc.statusTracker().getJobIdsForGroup(group)
+
+    @pytest.mark.parametrize("mode", ["insert", "overwrite"])
+    def test_copy_job_is_one_spark_job(self, spark, tmp_path, mode):
+        """The write job counts its own rows: no cache fill, no count job."""
+        res, jobs = self._jobs_of(spark, self._job(tmp_path, mode=mode))
+        assert res.written == duck("SELECT count(*) FROM orders")[0][0]
+        assert len(jobs) == 1, f"{mode} launched {len(jobs)} jobs"
+
+    @pytest.mark.parametrize(
+        "mode,over",
+        [
+            ("insert", {}),
+            ("overwrite", {}),
+            ("replace", {"mergeKeys": ["o_orderkey"]}),
+            ("ignore", {"mergeKeys": ["o_orderkey"]}),
+            ("insert", {"quarantinePredicate": "o_totalprice > 100000"}),
+        ],
+    )
+    def test_no_frame_left_persisted(self, spark, tmp_path, mode, over):
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+        before = persisted()
+        run_job(spark, self._job(tmp_path))
+        run_job(spark, self._job(tmp_path, mode=mode, **over))
+        assert persisted() == before
+
+    @pytest.mark.parametrize("mode", ["insert", "overwrite"])
+    def test_where_matching_nothing_writes_zero(self, spark, tmp_path, mode):
+        job = self._job(tmp_path, mode=mode)
+        job["reader"]["where"] = "o_totalprice < 0"
+        res = run_job(spark, job)
+        assert res.written == 0
+        assert spark.read.parquet(res.target_path).count() == 0
+
+    # "1 = 0" folds to false, and a false filter lets the optimizer drop
+    # the plan below it
+    @pytest.mark.parametrize("pred", ["o_totalprice < 0", "1 = 0"])
+    def test_quarantine_rejects_every_row(self, spark, tmp_path, pred):
+        res = run_job(spark, self._job(tmp_path, quarantinePredicate=pred))
+        total = duck("SELECT count(*) FROM orders")[0][0]
+        assert (res.written, res.rejected) == (0, total)
+        assert spark.read.parquet(res.reject_path).count() == total
+
+    def test_quarantine_rejects_no_row(self, spark, tmp_path):
+        res = run_job(
+            spark,
+            self._job(tmp_path, quarantinePredicate="o_totalprice IS NOT NULL"),
+        )
+        total = duck("SELECT count(*) FROM orders")[0][0]
+        assert (res.written, res.rejected) == (total, 0)
+        assert not os.path.exists(res.reject_path)
+
+    def test_retried_write_counts_its_own_attempt(self, spark, tmp_path, monkeypatch):
+        """The first attempt reads one row, then fails: counts observed by
+        it are partial, so each attempt must observe afresh."""
+        from as_etl_storage_spark.writers.writer import ParquetWriter
+
+        real = ParquetWriter._write_df
+        calls = []
+
+        def flaky(self, df, path, mode):
+            calls.append(path)
+            if len(calls) == 1:
+                df.limit(1).collect()
+                raise OSError("transient write failure")
+            return real(self, df, path, mode)
+
+        monkeypatch.setattr(ParquetWriter, "_write_df", flaky)
+        res = run_job(
+            spark, self._job(tmp_path, quarantinePredicate="o_totalprice > 100000")
+        )
+        bad = duck("SELECT count(*) FROM orders WHERE o_totalprice <= 100000")[0][0]
+        total = duck("SELECT count(*) FROM orders")[0][0]
+        assert len(calls) == 3  # failed attempt, retry, reject write
+        assert (res.written, res.rejected) == (total - bad, bad)
+        assert spark.read.parquet(res.target_path).count() == total - bad
+
     def test_schema_mismatch_fails(self, spark, tmp_path):
         from as_etl_storage_spark.writers.writer import WriterError
 
