@@ -3,6 +3,9 @@
 All operators are pure DataFrame compositions (JVM-side, whole-stage
 codegen'd) — no Python UDFs in any hot path. Scale design notes:
 
+  * _grams             — the one character-n-gram kernel every shingle
+                         consumer shares: a single regex pass per
+                         document, O(length), never O(length²).
   * exact_dedup        — one hash-shuffle on the dedup key; map-side partial
                          aggregation halves shuffle volume.
   * minhash_lsh_pairs  — the 100 TB path: candidates via banded MinHash so
@@ -100,32 +103,30 @@ def keep_latest(
     )
 
 
+def _grams(text_col: str, n: int) -> Column:
+    """Character n-grams of ``text_col`` as an array, in one codegen'd
+    O(length) regex pass: the DuckDB oracle's ``substr(t, i, n)`` for
+    i in 1..max(len-n+1, 1) — a text shorter than n is its own gram,
+    NULL text is a NULL array. The lookahead captures the gram without
+    consuming it, and the trailing ``.`` steps one whole code point, so
+    the matcher never restarts inside a UTF-16 surrogate pair."""
+    return F.expr(
+        f"CASE WHEN length({text_col}) < {n} THEN array({text_col}) "
+        f"ELSE regexp_extract_all({text_col}, '(?s)(?=(.{{{n}}})).', 1) END"
+    )
+
+
 def shingle_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 5, distinct: bool = True
 ) -> DataFrame:
-    """(id, character-n-gram) pairs. The sequence bound matches the DuckDB
-    oracle formula: positions 1..max(len-n+1, 1).
+    """(id, character-n-gram) pairs: the :func:`_grams` array exploded,
+    so NULL text emits no rows.
 
     ``distinct=False`` skips the dedup shuffle — safe for MinHash signature
-    computation (min over a multiset equals min over its set).
-
-    Positions are exploded first and the substring is taken *after* the
-    explode: building the gram array with ``transform`` runs interpreted
-    (higher-order functions have no codegen), while the post-explode
-    substring projection stays inside whole-stage codegen. NULL text
-    still yields one position (``greatest`` skips NULLs) whose substring
-    is NULL — filtered, as in the array form."""
-    positions = F.expr(f"sequence(1, greatest(length({text_col})-{n - 1}, 1))")
-    out = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            F.col(text_col).alias("text_src_"),
-            F.explode(positions).alias("i"),
-        )
-        .select(
-            "doc", F.expr(f"substring(text_src_, i, {n})").alias("shingle")
-        )
-        .where(F.col("shingle").isNotNull())
+    computation (min over a multiset equals min over its set)."""
+    out = df.select(
+        F.col(id_col).alias("doc"),
+        F.explode(_grams(text_col, n)).alias("shingle"),
     )
     return out.distinct() if distinct else out
 
@@ -139,9 +140,9 @@ def shingle_array(
     df: DataFrame, id_col: str, text_col: str, n: int = 5, hashed: bool = False
 ) -> DataFrame:
     """(doc, distinct character-n-gram array) computed entirely in-row —
-    no explode, no groupBy, no shuffle. Same gram formula as
-    :func:`shingle_table` (positions 1..max(len-n+1, 1)); NULL-text rows
-    are dropped, matching the exploded form which emits no rows for them.
+    no explode, no groupBy, no shuffle. Same :func:`_grams` kernel as
+    :func:`shingle_table`; NULL-text rows are dropped, matching the
+    exploded form which emits no rows for them.
 
     ``hashed=True`` stores ``xxhash64(gram)`` longs instead of the gram
     strings: intersection/size arithmetic over fixed-width longs runs
@@ -153,16 +154,13 @@ def shingle_array(
     exact-match against the string form on every fixture. Use for
     verification paths; keep strings where grams themselves are
     emitted."""
-    gram = f"substring({text_col}, i, {n})"
+    grams = _grams(text_col, n)
     if hashed:
-        gram = f"xxhash64({gram})"
-    grams = F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(length({text_col})-{n - 1}, 1)), "
-        f"i -> {gram}))"
-    )
+        # a higher-order function runs interpreted, but each call hashes
+        # one n-char gram: the row stays O(length)
+        grams = F.transform(grams, lambda g: F.xxhash64(g))
     return df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc"), grams.alias("shingles")
+        F.col(id_col).alias("doc"), F.array_distinct(grams).alias("shingles")
     )
 
 

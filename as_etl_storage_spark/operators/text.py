@@ -184,12 +184,8 @@ def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     any partitioning."""
     chars = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length({text_col})), "
-                f"i -> substring({text_col}, i, 1))"
-            )
-        ).alias("ch"),
+        # split on '' is Spark's code-point split: one O(length) pass
+        F.explode(F.split(F.col(text_col), "")).alias("ch"),
     )
     counts = chars.groupBy("doc", "ch").agg(F.count("*").alias("c"))
     with_total = counts.withColumn(
