@@ -31,6 +31,28 @@ def vec_cosine(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
     return vec_dot(a, b) / (a_norm * b_norm)
 
 
+# -- words ([exact]) ---------------------------------------------------------
+def word_tokens(text: Column) -> Column:
+    """Whitespace tokens: a Java ``\\s+`` split with limit -1, so leading
+    and trailing whitespace yield empty tokens, as in the DuckDB oracles'
+    ``regexp_split_to_array(t, '\\s+')``. NULL text is a NULL array."""
+    return F.split(text, r"\s+")
+
+
+def word_grams(tokens: Column, n: int) -> Column:
+    """Space-joined word n-grams of a token array, one per start position
+    1..max(size - n + 1, 1): an array shorter than n is its own gram, a
+    NULL array yields one NULL gram. Pass a projected :func:`word_tokens`
+    column, not the ``split`` expression itself: the lambda reads
+    ``tokens`` twice, so Catalyst keeps the split in the projection below
+    and each document is tokenized once — O(tokens), not one re-split per
+    gram."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(tokens) - (n - 1), F.lit(1))),
+        lambda i: F.array_join(F.slice(tokens, i, n), " "),
+    )
+
+
 # -- rational thresholds ([exact]) -------------------------------------------
 def ratio_at_least(numer: Column, denom: Column, p: int, q: int) -> Column:
     """numer/denom >= p/q via integer cross-multiplication — no float

@@ -8,21 +8,25 @@ codegen'd) — no Python UDFs in any hot path. Scale design notes:
                          document, O(length), never O(length²).
   * exact_dedup        — one hash-shuffle on the dedup key; map-side partial
                          aggregation halves shuffle volume.
-  * minhash_lsh_pairs  — the 100 TB path: candidates via banded MinHash so
-                         the join key is (band, signature), never all-pairs.
-                         Shuffle volume is O(docs × bands), verification cost
-                         is O(candidates × shared shingles).
+  * minhash_dedup_pairs— the 100 TB path: candidates via banded
+                         one-permutation MinHash so the join key is
+                         (band, signature), never all-pairs. Shuffle volume
+                         is O(docs × bands), verification cost is
+                         O(candidates × shingles per doc).
   * simhash            — 60-bit signature per doc (one shuffle over tokens);
                          pair generation here is same-signature-or-near join;
                          at extreme scale, block by signature prefix instead
                          of self-joining all docs.
   * ngram_jaccard_pairs— exact all-pairs via inverted index join; quadratic
                          in cluster size — the correctness baseline for the
-                         LSH path, not the scale path.
-  * embedding_cosine   — exact near-dup on embedding vectors; brute force
-                         here, LSH-bucketed variant in operators/similarity.
+                         LSH path, not the scale path. Word grams come from
+                         the shared ``functions.word_grams`` kernel over a
+                         projected token array: O(tokens) per document.
+  * embedding_cosine_pairs — exact near-dup on embedding vectors; brute
+                         force here, LSH-bucketed variant in
+                         operators/similarity.
 
-Thresshold comparisons use integer cross-multiplication (inter * q >=
+Threshold comparisons use integer cross-multiplication (inter * q >=
 union * p for threshold p/q) — exact, no float boundary effects.
 
 Eager ``localCheckpoint`` sites (candidate pairs / candidate-doc arrays
@@ -39,39 +43,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from as_etl_storage_spark.functions import ratio_at_least, vec_dot, vec_norm
+from as_etl_storage_spark.functions import (
+    ratio_at_least,
+    vec_cosine,
+    vec_dot,
+    vec_norm,
+    word_grams,
+    word_tokens,
+)
 
-# 128 minhash permutations in 16 bands x 8 rows: for true-dup jaccard >= 0.95
-# the miss probability is < 1e-10; at the 0.8 threshold it is ~5%, but the
-# fixture (and typical crawl) distributions are bimodal (dups ~0.95+, rest
-# <0.4) so effective recall is ~1. Verification is exact-jaccard anyway.
+# 128 one-permutation MinHash bins in 16 bands x 8 rows: for true-dup
+# jaccard >= 0.95 the miss probability is < 1e-10; at the 0.8 threshold it
+# is ~5%, but the fixture (and typical crawl) distributions are bimodal
+# (dups ~0.95+, rest <0.4) so effective recall is ~1. Verification is
+# exact-jaccard anyway.
 N_HASHES = 128
 N_BANDS = 16
 ROWS_PER_BAND = N_HASHES // N_BANDS
-
-# The 128 hash functions use Kirsch-Mitzenmacher double hashing:
-# h_j = (h1 + j*h2) mod P with P = 2^31-1 and h1,h2 = pmod(xxhash64(...), P).
-# Two string hashes per shingle instead of 128 — the signature aggregation
-# is then pure long arithmetic (j < 128, operands < 2^31, so j*h2 < 2^38:
-# no overflow under ANSI mode). Standard construction for minhash/bloom
-# families; recall at the bimodal dup/non-dup fixture margins is unchanged,
-# and candidate pairs are exact-jaccard-verified regardless.
-_P = (1 << 31) - 1
-
-
-def _double_hashed(shingles: DataFrame) -> DataFrame:
-    """(doc, h1, h2): the two base hashes the 128-function family derives
-    from. One projection, computed inside the scan stage."""
-    return shingles.select(
-        "doc",
-        F.expr(f"pmod(xxhash64(shingle), {_P}L) AS h1"),
-        F.expr(f"pmod(xxhash64(shingle, 1), {_P}L) AS h2"),
-    )
-
-
-def _mh(j: int) -> str:
-    """SQL expression for min over hash function j (inputs are h1/h2)."""
-    return f"min((h1 + {j}L * h2) % {_P}L)"
 
 
 def exact_dedup(df: DataFrame, id_col: str, key_cols: list[str]) -> DataFrame:
@@ -131,11 +119,6 @@ def shingle_table(
     return out.distinct() if distinct else out
 
 
-def _jaccard_filter(inter: Column, union: Column, p: int, q: int) -> Column:
-    """jaccard >= p/q via integer cross-multiplication (exact)."""
-    return ratio_at_least(inter, union, p, q)
-
-
 def shingle_array(
     df: DataFrame, id_col: str, text_col: str, n: int = 5, hashed: bool = False
 ) -> DataFrame:
@@ -173,16 +156,16 @@ def verify_jaccard_arrays(
 ) -> DataFrame:
     """Exact-jaccard verification via per-pair in-row array intersection.
 
-    The inverted-index formulation (:func:`verify_jaccard`) shuffles
-    |candidates| x |shared shingles| joined rows; this one joins each
-    pair to its two shingle *arrays* (``broadcast=True`` for candidate
+    An inverted-index formulation would shuffle |candidates| x |shared
+    shingles| joined rows; this one joins each pair to its two shingle
+    *arrays* (``broadcast=True`` for candidate
     sets that are small by design — LSH survivors; pass ``broadcast=
     False`` when candidates span the whole corpus, e.g. SNM windows, so
     Catalyst plans a shuffled hash join instead of an OOM-prone
     corpus-wide broadcast) and computes
     ``size(array_intersect(...))`` inside codegen — the only rows in
-    flight are the candidate pairs themselves. Output is identical:
-    intersection over string shingles, exact integer threshold.
+    flight are the candidate pairs themselves, and the threshold is the
+    exact integer cross-multiplication.
 
     Both joins consume the SAME relation through DataFrame aliases
     (not per-side renamed projections): the two build-side exchange
@@ -207,7 +190,7 @@ def verify_jaccard_arrays(
             inter.alias("inter_"),
             union.alias("union_"),
         )
-        .where(_jaccard_filter(F.col("inter_"), F.col("union_"), p, q))
+        .where(ratio_at_least(F.col("inter_"), F.col("union_"), p, q))
         .select(
             "doc_i",
             "doc_j",
@@ -216,42 +199,12 @@ def verify_jaccard_arrays(
     )
 
 
-def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """128 minhash values per doc in a single aggregation (one shuffle).
-    Hash family: double-hashed xxhash64 (see ``_double_hashed``) —
-    deterministic, JVM-side, two string hashes per shingle.
-
-    API-surface form (one column per hash); the dedup pipeline uses
-    :func:`banded_signatures`, which aggregates straight to band signatures
-    and avoids materializing the 128-column row."""
-    aggs = [F.expr(f"{_mh(j)} AS mh{j}") for j in range(N_HASHES)]
-    return _double_hashed(shingles).groupBy("doc").agg(*aggs)
-
-
-def banded_signatures(shingles: DataFrame) -> DataFrame:
-    """(doc, band, sig) rows: each band signature is the hash of its 8
-    member minhashes, computed inside the one groupBy — no 128-column
-    intermediate row (wide rows fall out of whole-stage codegen and cost
-    ~3x on both plan build and execution)."""
-    band_exprs = []
-    for b in range(N_BANDS):
-        mins = ", ".join(
-            _mh(b * ROWS_PER_BAND + r) for r in range(ROWS_PER_BAND)
-        )
-        band_exprs.append(f"hash({mins}) AS sig{b}")
-    agg = _double_hashed(shingles).groupBy("doc").agg(
-        *[F.expr(e) for e in band_exprs]
-    )
-    stack = ", ".join(f"{b}, sig{b}" for b in range(N_BANDS))
-    return agg.select("doc", F.expr(f"stack({N_BANDS}, {stack}) AS (band, sig)"))
-
-
 def oph_banded_signatures(shingles: DataFrame) -> DataFrame:
     """(doc, band, sig) via one-permutation hashing (OPH): ONE hash pass
     bins each shingle into 128 buckets and keeps the min value per bucket;
     8 consecutive buckets fold into a band signature. Per input row this
-    costs 2 hashes + 1 mod versus the classic family's 128 multiply-mod
-    min-updates — the cheap path for the 100 TB corpus.
+    costs 1 hash + 1 mod, where a family of 128 independent hash functions
+    would cost 128 min-updates — the cheap path for the 100 TB corpus.
 
     Band equality uses an order-independent fold (sum of hash(bin, min)),
     so a band matches iff all 8 (bin, min) slots match; empty bins simply
@@ -260,7 +213,7 @@ def oph_banded_signatures(shingles: DataFrame) -> DataFrame:
     128 independent permutations (a globally-minimal shingle value pins
     its bin for every doc containing it), which exact-jaccard
     verification removes; false-negative odds at near-dup similarity are
-    the same ~j^8-per-band as the classic scheme."""
+    the same ~j^8 per band."""
     # ONE xxhash64 per shingle (projected once, so codegen never repeats
     # it): low 7 bits pick the bin, the remaining 57 bits are the rank
     # value — independent enough for min-ranking within a bin, and it
@@ -297,17 +250,10 @@ def oph_banded_signatures(shingles: DataFrame) -> DataFrame:
     return per_band.select("doc", "band", F.expr(f"({sig}) AS sig"))
 
 
-def lsh_candidates(signatures_or_shingles: DataFrame) -> DataFrame:
-    """Banded LSH: docs sharing any band signature become candidate pairs.
-    Join key is (band, sig) — never an all-pairs product.
-
-    Accepts either a raw (doc, shingle) table or a prebanded
-    (doc, band, sig) table."""
-    cols = set(signatures_or_shingles.columns)
-    if {"band", "sig"} <= cols:
-        banded = signatures_or_shingles
-    else:
-        banded = banded_signatures(signatures_or_shingles)
+def lsh_candidates(banded: DataFrame) -> DataFrame:
+    """Banded LSH over (doc, band, sig) rows: docs sharing any band
+    signature become candidate pairs. Join key is (band, sig) — never an
+    all-pairs product."""
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -322,39 +268,32 @@ def lsh_candidates(signatures_or_shingles: DataFrame) -> DataFrame:
     )
 
 
-def verify_jaccard(
-    candidates: DataFrame,
-    shingles: DataFrame,
-    p: int,
-    q: int,
+def _verify_candidates(
+    cands: DataFrame, docs: DataFrame, p: int, q: int
 ) -> DataFrame:
-    """Exact-jaccard verification of candidate pairs: intersection via the
-    shingle inverted index restricted to candidates, sizes precomputed."""
-    sizes = shingles.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    sa = shingles.alias("sa")
-    sb = shingles.alias("sb")
-    inter = (
-        candidates.join(sa, F.col("doc_i") == F.col("sa.doc"))
-        .join(
-            sb,
-            (F.col("doc_j") == F.col("sb.doc"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count("*").alias("inter"))
+    """Exact-jaccard tail of the LSH paths: re-shingle only the candidate
+    documents of ``docs`` (doc_id_src, text_src) — a broadcast semi-join
+    against the distinct candidate ids — into hashed in-row arrays and
+    verify each pair by ``array_intersect``.
+
+    The arrays are checkpointed (candidate docs only — small by design):
+    verification consumes them on BOTH join sides, and Catalyst does not
+    reuse the scan -> semi-join -> shingle subplan across the aliases
+    (runtime-verified: 2 parquet scans, 4 broadcast builds, 0
+    ReusedExchange without this) — the broadcasts then build from
+    materialized blocks instead of re-running the pipeline twice."""
+    cand_docs = (
+        cands.select(F.col("doc_i").alias("doc"))
+        .union(cands.select(F.col("doc_j").alias("doc")))
+        .distinct()
     )
-    na = sizes.select(F.col("doc").alias("doc_i"), F.col("n_sh").alias("n_i"))
-    nb = sizes.select(F.col("doc").alias("doc_j"), F.col("n_sh").alias("n_j"))
-    joined = inter.join(na, "doc_i").join(nb, "doc_j")
-    union = F.col("n_i") + F.col("n_j") - F.col("inter")
-    return (
-        joined.where(_jaccard_filter(F.col("inter"), union, p, q))
-        .select(
-            "doc_i",
-            "doc_j",
-            F.round(F.col("inter") / union, 4).alias("jac"),
-        )
+    docs_c = docs.join(
+        F.broadcast(cand_docs), docs["doc_id_src"] == F.col("doc"), "left_semi"
     )
+    arrays_c = shingle_array(
+        docs_c, "doc_id_src", "text_src", 5, hashed=True
+    ).localCheckpoint(eager=True)
+    return verify_jaccard_arrays(cands, arrays_c, p, q)
 
 
 def minhash_dedup_pairs(
@@ -365,9 +304,8 @@ def minhash_dedup_pairs(
 
     Plan shape (tuned for scale AND small-input parallelism):
       1. spread_small_scan before the explode — a single-row-group input
-         file would otherwise single-thread the 128-hash signature
-         computation; a well-split table passes through with no added
-         shuffle;
+         file would otherwise single-thread the signature computation;
+         a well-split table passes through with no added shuffle;
       2. signatures from the *non-distinct* shingle stream (min is
          idempotent) — saves a full dedup shuffle of the largest relation;
       3. candidate pairs are persisted (small by design) because they feed
@@ -405,24 +343,7 @@ def minhash_dedup_pairs(
     banded = oph_banded_signatures(sh_raw).persist()
     cands = lsh_candidates(banded).localCheckpoint(eager=True)
     banded.unpersist()
-    cand_docs = (
-        cands.select(F.col("doc_i").alias("doc"))
-        .union(cands.select(F.col("doc_j").alias("doc")))
-        .distinct()
-    )
-    docs_c = base.join(
-        F.broadcast(cand_docs), base["doc_id_src"] == F.col("doc"), "left_semi"
-    )
-    # checkpoint the (candidate docs only — small by design) shingle
-    # arrays too: verification consumes them on BOTH join sides, and
-    # Catalyst does not reuse the scan -> semi-join -> shingle subplan
-    # across the aliases (runtime-verified: 2 parquet scans, 4 broadcast
-    # builds, 0 ReusedExchange without this) — the broadcasts then build
-    # from materialized blocks instead of re-running the pipeline twice
-    arrays_c = shingle_array(
-        docs_c, "doc_id_src", "text_src", 5, hashed=True
-    ).localCheckpoint(eager=True)
-    return verify_jaccard_arrays(cands, arrays_c, p, q)
+    return _verify_candidates(cands, base, p, q)
 
 
 def incremental_dedup_pairs(
@@ -471,21 +392,7 @@ def incremental_dedup_pairs(
         # the call in the CacheManager — checkpoint blocks are GC-cleaned
         .localCheckpoint(eager=True)
     )
-    cand_docs = (
-        cands.select(F.col("doc_i").alias("doc"))
-        .union(cands.select(F.col("doc_j").alias("doc")))
-        .distinct()
-    )
-    both = new_base.union(corp_base)
-    docs_c = both.join(
-        F.broadcast(cand_docs), both["doc_id_src"] == F.col("doc"), "left_semi"
-    )
-    # same double-consumption as minhash_dedup_pairs: checkpoint the
-    # candidate-doc arrays so the scan+semi-join+shingle pass runs once
-    arrays_c = shingle_array(
-        docs_c, "doc_id_src", "text_src", 5, hashed=True
-    ).localCheckpoint(eager=True)
-    return verify_jaccard_arrays(cands, arrays_c, p, q)
+    return _verify_candidates(cands, new_base.union(corp_base), p, q)
 
 
 def ngram_jaccard_pairs(
@@ -499,16 +406,15 @@ def ngram_jaccard_pairs(
     # keyed: hash(id) satisfies the gram table's distinct-on-(doc, gram)
     # clustering, dropping that exchange of the full exploded gram stream
     df = spread_small_scan(df, by=id_col)
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(split({text_col}, '\\\\s+'))-{n - 1}, 1)), "
-        f"i -> array_join(slice(split({text_col}, '\\\\s+'), i, {n}), ' '))"
-    )
     # the exploded+distinct'd gram table feeds THREE consumers (sizes +
     # both self-join sides); Catalyst does not share the subplan across
     # them, so without materialization the tokenize/explode/dedup pass —
     # the dominant cost over a real corpus — runs three times per query
     gr = (
-        df.select(F.col(id_col).alias("doc"), F.explode(grams).alias("shingle"))
+        df.select(
+            F.col(id_col).alias("doc"), word_tokens(F.col(text_col)).alias("tk")
+        )
+        .select("doc", F.explode(word_grams(F.col("tk"), n)).alias("shingle"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -528,7 +434,7 @@ def ngram_jaccard_pairs(
     nb = sizes.select(F.col("doc").alias("doc_j"), F.col("n_sh").alias("n_j"))
     joined = inter.join(na, "doc_i").join(nb, "doc_j")
     union = F.col("n_i") + F.col("n_j") - F.col("inter")
-    return joined.where(_jaccard_filter(F.col("inter"), union, p, q)).select(
+    return joined.where(ratio_at_least(F.col("inter"), union, p, q)).select(
         "doc_i", "doc_j", F.round(F.col("inter") / union, 4).alias("jac")
     )
 
@@ -621,7 +527,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     df = spread_small_scan(df, by=id_col)
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("t"),
+        F.explode(word_tokens(F.col(text_col))).alias("t"),
     ).withColumn(
         "h", F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("long")
     )
@@ -710,7 +616,7 @@ def embedding_cosine_pairs(
     )
     a = e.alias("a")
     b = e.alias("b")
-    cos = vec_dot(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm"))
+    cos = vec_cosine(F.col("a.v"), F.col("b.v"), F.col("a.norm"), F.col("b.norm"))
     return (
         a.join(b, F.col("a.vid") < F.col("b.vid"))
         .where(cos >= threshold)
@@ -786,7 +692,7 @@ def _blocked_cosine_pairs(
     )
     a = assigned.alias("a")
     b = assigned.alias("b")
-    cos = vec_dot(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm"))
+    cos = vec_cosine(F.col("a.v"), F.col("b.v"), F.col("a.norm"), F.col("b.norm"))
     return (
         a.join(
             b,
@@ -883,9 +789,7 @@ def segment_dedup_rebuild(
         df.where(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("doc"),
-            F.filter(
-                F.split(F.col(text_col), r"\s+"), lambda t: t != ""
-            ).alias("tk"),
+            F.filter(word_tokens(F.col(text_col)), lambda t: t != "").alias("tk"),
         )
         # all-whitespace docs are dropped (no segments): Spark's sequence()
         # would otherwise step BACKWARD for an empty array (stop < start)

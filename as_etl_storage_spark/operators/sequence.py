@@ -1,36 +1,18 @@
 """Event-sequence analysis: per-key ordered computations.
 
-Transition counting IS window-expressible (lag), so the primary
-implementation stays JVM-side inside whole-stage codegen — one shuffle on
-user_id for the window sort, then a partial-aggregated groupBy. The
-Arrow-batched ``applyInPandas`` variant is kept as the pattern for per-key
-sequence logic that windows genuinely cannot express (multi-step pattern
-automata, per-user model fitting); it is ~10x slower at sf0.1 and exists as
-the extension template, not the default path.
+Transition counting IS window-expressible (lag), so the implementation
+stays JVM-side inside whole-stage codegen — one shuffle on user_id for the
+window sort, then a partial-aggregated groupBy.
 
 Scale notes: the window partitions by user_id — power-law hot users bound a
 single task's sort buffer; the groupBy after it re-shuffles only the
 (user, from, to) triples, which partial aggregation shrinks first.
-For the pandas path, one group must fit a worker's memory — pre-split hot
-keys by (user_id, day) and re-aggregate.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-TRANSITIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("from_type", T.StringType()),
-        T.StructField("to_type", T.StringType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
 
 
 def event_transitions(events: DataFrame) -> DataFrame:
@@ -49,30 +31,3 @@ def event_transitions(events: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
 
-
-def event_transitions_pandas(events: DataFrame) -> DataFrame:
-    """Arrow-batched per-user variant of :func:`event_transitions` — the
-    ``applyInPandas`` template for sequence logic windows can't express.
-    Results are identical; prefer the window version when lag suffices."""
-
-    def per_user(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        prev = pdf["event_type"].shift(1)
-        mask = prev.notna()
-        out = (
-            pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"][mask],
-                    "from_type": prev[mask],
-                    "to_type": pdf["event_type"][mask],
-                }
-            )
-            .groupby(["user_id", "from_type", "to_type"], as_index=False)
-            .size()
-            .rename(columns={"size": "n"})
-        )
-        return out
-
-    return events.select("user_id", "ts", "event_id", "event_type").groupBy(
-        "user_id"
-    ).applyInPandas(per_user, TRANSITIONS_SCHEMA)

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from as_etl_storage_spark.functions import word_grams, word_tokens
+
 #: tiny marker-word lists per language (n-gram heuristic; deterministic).
 LANG_MARKERS = {
     "en": ("the", "a", "of", "and", "is"),
@@ -22,10 +24,6 @@ STOPWORDS = ("the", "a", "an", "of", "and", "or", "is", "to", "in")
 BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
 
-def _tokens(text: Column) -> Column:
-    return F.split(text, r"\s+")
-
-
 def _count_in(tokens: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.array_intersect(tokens, F.array(*[F.lit(w) for w in words])))
 
@@ -34,7 +32,7 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Marker-hit language id with deterministic priority tie-break
     (en > es > de > fr). Counts *distinct* marker hits (array_intersect) —
     the SQL oracle mirrors this with list_intersect."""
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = word_tokens(F.lower(F.col(text_col)))
     scores = {lang: _count_in(toks, words) for lang, words in LANG_MARKERS.items()}
     c_en, c_es, c_de, c_fr = (scores[s] for s in ("en", "es", "de", "fr"))
     pred = (
@@ -66,7 +64,7 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     denominator is non-zero. (The token-count divisions are safe by
     construction: ``split`` returns at least one element.)"""
     text = F.col(text_col)
-    toks = _tokens(text)
+    toks = word_tokens(text)
     n_tokens = F.size(toks)
     n_chars = F.length(text)
     sum_tok_len = F.aggregate(
@@ -98,7 +96,7 @@ def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     text = F.col(text_col)
     return df.select(
         F.col(id_col),
-        F.size(_tokens(text)).alias("n_ws_tokens"),
+        F.size(word_tokens(text)).alias("n_ws_tokens"),
         F.size(F.regexp_extract_all(F.lower(text), F.lit(BPE_PATTERN), 0)).alias(
             "n_bpe_tokens"
         ),
@@ -162,7 +160,7 @@ def repetition_ratio(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     One explode + two aggregations, all integer until the final division."""
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+        F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
     )
     counts = toks.groupBy("doc", "t").agg(F.count("*").alias("c"))
     per_doc = counts.groupBy("doc").agg(
@@ -221,7 +219,7 @@ def vocabulary(
     already-aggregated vocabulary, not the token stream."""
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+        F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
     ).where(F.col("t") != "")
     return (
         toks.groupBy("t")
@@ -242,7 +240,7 @@ def top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     toks = (
         df.select(
             F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+            F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
         )
         .where(F.col("t") != "")
         .groupBy("doc", "t")
@@ -275,7 +273,7 @@ def rarity_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     one on doc."""
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+        F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
     ).where(F.col("t") != "")
     freq = toks.groupBy("t").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("n_total"))
@@ -302,9 +300,9 @@ def bigram_counts(
 ) -> DataFrame:
     """Adjacent-token bigram frequencies per group, keeping only bigrams
     seen >= ``min_count`` times (a deterministic set — no top-k ties).
-    The bigram array is built in-plan (transform over an index sequence),
-    so the only shuffle is the final (group, bigram) aggregation with
-    map-side partial combine.
+    The bigram array is built in-plan by the shared word-n-gram kernel
+    (``functions.word_grams``, n = 2), so the only shuffle is the final
+    (group, bigram) aggregation with map-side partial combine.
 
     Scale: output is the repeated tail of the bigram distribution, far
     smaller than the token stream; shuffle bytes ∝ distinct bigrams per
@@ -312,13 +310,10 @@ def bigram_counts(
     for the shuffle and join the strings back only for the survivors."""
     staged = df.where(F.col(text_col).isNotNull()).select(
         F.col(group_col),
-        _tokens(F.lower(F.col(text_col))).alias("tk"),
+        word_tokens(F.lower(F.col(text_col))).alias("tk"),
     ).where(F.size("tk") >= 2)
     bg = staged.select(
-        F.col(group_col),
-        F.explode(
-            F.expr("transform(sequence(1, size(tk)-1), i -> concat(tk[i-1], ' ', tk[i]))")
-        ).alias("bigram"),
+        F.col(group_col), F.explode(word_grams(F.col("tk"), 2)).alias("bigram")
     )
     return (
         bg.groupBy(group_col, "bigram")
@@ -347,7 +342,7 @@ def inverted_index(
     toks = (
         df.select(
             F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+            F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
         )
         .where(F.col("t") != "")
         .distinct()
@@ -385,14 +380,12 @@ def boilerplate_phrases(
     (source, gram) counting distinct docs. Shuffle volume is the distinct
     gram set, and the output is only the repeated tail — at corpus scale
     hash the gram to 64 bits to shrink the shuffle payload."""
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(split(lower({text_col}), '\\\\s+'))-{n - 1}, 1)), "
-        f"i -> array_join(slice(split(lower({text_col}), '\\\\s+'), i, {n}), ' '))"
-    )
     gr = df.select(
         F.col(source_col).alias("source"),
         F.col(id_col).alias("doc"),
-        F.explode(grams).alias("gram"),
+        word_tokens(F.lower(F.col(text_col))).alias("tk"),
+    ).select(
+        "source", "doc", F.explode(word_grams(F.col("tk"), n)).alias("gram")
     ).distinct()
     return (
         gr.groupBy("source", "gram")
@@ -421,7 +414,7 @@ def pack_sequences(
     pass a (shard, source) composite group to bound each sort. Output
     is one row per pack: doc span, doc count, token total.
     """
-    toks = F.size(_tokens(F.col(text_col)))
+    toks = F.size(word_tokens(F.col(text_col)))
     w = (
         Window.partitionBy(group_col)
         .orderBy(id_col)
@@ -504,7 +497,7 @@ def bm25_topk(
         spread_small_scan(df.where(F.col(text_col).isNotNull()), by=id_col)
         .select(
             F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+            F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
         )
         .where(F.col("t") != "")
     )
@@ -670,7 +663,7 @@ def tfidf_similar_pairs(
         spread_small_scan(df.where(F.col(text_col).isNotNull()), by=id_col)
         .select(
             F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"),
+            F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"),
         )
         .where(F.col("t") != "")
         .groupBy("doc", "t")
@@ -760,7 +753,7 @@ def cms_heavy_hitters(
 
     counts = (
         df.where(F.col(text_col).isNotNull())
-        .select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("t"))
+        .select(F.explode(word_tokens(F.lower(F.col(text_col)))).alias("t"))
         .where(F.col("t") != "")
         .groupBy("t")
         .agg(F.count("*").alias("c"))

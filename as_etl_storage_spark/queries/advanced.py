@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from as_etl_storage_spark.functions import word_tokens
 from as_etl_storage_spark.operators.asof import asof_join
 from as_etl_storage_spark.operators.graph import connected_components
 from as_etl_storage_spark.operators.sequence import event_transitions
@@ -2872,7 +2873,7 @@ def _pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = uniq.join(F.broadcast(drop), "doc_id", "left_anti")
     return final.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+"))).alias(
+        F.sum(F.size(word_tokens(F.trim(F.col("text"))))).alias(
             "n_tokens"
         ),
         F.sum(F.length("text")).alias("n_chars"),

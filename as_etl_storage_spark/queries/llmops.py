@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from as_etl_storage_spark.functions import word_grams, word_tokens
 from as_etl_storage_spark.operators import (
     dedup,
     multimodal,
@@ -1131,7 +1132,7 @@ def _data_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source",
         "lang",
-        F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
+        F.size(word_tokens(F.col("text"))).alias("n_tok"),
     ).where(F.col("n_tok").isNotNull())
     per = toks.groupBy("source", "lang").agg(
         F.count("*").alias("n_docs"), F.sum("n_tok").alias("n_tokens")
@@ -1199,11 +1200,10 @@ def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard decontamination filter before training. The eval side's gram
     index is tiny, so the probe is a broadcast semi-join; the training
     corpus is scanned once and never shuffled on the gram key."""
-    docs = load_table(spark, sf_dir, "documents")
-    grams = F.expr(
-        "transform(sequence(1, greatest(size(split(text, '\\\\s+'))-12, 1)), "
-        "i -> array_join(slice(split(text, '\\\\s+'), i, 13), ' '))"
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", word_tokens(F.col("text")).alias("tk")
     )
+    grams = word_grams(F.col("tk"), 13)
     train = docs.where("doc_id % 20 <> 0").select(
         F.col("doc_id"), F.explode(grams).alias("g")
     )
@@ -1729,7 +1729,7 @@ def budget_select_pipeline(docs: DataFrame) -> DataFrame:
         docs.where(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.expr("filter(split(text, '\\\\s+'), t -> t != '')").alias("tk"),
+            F.filter(word_tokens(F.col("text")), lambda t: t != "").alias("tk"),
         )
         .where(F.size("tk") > 0)
         .select(

@@ -44,9 +44,10 @@ def get_spark(app_name: str = "as_etl_storage_spark") -> SparkSession:
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # wide aggregations (e.g. the 128-buffer minhash signature agg) fall
-        # out of whole-stage codegen at the default 100-field cap and run 2x
-        # slower; 300 keeps them compiled without risking 64KB method limits
+        # wide rows (e.g. simhash's 60 bit-sums and the 60-term signature
+        # projection over them) stay in whole-stage codegen up to 300
+        # fields instead of the default 100, still clear of the 64KB method
+        # limit; what the cap changes for the other queries is unmeasured
         .config("spark.sql.codegen.maxFields", "300")
         # let Python DataSources (sources/pyds) receive pushFilters —
         # off by default in Spark 4.1

@@ -70,7 +70,8 @@ AUDITED = {
     "hashpartitioning(source) from the window satisfies the "
     "(source, pack_id) groupBy distribution",
     "text_bigrams_top": "bigrams built in-plan (transform over an index "
-    "sequence) — no positional self-join; one aggregation shuffle",
+    "sequence, slicing the token array projected once per document) — no "
+    "positional self-join; one aggregation shuffle",
     "text_inverted_index": "document-frequency band filter broadcasts "
     "(vocabulary-sized); posting lists aggregate only the mid-band",
     "q_weighted_sample": "weighted bottom-k is TakeOrderedAndProject — "

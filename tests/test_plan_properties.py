@@ -389,3 +389,40 @@ def test_merge_evolution_keeps_file_pruned_discovery(spark, tmp_path):
     assert len(carried) == 9
     got = {r.k: (r.v, r.tag) for r in vt.read().where("k in (5, 50)").collect()}
     assert got[5] == (-5, "x") and got[50] == (50, None)
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The argument text of every ``lambdafunction(...)`` in a plan."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        i = j = start + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i:j - 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "text_boilerplate"])
+def test_word_grams_tokenize_outside_the_lambda(spark, monkeypatch, name):
+    # the token array is projected once per document and the gram lambda
+    # slices it; a split inside the lambda re-tokenizes the whole text
+    # once per gram, O(tokens x length). ngram_jaccard checkpoints its
+    # gram table while building, so checkpointed plans are captured too.
+    frame = type(spark.range(1))  # the concrete (classic) DataFrame class
+    plans = []
+    checkpoint = frame.localCheckpoint
+
+    def capturing(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", capturing)
+    df = QUERIES[name](spark, SF)
+    plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+    bodies = [b for p in plans for b in _lambda_bodies(p)]
+    assert any("slice(" in b for b in bodies)  # the gram lambda is there
+    assert not any("split(" in b for b in bodies)
