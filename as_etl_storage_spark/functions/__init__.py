@@ -42,14 +42,19 @@ def word_tokens(text: Column) -> Column:
 def word_grams(tokens: Column, n: int) -> Column:
     """Space-joined word n-grams of a token array, one per start position
     1..max(size - n + 1, 1): an array shorter than n is its own gram, a
-    NULL array yields one NULL gram. Pass a projected :func:`word_tokens`
-    column, not the ``split`` expression itself: the lambda reads
-    ``tokens`` twice, so Catalyst keeps the split in the projection below
-    and each document is tokenized once — O(tokens), not one re-split per
-    gram."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(tokens) - (n - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(tokens, i, n), " "),
+    NULL array (NULL text) is NULL, so it explodes to no gram. Pass a
+    projected :func:`word_tokens` column, not the ``split`` expression
+    itself: the expression reads ``tokens`` more than once, so Catalyst
+    keeps the split in the projection below and each document is
+    tokenized once — O(tokens), not one re-split per gram."""
+    return F.when(
+        tokens.isNotNull(),
+        F.transform(
+            F.sequence(
+                F.lit(1), F.greatest(F.size(tokens) - (n - 1), F.lit(1))
+            ),
+            lambda i: F.array_join(F.slice(tokens, i, n), " "),
+        ),
     )
 
 

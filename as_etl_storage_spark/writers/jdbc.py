@@ -47,7 +47,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from as_etl_storage_spark.sources.jdbc import DIALECTS
 from as_etl_storage_spark.spec import WriterSpec
-from as_etl_storage_spark.writers.writer import WriteResult, WriterError
+from as_etl_storage_spark.writers.writer import (
+    WriteResult,
+    WriterError,
+    with_retry,
+)
 
 #: writeMode -> Spark JDBC save mode (db.go:380-396 dispatch)
 _SAVE_MODES = {
@@ -282,37 +286,19 @@ class JdbcWriter:
                 [f"drop table {self.staging_table()}"], ignore_errors=True
             )
 
-    def _with_retry(self, fn, what: str):
-        """Job-level retry with backoff (W7, batch_writer.go:104-126) on
-        the database write. Semantic errors (WriterError) never retry;
-        transient connect/exec failures do. Append retries can duplicate
-        only if the failure hit after commit — the reference accepts the
-        same window; the replace staging merge re-runs idempotently (the
-        staging overwrite resets, the delete-then-insert is keyed)."""
-        import time as _time
-
-        last = None
-        for attempt in range(max(1, self.spec.retry.max_retries)):
-            try:
-                return fn()
-            except WriterError:
-                raise
-            except Exception as exc:
-                last = exc
-                _time.sleep(min(2.0**attempt * 0.1, 5.0))
-        raise WriterError(f"{what} failed after retries: {last}") from last
-
     def write(self, df: DataFrame) -> WriteResult:
         """Execute the JDBC write. Requires a reachable database url."""
         out = self.prepare_frame(df)
         self.run_pre_sql()
+        retries = self.spec.retry.max_retries
         if self.spec.write_mode == "replace":
-            self._with_retry(lambda: self._write_replace(out), "jdbc replace")
+            with_retry(lambda: self._write_replace(out), "jdbc replace", retries)
         else:
             mode = self.save_mode()
-            self._with_retry(
+            with_retry(
                 lambda: self._save(out, self.qualified_table(), mode),
                 f"jdbc {mode}",
+                retries,
             )
         self.run_post_sql()
         return WriteResult(

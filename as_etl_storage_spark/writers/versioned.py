@@ -53,12 +53,13 @@ checkpoint).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
 import time
 import uuid
-from typing import NamedTuple
+from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,8 +72,8 @@ class VersionedTableError(RuntimeError):
 
 class _CheckpointChainBroken(VersionedTableError):
     """An incremental checkpoint references a base checkpoint that no
-    longer exists (vacuumed). Internal: every snapshot walk catches it
-    and falls back to replaying manifests — vacuum guarantees a
+    longer exists (vacuumed). Internal: the log replay (_replay) catches
+    it and falls back to replaying manifests — vacuum guarantees a
     self-contained full snapshot at the oldest retained version, so the
     fallback always terminates."""
 
@@ -431,7 +432,7 @@ class VersionedTable:
         footer carries the complete O(1) property set.
 
         Raises :class:`_CheckpointChainBroken` when a chain's base was
-        vacuumed away; callers fall back to the manifest walk (vacuum
+        vacuumed away; _replay falls back to the manifests (vacuum
         guarantees a self-contained snapshot at the oldest retained
         version, so the fallback terminates)."""
         out = self._read_checkpoint_one(path, part)
@@ -476,12 +477,15 @@ class VersionedTable:
         - ``'files'`` — ``{'files': [...]}`` from the path column;
         - ``'stats'`` — ``{'stats': {file: bounds}}``;
         - ``'dv'`` — ``{'dv': {file: entry}}``;
-        - ``'flt'`` — ``{'flt': {file: filter-sidecar relpath}}``
-          (checkpoints written before the bloom index existed lack the
-          column and contribute ``{}`` — skipping off, never wrong).
+        - ``'filters'`` — ``{'filters': {file: filter-sidecar relpath}}``
+          from the ``flt`` column (checkpoints written before the bloom
+          index existed lack the column and contribute ``{}`` — skipping
+          off, never wrong).
 
+        Each part is keyed as a full-snapshot manifest keys it, so
+        _replay's folds read a checkpoint and a manifest alike.
         Incremental checkpoints additionally surface their base pointer
-        as ``'__base_cp__'`` for files/stats/dv/flt (the chain resolver
+        as ``'__base_cp__'`` for files/stats/dv/filters (the chain resolver
         pops it). A legacy JSON checkpoint returns its whole payload
         regardless (it is one blob; there is nothing to skip)."""
         if path.endswith(".json"):
@@ -496,10 +500,10 @@ class VersionedTable:
             "files": ["path"],
             "stats": ["path", "stats"],
             "dv": ["path", "dv"],
-            "flt": ["path", "flt"],
+            "filters": ["path", "flt"],
         }[part]
-        if part == "flt" and "flt" not in sch.names:
-            out: dict = {"flt": {}}  # pre-bloom-index checkpoint
+        if part == "filters" and "flt" not in sch.names:
+            out: dict = {"filters": {}}  # pre-bloom-index checkpoint
             if meta.get("base_cp") is not None:
                 out["__base_cp__"] = int(meta["base_cp"])
             return out
@@ -507,9 +511,9 @@ class VersionedTable:
         paths = tbl.column("path").to_pylist()
         if part == "files":
             out = {"files": paths}
-        elif part == "flt":
+        elif part == "filters":
             out = {
-                "flt": {
+                "filters": {
                     p: raw
                     for p, raw in zip(paths, tbl.column("flt").to_pylist())
                     if raw is not None
@@ -592,28 +596,33 @@ class VersionedTable:
                 f"proceeding would misread its bytes"
             )
 
-    def _state(self, version: int) -> list[str]:
-        """Full data-file list at ``version``: walk back to the nearest
-        full snapshot (checkpoint, or an overwrite/replace manifest
-        carrying ``files``), then replay the append ``add`` deltas
-        forward. Replay depth is bounded by CHECKPOINT_EVERY on a healthy
-        log; a vacuumed log always retains a snapshot at its oldest
-        version (see vacuum), so the walk cannot run off the front.
-
-        Every snapshot access funnels through here, so this is also the
-        protocol fence: an unsupported-feature table fails fast with the
-        feature named (see _check_features)."""
-        self._check_features(version)
-        adds: list[list[str]] = []
+    def _replay(self, version: int, part: str) -> Iterator[dict]:
+        """THE log replay: yield the delta manifests from ``version``
+        back, newest first, and end with the anchor — checkpoint
+        ``part`` (see _read_checkpoint_one) or a full-snapshot manifest
+        (``"files" in m``). A checkpoint record keys its part as the
+        snapshot manifest does (``files``/``stats``/``filters``/``dv``,
+        and the meta footer's ``txns`` and O(1) properties), so every
+        accessor is a fold that need not ask which anchor it got.
+        Lazy: a consumer that stops early reads no further. Replay depth
+        is bounded by the checkpoint cadence on a healthy log; a
+        vacuumed log keeps a self-contained snapshot at its oldest
+        version (see vacuum), so the walk cannot run off the front — a
+        missing manifest means the version is below that floor, and
+        every accessor fails here alike (a quiet empty answer would
+        restart identity marks, skip CHECK constraints and re-commit
+        idempotent batches)."""
         v = version
         while True:
             cp = self._find_checkpoint(v)
             if cp is not None:
                 try:
-                    base = self._read_checkpoint(cp, "files")["files"]
-                    break
+                    anchor = self._read_checkpoint(cp, part)
                 except _CheckpointChainBroken:
                     pass  # vacuumed base: replay manifests instead
+                else:
+                    yield anchor
+                    return
             m = self._load_json(
                 os.path.join(self.log_dir, f"{v:08d}.json")
             )
@@ -623,14 +632,34 @@ class VersionedTable:
                     f"missing and no checkpoint covers it — the log was "
                     f"truncated past the last full snapshot"
                 )
+            yield m
             if "files" in m:  # full snapshot (overwrite/replace, or v0)
-                base = m["files"]
-                break
-            adds.append(m["add"])
+                return
             v -= 1
-        for a in reversed(adds):
-            base = base + a
-        return base
+
+    def _overlay_at(self, version: int, key: str) -> dict:
+        """File-keyed map ``key`` at ``version``: delta layers overlay
+        the anchor's map, oldest first. Old manifests without ``key``
+        contribute nothing."""
+        *deltas, anchor = self._replay(version, key)
+        out = dict(anchor.get(key, {}))
+        for m in reversed(deltas):
+            out.update(m.get(key, {}))
+        return out
+
+    def _state(self, version: int) -> list[str]:
+        """Full data-file list at ``version``: the anchor's ``files``
+        plus the append ``add`` deltas replayed forward.
+
+        Every snapshot access funnels through here, so this is also the
+        protocol fence: an unsupported-feature table fails fast with the
+        feature named (see _check_features)."""
+        self._check_features(version)
+        *deltas, anchor = self._replay(version, "files")
+        files = anchor["files"]
+        for m in reversed(deltas):
+            files = files + m["add"]
+        return files
 
     def _txns_at(self, version: int) -> dict[str, int]:
         """Application → highest committed batch id at ``version`` (Delta
@@ -638,62 +667,26 @@ class VersionedTable:
         Full-snapshot manifests and checkpoints embed the accumulated map
         (``txns``) so markers survive overwrite/compact/vacuum; append
         manifests carry their own ``txn`` pair."""
-        layers: list[list] = []
-        v = version
-        while True:
-            cp = self._find_checkpoint(v)
-            if cp is not None:
-                base = dict(
-                    self._read_checkpoint(cp, "meta").get("txns", {})
-                )
-                break
-            m = self._load_json(
-                os.path.join(self.log_dir, f"{v:08d}.json")
-            )
-            if m is None:
-                return {}
-            if "files" in m:
-                base = dict(m.get("txns", {}))
-                break
+        *deltas, anchor = self._replay(version, "meta")
+        out = dict(anchor.get("txns", {}))
+        for m in reversed(deltas):
             if "txn" in m:
-                layers.append(m["txn"])
-            v -= 1
-        for app, batch in reversed(layers):
-            if batch > base.get(app, -1):
-                base[app] = batch
-        return base
+                app, batch = m["txn"]
+                out[app] = max(batch, out.get(app, -1))
+        return out
 
     def _walk_to(self, version: int, key: str) -> tuple[object, dict]:
-        """THE table-property walk (one implementation for partition
-        layout, constraints, and schema): back from ``version`` to the
-        nearest record of ``key`` — a checkpoint always terminates, any
-        manifest carrying the key terminates, and a full snapshot
-        without it means the property predates recording. Returns
-        (value-or-None, terminating manifest-or-{})."""
-        v = version
-        while True:
-            cp = self._find_checkpoint(v)
-            if cp is not None:
-                # dv is the one per-FILE property served by this walk:
-                # a parquet checkpoint keeps it in the rows, everything
-                # else is an O(1) footer read
-                try:
-                    m = self._read_checkpoint(
-                        cp, "dv" if key == "dv" else "meta"
-                    )
-                    return m.get(key), m
-                except _CheckpointChainBroken:
-                    pass  # vacuumed base: walk the manifests instead
-            m = self._load_json(
-                os.path.join(self.log_dir, f"{v:08d}.json")
-            )
-            if m is None:
-                return None, {}
+        """THE table-property lookup (partition layout, constraints,
+        schema, …): the first replayed record carrying ``key`` — any
+        manifest carrying it, or the anchor, which means the property
+        predates recording when it lacks the key. Returns (value-or-None,
+        that record). ``dv`` is the one per-FILE property served here:
+        a parquet checkpoint keeps it in the rows, everything else is an
+        O(1) footer read."""
+        for m in self._replay(version, "dv" if key == "dv" else "meta"):
             if key in m:
-                return m[key], m
-            if "files" in m:
-                return None, m
-            v -= 1
+                break
+        return m.get(key), m
 
     def _partition_by_at(self, version: int) -> list[str]:
         """Partition columns in effect at ``version`` (Delta's metaData
@@ -2228,35 +2221,10 @@ class VersionedTable:
         )
 
     def _stats_at(self, version: int) -> dict[str, dict]:
-        """File → column-bounds map at ``version``: same walk as _state,
-        with append layers overlaying the base snapshot. Old-format
-        manifests without ``stats`` contribute nothing — absent stats
-        disable skipping for those files, never correctness."""
-        layers: list[dict] = []
-        v = version
-        while True:
-            cp = self._find_checkpoint(v)
-            if cp is not None:
-                try:
-                    base = self._read_checkpoint(cp, "stats").get(
-                        "stats", {}
-                    )
-                    break
-                except _CheckpointChainBroken:
-                    pass  # vacuumed base: replay manifests instead
-            m = self._load_json(
-                os.path.join(self.log_dir, f"{v:08d}.json")
-            )
-            if m is None:
-                return {}  # truncated below a snapshot: no skipping
-            if "files" in m:
-                base = m.get("stats", {})
-                break
-            layers.append(m.get("stats", {}))
-            v -= 1
-        for s in reversed(layers):
-            base = {**base, **s}
-        return base
+        """File → column-bounds map at ``version``. Old-format manifests
+        without ``stats`` contribute nothing — absent stats disable
+        skipping for those files, never correctness."""
+        return self._overlay_at(version, "stats")
 
     def _write_checkpoint(self, version: int, force_full: bool = False) -> None:
         """Best-effort checkpoint AFTER manifest ``version`` is
@@ -2367,49 +2335,38 @@ class VersionedTable:
         (``add`` without ``files``; metadata-only commits qualify, their
         delta is empty) and stacking on that checkpoint stays inside
         INCREMENTAL_CHAIN_MAX. None → write a full checkpoint."""
-        adds_layers: list[list[str]] = []
-        stats_layers: list[dict] = []
-        flt_layers: list[dict] = []
         walk_cap = 4 * self._checkpoint_interval(version)
-        v = version
-        while True:
-            if version - v > walk_cap:
+        # the head is read as a manifest: a checkpoint already written at
+        # ``version`` is the one being replaced, never the base
+        head = self._load_json(
+            os.path.join(self.log_dir, f"{version:08d}.json")
+        )
+        if head is None:
+            return None
+        deltas: list[dict] = []
+        try:
+            walk = itertools.chain([head], self._replay(version - 1, "meta"))
+            for m in itertools.islice(walk, walk_cap + 1):
+                if "op" not in m:  # a checkpoint's footer: the base
+                    break
+                if "files" in m or "add" not in m:
+                    return None  # a full snapshot in range: re-anchor
+                deltas.append(m)
+            else:
                 return None  # unhealthy cadence: re-anchor with a full
-            if v != version:
-                cp = self._find_checkpoint(v)
-                if cp is not None:
-                    try:
-                        meta = self._read_checkpoint(cp, "meta")
-                    except Exception:  # unreadable base: re-anchor
-                        return None
-                    chain = int(meta.get("chain", 0) or 0)
-                    if chain + 1 > INCREMENTAL_CHAIN_MAX:
-                        return None
-                    adds: list[str] = []
-                    stats: dict[str, dict] = {}
-                    flt: dict[str, str] = {}
-                    for a, s, fl in zip(
-                        reversed(adds_layers),
-                        reversed(stats_layers),
-                        reversed(flt_layers),
-                    ):
-                        adds.extend(a)
-                        stats.update(s)
-                        flt.update(fl)
-                    return v, chain + 1, adds, stats, flt
-            m = self._load_json(
-                os.path.join(self.log_dir, f"{v:08d}.json")
-            )
-            if m is None or "files" in m or "add" not in m:
-                # truncated, or a full-snapshot manifest in range: the
-                # checkpoint must re-anchor as a full snapshot
-                return None
-            adds_layers.append(m["add"])
-            stats_layers.append(m.get("stats", {}))
-            flt_layers.append(m.get("filters", {}))
-            v -= 1
-            if v < 0:
-                return None
+        except Exception:  # noqa: BLE001 - truncated/unreadable: re-anchor
+            return None
+        chain = int(m.get("chain", 0) or 0) + 1
+        if chain > INCREMENTAL_CHAIN_MAX:
+            return None
+        adds: list[str] = []
+        stats: dict[str, dict] = {}
+        flt: dict[str, str] = {}
+        for d in reversed(deltas):
+            adds.extend(d["add"])
+            stats.update(d.get("stats", {}))
+            flt.update(d.get("filters", {}))
+        return version - len(deltas), chain, adds, stats, flt
 
     def _put_checkpoint(
         self,
@@ -3376,33 +3333,9 @@ class VersionedTable:
         return {r[0]: rel for r in rows}
 
     def _filters_at(self, version: int) -> dict[str, str]:
-        """File -> filter-sidecar map at ``version``: the _stats_at
-        walk shape (append layers over the nearest snapshot/checkpoint
-        base). Absent entries disable skipping for those files, never
-        correctness."""
-        layers: list[dict] = []
-        v = version
-        while True:
-            cp = self._find_checkpoint(v)
-            if cp is not None:
-                try:
-                    base = self._read_checkpoint(cp, "flt").get("flt", {})
-                    break
-                except _CheckpointChainBroken:
-                    pass  # vacuumed base: replay manifests instead
-            m = self._load_json(
-                os.path.join(self.log_dir, f"{v:08d}.json")
-            )
-            if m is None:
-                return {}
-            if "files" in m:
-                base = m.get("filters", {})
-                break
-            layers.append(m.get("filters", {}))
-            v -= 1
-        for s in reversed(layers):
-            base = {**base, **s}
-        return base
+        """File -> filter-sidecar map at ``version``. Absent entries
+        disable skipping for those files, never correctness."""
+        return self._overlay_at(version, "filters")
 
     def _bloom_prune(
         self,

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 from dataclasses import dataclass
 from functools import partialmethod
@@ -51,6 +52,28 @@ class WriteResult:
 
 class WriterError(RuntimeError):
     pass
+
+
+def with_retry(fn, what: str, max_retries: int):
+    """Job-level retry with exponential backoff (W7 parity,
+    batch_writer.go:104-126), shared by the file and JDBC writers. Spark
+    already retries failed *tasks* (spark.task.maxFailures); this guards
+    whole-write failures (transient FS/connect errors, executor loss).
+    Semantic errors — WriterError and AnalysisException — are raised at
+    once: a retry cannot fix them. Writes are idempotent-safe to retry:
+    an append can duplicate only if the failure hit after commit, and the
+    staging paths (file replace/compact, JDBC replace merge) re-run from
+    a reset staging area."""
+    last = None
+    for attempt in range(max(1, max_retries)):
+        try:
+            return fn()
+        except (WriterError, AnalysisException):
+            raise
+        except Exception as exc:  # transient I/O / executor loss
+            last = exc
+            time.sleep(min(2.0**attempt * 0.1, 5.0))
+    raise WriterError(f"{what} failed after retries: {last}") from last
 
 
 class ParquetWriter:
@@ -291,27 +314,6 @@ class ParquetWriter:
         os.rename(staging, path)
         shutil.rmtree(backup, ignore_errors=True)
 
-    # -- retry (W7) -----------------------------------------------------
-    def _with_retry(self, fn, what: str):
-        """Job-level retry with exponential backoff (W7 parity,
-        batch_writer.go:104-126). Spark already retries failed *tasks*
-        (spark.task.maxFailures); this guards whole-write failures
-        (transient FS errors). Writes are idempotent-safe to retry: append
-        retries may duplicate only if the failure hit after commit — the
-        staging-swap paths (replace/compact) are atomic."""
-        import time as _time
-
-        last = None
-        for attempt in range(max(1, self.spec.retry.max_retries)):
-            try:
-                return fn()
-            except (WriterError, AnalysisException):
-                raise  # semantic errors never retry
-            except Exception as exc:  # transient I/O / executor loss
-                last = exc
-                _time.sleep(min(2.0**attempt * 0.1, 5.0))
-        raise WriterError(f"{what} failed after retries: {last}") from last
-
     # -- entry ----------------------------------------------------------
     def write(self, df: DataFrame) -> WriteResult:
         self.run_pre_sql()
@@ -364,7 +366,9 @@ class ParquetWriter:
                 clean, rejects = self.split_quarantine(df)
                 return impl(self._arrange(clean), path), rejects
 
-            written, rejects = self._with_retry(attempt, mode)
+            written, rejects = with_retry(
+                attempt, mode, self.spec.retry.max_retries
+            )
         rejected = 0 if rejects is None else int(rejects.get["rows"])
         reject_path = "" if rejects is None else self.reject_path()
         # dead-letter rows are recorded only once the main write has

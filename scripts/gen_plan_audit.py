@@ -6,7 +6,11 @@ claims in docs/SCALE.md. Re-run after planner-affecting changes:
 For each audited query it records the operator skeleton of the executed
 plan (one line per physical operator, details stripped) plus the scan
 evidence lines (PushedFilters / ReadSchema) and summary counters —
-exchanges, joins by strategy, codegen spans. tests/test_plan_properties.py
+exchanges, joins by strategy, codegen spans. Operators that materialize
+an intermediate with ``localCheckpoint`` while the query builds (the
+MinHash candidate pairs, for one) leave only a ``Scan ExistingRDD`` in
+the final plan, so each plan checkpointed during the build is recorded
+too, in build order. tests/test_plan_properties.py
 asserts the load-bearing properties; this file is the human-readable
 companion showing the whole plan each assertion lives in.
 """
@@ -169,8 +173,25 @@ def evidence(plan: str) -> list[str]:
     return ev
 
 
+def plan_section(plan: str) -> list[str]:
+    return (
+        ["```", *skeleton(plan), "```", "", "Evidence:", ""]
+        + [f"- `{e}`" for e in evidence(plan)]
+        + [""]
+    )
+
+
 def main() -> None:
     spark = get_spark("plan-audit")
+    frame = type(spark.range(1))  # the concrete (classic) DataFrame class
+    checkpoint = frame.localCheckpoint
+    checkpointed: list[str] = []
+
+    def capturing(self, *args, **kwargs):
+        checkpointed.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    frame.localCheckpoint = capturing
     lines = [
         "# Plan audit — captured physical plans for the scale claims",
         "",
@@ -189,15 +210,19 @@ def main() -> None:
         saved = {k: spark.conf.get(k) for k in overrides}
         for k, v in overrides.items():
             spark.conf.set(k, v)
+        checkpointed.clear()
         df = QUERIES[name](spark, SF_OVERRIDE.get(name, SF))
         plan = df._jdf.queryExecution().executedPlan().toString()
         for k, v in saved.items():
             spark.conf.set(k, v)
-        lines += [f"## {name}", "", f"**Claim:** {claim}", "", "```"]
-        lines += skeleton(plan)
-        lines += ["```", "", "Evidence:", ""]
-        lines += [f"- `{e}`" for e in evidence(plan)]
-        lines.append("")
+        lines += [f"## {name}", "", f"**Claim:** {claim}", ""]
+        lines += plan_section(plan)
+        for i, cp_plan in enumerate(checkpointed, 1):
+            lines += [
+                f"Checkpointed while building ({i} of {len(checkpointed)}):",
+                "",
+            ]
+            lines += plan_section(cp_plan)
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "docs",

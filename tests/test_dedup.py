@@ -174,11 +174,10 @@ def _ref_tokens(t):
 
 
 def _ref_word_grams(t, n):
-    """The positional definition over Java-split tokens; NULL text is one
-    NULL gram (a NULL token array has no size, so the index range is
-    [1])."""
+    """The positional definition over Java-split tokens; NULL text has no
+    grams."""
     if t is None:
-        return [None]
+        return []
     tk = _ref_tokens(t)
     return [" ".join(tk[i:i + n]) for i in range(max(len(tk) - n + 1, 1))]
 
@@ -244,6 +243,21 @@ def test_word_gram_operators_match_reference(spark, word_docs):
         for g in _ref_word_grams(t, 2)
     )
     assert {(r.source, r.bigram): r.n for r in got} == dict(want)
+
+
+def test_boilerplate_phrases_skip_null_text(spark):
+    # two NULL-text documents of one source share no (NULL) phrase
+    from as_etl_storage_spark.operators import text
+
+    df = spark.createDataFrame(
+        [(1, None, "s"), (2, None, "s"), (3, "a b c", "s"), (4, "A b c", "s")],
+        "id long, text string, source string",
+    )
+    got = text.boilerplate_phrases(df, "id", "text", "source", n=2).collect()
+    assert sorted((r.source, r.gram, r.n_docs) for r in got) == [
+        ("s", "a b", 2),
+        ("s", "b c", 2),
+    ]
 
 
 def test_ngram_jaccard_matches_reference(spark, word_docs):

@@ -272,3 +272,35 @@ def test_mysql_merge_statement_is_replace_into(spark):
         "replace into `main`.`orders`(`o_orderkey`,`s`) "
         "select `o_orderkey`,`s` from `main`.`orders__stage`"
     ]
+
+
+def test_with_retry_raises_semantic_errors_retries_transient(monkeypatch):
+    # the one job-level retry both writers share: an analysis error is
+    # raised on the first call; a transient error is retried with backoff
+    import time
+
+    from pyspark.errors import AnalysisException
+
+    from as_etl_storage_spark.writers.writer import with_retry
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    calls: list[str] = []
+
+    def failing(exc):
+        def fn():
+            calls.append(type(exc).__name__)
+            raise exc
+
+        return fn
+
+    with pytest.raises(AnalysisException):
+        with_retry(failing(AnalysisException("no such column")), "w", 3)
+    assert calls == ["AnalysisException"] and sleeps == []
+
+    calls.clear()
+    with pytest.raises(WriterError, match="w failed after retries"):
+        with_retry(failing(OSError("disk")), "w", 3)
+    assert calls == ["OSError"] * 3
+    assert sleeps == [0.1, 0.2, 0.4]
+    assert with_retry(lambda: 7, "w", 3) == 7

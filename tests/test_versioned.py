@@ -6510,6 +6510,111 @@ def test_incremental_checkpoint_broken_chain_falls_back(
     assert len(pruned.inputFiles()) == 1 and pruned.count() == 10
 
 
+def _replay_view(vt, v: int) -> dict:
+    """Every log-replay accessor of ``vt`` at version ``v``."""
+    return {
+        "state": vt._state(v),
+        "stats": vt._stats_at(v),
+        "filters": vt._filters_at(v),
+        "txns": vt._txns_at(v),
+        "dv": vt._dv_at(v),
+        "partition_by": vt._partition_by_at(v),
+        "constraints": vt._constraints_at(v),
+        "generated": vt._generated_at(v),
+        "identity": vt._identity_at(v),
+        "schema": vt._schema_record_at(v),
+        "mapping": vt._mapping_at(v),
+        "properties": vt._properties_at(v),
+        "features": vt._features_at(v),
+        "created_ts": vt._created_ts(v),
+    }
+
+
+def test_checkpoint_replay_equals_manifest_replay(spark, tmp_path):
+    """A version rebuilt from its checkpoint (full or incremental chain)
+    equals the same version rebuilt from manifests alone, for every
+    accessor: snapshot files, stats, bloom sidecars, txn ledger, deletion
+    vectors and each table property."""
+    import os
+
+    from as_etl_storage_spark.writers.logstore import PosixLogStore
+
+    class _NoCheckpoints(PosixLogStore):
+        def exists(self, path: str) -> bool:
+            name = os.path.basename(path)
+            return ".checkpoint." not in name and super().exists(path)
+
+    path = str(tmp_path / "t")
+    vt = VersionedTable(spark, path)
+
+    def rows(lo):
+        return spark.range(lo, lo + 10).coalesce(1)
+
+    vt.overwrite(rows(0))  # v0
+    vt.set_properties(
+        {"vt.checkpointInterval": "3", "vt.bloomFilter.columns": "id"}
+    )  # v1
+    vt.append(rows(100), txn=("app", 0))  # v2
+    vt.add_constraint("nonneg", "id >= 0")  # v3: full checkpoint
+    assert vt.append(rows(100), txn=("app", 0)) is None  # replay: skipped
+    vt.append(rows(200), txn=("app", 1))  # v4
+    vt.append(rows(300))  # v5
+    vt.append(rows(400))  # v6: incremental checkpoint over v3
+    vt.delete("id = 105", mode="dv")  # v7
+    vt.overwrite(rows(500))  # v8: snapshot after appends
+    vt.append(rows(600))  # v9: full checkpoint (snapshot in range)
+    vt.append(rows(700))  # v10
+    latest = vt.latest_version()
+    assert latest == 10
+    meta = {
+        v: vt._read_checkpoint(vt._find_checkpoint(v), "meta")
+        for v in (3, 6, 9)
+    }
+    assert meta[3].get("base_cp") is None
+    assert meta[6]["base_cp"] == 3
+    assert meta[9].get("base_cp") is None
+    assert vt._dv_at(7) and vt._filters_at(6) and vt._txns_at(10) == {
+        "app": 1
+    }
+    manifests_only = VersionedTable(spark, path, log_store=_NoCheckpoints())
+    assert manifests_only._find_checkpoint(6) is None
+    for v in range(latest + 1):
+        assert _replay_view(vt, v) == _replay_view(manifests_only, v), v
+
+
+def test_replay_below_truncated_log_raises(spark, tmp_path, monkeypatch):
+    """Below vacuum's log floor every replay accessor fails with the one
+    truncation error: a quiet {} would restart identity high-water
+    marks, skip CHECK constraints and re-commit idempotent batches."""
+    import as_etl_storage_spark.writers.versioned as V
+
+    monkeypatch.setattr(V, "CHECKPOINT_EVERY", 3)
+    vt = V.VersionedTable(spark, str(tmp_path / "t"))
+    vt.overwrite(spark.range(0, 10).coalesce(1))
+    vt.add_constraint("nonneg", "id >= 0")
+    vt.append(spark.range(100, 110).coalesce(1), txn=("app", 0))
+    vt.append(spark.range(200, 210).coalesce(1))  # v3: checkpoint
+    vt.vacuum(retain_last=1, grace_seconds=0.0)  # keeps only v3
+    fresh = V.VersionedTable(spark, str(tmp_path / "t"))
+    assert fresh._txns_at(3) == {"app": 0}
+    assert fresh._constraints_at(3) == {"nonneg": "id >= 0"}
+    accessors = [
+        fresh._state,
+        fresh._stats_at,
+        fresh._filters_at,
+        fresh._txns_at,
+        fresh._dv_at,
+        fresh._constraints_at,
+        fresh._identity_at,
+        fresh._schema_record_at,
+        fresh._properties_at,
+    ]
+    for v in range(3):
+        for accessor in accessors:
+            with pytest.raises(VersionedTableError, match="truncated"):
+                accessor(v)
+
+
 def test_vacuum_compacts_incremental_floor_to_full(
     spark, tmp_path, monkeypatch
 ):
