@@ -578,7 +578,7 @@ def _w_versioned_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     records (file, row position) sidecars and re-lists the SAME data
     files — asserted in-query: the file set is IDENTICAL across the
     delete, so a selective delete on a 100 TB table rewrites zero data
-    bytes. Readers subtract the positions with a broadcast anti-join;
+    bytes. Readers filter the positions out of the scan;
     COUNT(*) stays metadata-only via the per-file deleted-row counts
     (also asserted); time travel before the delete still sees the rows.
     The result must equal the oracle's plain WHERE NOT — merge-on-read
@@ -1691,7 +1691,7 @@ _register(
 
 
 def _w_versioned_dv_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DV churn guard (writers/versioned.py:_delete_dv, Delta's own
+    """DV churn guard (writers/versioned.py:_rewrite_commit, Delta's own
     tuning): one dv-mode delete, two treatments — a file whose deleted
     fraction reaches dv_rewrite_fraction is REWRITTEN (its vectors
     purge), lightly-hit files still take vectors (file carried by name —

@@ -49,6 +49,12 @@ def get_spark(app_name: str = "as_etl_storage_spark") -> SparkSession:
         # fields instead of the default 100, still clear of the 64KB method
         # limit; what the cap changes for the other queries is unmeasured
         .config("spark.sql.codegen.maxFields", "300")
+        # generated classes are cached by their code; Spark's default of
+        # 100 entries (an LRU split four ways) holds fewer than the
+        # distinct classes of one versioned-table DML sequence (scans with
+        # and without vector filters, staging writes, change feed), so
+        # every pass recompiled and re-JITed ~20 of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # let Python DataSources (sources/pyds) receive pushFilters —
         # off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")

@@ -53,12 +53,14 @@ checkpoint).
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
 import re
 import time
 import uuid
+from array import array
 from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -174,6 +176,72 @@ _OP_POLICY: dict[str, _OpPolicy] = {
 #: overwrite_schema resets the generated map): the ``_walk_to`` keys a
 #: snapshot or checkpoint must record so the walk terminates on them.
 _CARRIED = ("constraints", "properties", "generated", "identity")
+
+#: merge-on-read: a scan subtracts small deletion vectors with one
+#: filter on (file, row position) that the driver builds from the
+#: ``_dv/`` sidecars — no Spark job (``_subtract_dv``). The filter holds
+#: one bitmap per vectored file and looks each row's file up among them;
+#: past this many sidecar rows to read on the driver (from the sidecars'
+#: footers, before any position is read) or bitmap words to build, or
+#: past this many vectored files to look up, the scan anti-joins the
+#: sidecars instead.
+DV_FILTER_MAX_ROWS = 100_000
+DV_FILTER_MAX_FILES = 64
+
+_DV_SCHEMA = "__vt_file string, __vt_pos bigint"
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+@functools.lru_cache(maxsize=4096)
+def _dv_rows(path: str) -> int:
+    """Rows of one ``_dv/`` sidecar, from its footer."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+@functools.lru_cache(maxsize=256)
+def _dv_positions(path: str) -> dict[str, array]:
+    """Data-file basename → masked row positions of one ``_dv/`` sidecar,
+    read with pyarrow on the driver. Sidecars are immutable (uuid-named,
+    never rewritten), so the read is memoized by path; callers read only
+    sidecars within ``DV_FILTER_MAX_ROWS``, so the memo holds at most
+    256 × that many 8-byte positions."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["__vt_file", "__vt_pos"])
+    out: dict[str, array] = {}
+    for f, pos in zip(t.column(0).to_pylist(), t.column(1).to_pylist()):
+        out.setdefault(f, array("q")).append(pos)
+    return out
+
+
+class _Change(NamedTuple):
+    """What one row-level DML does to the rows of the files it touched,
+    as its ``build`` states it to ``_rewrite_commit``."""
+
+    #: scanned rows that leave the table (masked by a vector, or dropped
+    #: from a rewritten file); they keep the scan's (file, position)
+    leave: DataFrame | None
+    #: scanned rows that stay (written again only for rewritten files)
+    keep: DataFrame | None
+    #: changed rows' new images, written to fresh files
+    images: DataFrame | None = None
+    #: inserted rows, written to fresh files (the only rows identity
+    #: columns allocate for)
+    insert: DataFrame | None = None
+    #: change-data frames (Delta CDF), each with its ``_change_type``
+    cdf: list = []
+
+
+def _union_all(frames: list) -> DataFrame | None:
+    """unionByName of the non-None ``frames``; None when there are none."""
+    live = [f for f in frames if f is not None]
+    return functools.reduce(DataFrame.unionByName, live) if live else None
 
 
 def _layout_only(manifest: dict) -> bool:
@@ -1108,16 +1176,14 @@ class VersionedTable:
         return names
 
     def _write_dv_files(self, df: DataFrame) -> list[str]:
-        """Write (file basename, row position) pairs under ``_dv/``.
-        Coalesced to ONE part: vectors are small by design, and a
-        per-scan-partition fan-out would stamp hundreds of sidecar names
-        onto every touched file's entry — every later reader then opens
-        them all. The single-task funnel is safe because the
-        ``dv_rewrite_fraction`` threshold bounds what reaches this path:
-        a delete matching ≥ that fraction of any file REWRITES the file
-        instead, so the vector payload is capped at fraction × touched
-        bytes — "dv-delete half the table" never funnels half the table
-        through one task."""
+        """Write (file basename, row position) pairs under ``_dv/`` as
+        ONE part: vectors are small by design, and a per-scan-partition
+        fan-out would stamp hundreds of sidecar names onto every touched
+        file's entry — every later reader then opens them all. The
+        single writer is safe because the per-file churn rule bounds
+        what reaches it to half the touched rows, and ``df`` reads the
+        DML kernel's already-built pinned scan, so the coalesce never
+        pulls a file scan into the writer's one task."""
         return self._write_sidecar_files(df.coalesce(1), "_dv", "dv")
 
     def table_schema(self, version: int | None = None) -> "T.StructType":
@@ -3905,7 +3971,11 @@ class VersionedTable:
         )
 
     def replace_where(
-        self, df: DataFrame, predicate, merge_schema: bool = False
+        self,
+        df: DataFrame,
+        predicate,
+        merge_schema: bool = False,
+        mode: str = "dv",
     ) -> int:
         """Arbitrary-predicate scoped overwrite (Delta's ``replaceWhere``
         write option): atomically DELETE every row matching ``predicate``
@@ -3927,9 +3997,13 @@ class VersionedTable:
         literal), …]`` triple form the discovery scan itself is
         manifest-pruned); files wholly inside the predicate are dropped;
         only BOUNDARY files — holding both matching and non-matching
-        rows — are rewritten, keeping their non-matching rows. Replacing
-        one day in a year of history rewrites at most the files
-        straddling the day's edges.
+        rows — change. ``mode`` is :meth:`delete`'s: with ``'dv'`` (the
+        default) a boundary file mostly outside the slice keeps its data
+        under a deletion vector masking the replaced rows, and one
+        mostly inside it is rewritten with its non-matching rows;
+        ``'rewrite'`` rewrites every boundary file. Replacing one day in
+        a year of history changes at most the files straddling the
+        day's edges.
 
         CDF: the replaced rows are recorded as ``delete`` change rows
         and the incoming rows as ``insert`` — incremental consumers
@@ -3948,6 +4022,7 @@ class VersionedTable:
         (database/db.go:380-396 dispatches insert/overwrite/replace);
         a predicate-scoped overwrite is Delta surface on the Spark
         side."""
+        self._check_mode(mode)
         base = self.latest_version()
         if base is None:
             raise VersionedTableError(
@@ -4000,11 +4075,11 @@ class VersionedTable:
                 F.lit(True),
             )
         )
-        # phase 1 (the DML shape): ONE column-pruned scan finds the files
-        # holding at least one matching row; everything else is carried
+        # phase 1 (the DML shape): ONE scan finds the files holding at
+        # least one matching row; everything else is carried
         with self._job_label("replace_where:discovery"):
-            touched, untouched = self._split_touched(
-                base, cond, candidates
+            touched, untouched, matched = self._split_touched(
+                base, cond, candidates, pin=mode == "dv"
             )
 
         def _build(scan_t, allocate):
@@ -4015,15 +4090,16 @@ class VersionedTable:
             # visible identity columns are refused above)
             ins = self._checked(allocate(enforced), cons)
             if scan_t is None:
-                return None, [], ins
-            return (
-                scan_t.where(~cond),
-                [
+                return _Change(None, None, insert=ins)
+            return _Change(
+                leave=scan_t.where(cond),
+                keep=scan_t.where(~cond),
+                insert=ins,
+                cdf=[
                     scan_t.where(cond).withColumn(
                         "_change_type", F.lit("delete")
                     )
                 ],
-                ins,
             )
 
         # insert change rows come from the COMMITTED files, not a
@@ -4038,7 +4114,9 @@ class VersionedTable:
             touched,
             untouched,
             _build,
+            matched=matched,
             params={"predicate": self._param_repr(predicate)},
+            mode=mode,
             rebase_on_appends=self._phys_triples(triples, mapping),
             idmap=idmap,
             insert_cdf_schema=ins_sch,
@@ -4299,39 +4377,89 @@ class VersionedTable:
             )
         names_set = set(names)
         live_dv = {f: e for f, e in (dv or {}).items() if f in names_set}
-        if live_dv or keep_identity:
+        if keep_identity:
             # the _metadata pseudo-column resolves only on the scan
             # relation itself, so the (file, position) identity must be
-            # materialized HERE — both for the DV anti-join and for
-            # callers (find-touched-files, DV deletes) that need it
-            # downstream of this projection
-            cols = df.columns
-            df = self._with_file_name(df).withColumn(
-                self._DV_POS, F.col("_metadata.row_index")
-            )
-            if live_dv:
-                # merge-on-read: subtract the deleted (file, position)
-                # pairs with a broadcast anti-join — DVs are small by
-                # design (an accumulation big enough to matter is what
-                # compact() purges)
-                dv_paths = sorted(
-                    {
-                        os.path.join(self.path, p)
-                        for e in live_dv.values()
-                        for p in e["files"]
-                    }
-                )
-                dv_df = self.spark.read.parquet(*dv_paths).select(
-                    self._FILE_NAME, self._DV_POS
-                )
-                df = df.join(
-                    F.broadcast(dv_df),
-                    on=[self._FILE_NAME, self._DV_POS],
-                    how="left_anti",
-                )
-            if not keep_identity:
-                df = df.select(*cols)
+            # materialized HERE for callers (find-touched-files, the DML
+            # kernel's vectors) that need it downstream
+            df = self._with_identity(df)
+        if live_dv:
+            df = self._subtract_dv(df, live_dv)
         return df
+
+    def _with_identity(self, df: DataFrame) -> DataFrame:
+        """``df`` (a scan) plus each row's (file basename, position)."""
+        return self._with_file_name(df).withColumn(
+            self._DV_POS, F.col("_metadata.row_index")
+        )
+
+    def _subtract_dv(self, df: DataFrame, live_dv: dict) -> DataFrame:
+        """Merge-on-read: drop the (file, position) pairs ``live_dv``'s
+        sidecars record from a scan of their files. Small vectors (the
+        common case: the churn rule rewrites a file before half its rows
+        are masked) become one filter on the scan's metadata, so the
+        read costs no extra job: the driver reads the positions (see
+        :func:`_dv_positions`) into one 64-bit-word bitmap per file, and
+        a row survives when its ``row_index`` bit is clear. All bitmaps
+        travel as ONE JSON map literal that constant folding turns into
+        a map once per plan, so neither analysis nor optimization walks
+        a node per position, and the generated code is the same whatever
+        the files and positions (the codegen cache keeps serving it).
+        Past ``DV_FILTER_MAX_ROWS`` sidecar rows or bitmap words, or
+        ``DV_FILTER_MAX_FILES`` vectored files, the sidecars are read
+        with their declared schema (no footer-inference job) and
+        anti-joined."""
+        paths = sorted(
+            {
+                os.path.join(self.path, p)
+                for e in live_dv.values()
+                for p in e["files"]
+            }
+        )
+        bitmaps: dict[str, list[int]] = {}
+        if (
+            len(live_dv) <= DV_FILTER_MAX_FILES
+            and sum(map(_dv_rows, paths)) <= DV_FILTER_MAX_ROWS
+        ):
+            wanted = {os.path.basename(f) for f in live_dv}
+            for p in paths:
+                for bn, positions in _dv_positions(p).items():
+                    if bn not in wanted:
+                        continue
+                    words = bitmaps.setdefault(bn, [])
+                    for x in positions:
+                        i = x >> 6
+                        if i >= len(words):
+                            words.extend([0] * (i + 1 - len(words)))
+                        words[i] |= 1 << (x & 63)
+        if not bitmaps or sum(map(len, bitmaps.values())) > (
+            DV_FILTER_MAX_ROWS
+        ):
+            has_identity = self._DV_POS in df.columns
+            out = (df if has_identity else self._with_identity(df)).join(
+                self.spark.read.schema(_DV_SCHEMA).parquet(*paths),
+                on=[self._FILE_NAME, self._DV_POS],
+                how="left_anti",
+            )
+            return out if has_identity else out.select(*df.columns)
+        literal = json.dumps(
+            {
+                bn: [w - (w >> 63 << 64) for w in words]  # as signed bigint
+                for bn, words in bitmaps.items()
+            },
+            separators=(",", ":"),
+        )
+        word = (
+            f"try_element_at(try_element_at(from_json({_sql_string(literal)}, "
+            "'map<string,array<bigint>>'), _metadata.file_name), "
+            "int(_metadata.row_index div 64) + 1)"
+        )
+        return df.where(
+            F.expr(
+                f"shiftright(coalesce({word}, 0L), "
+                "int(_metadata.row_index % 64)) & 1L = 0L"
+            )
+        )
 
     def _scan_schema(self, version: int | None) -> "T.StructType | None":
         """The declared scan schema for files of ``version`` — the
@@ -4357,41 +4485,55 @@ class VersionedTable:
         base: int,
         cond: "F.Column",
         candidates: list[str] | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """Phase 1 of every row-level DML (Delta's find-touched-files
-        scan): ONE column-pruned pass over the snapshot collects the
-        DISTINCT file names holding at least one matching row — the scan
-        reads only the predicate's columns plus the file-name metadata,
-        and the collect is bounded by the file count, never the row
-        count. Files with no matching rows are carried into the next
-        version untouched: a delete matching 3 of 10^6 files rewrites 3
-        files. ``candidates`` (from manifest pruning) narrows the scan
-        itself — files outside it provably hold no matches and go
-        straight to the untouched side."""
+        pin: bool = False,
+    ) -> tuple[dict[str, int], list[str], DataFrame | None]:
+        """Phase 1 of every predicate DML (Delta's find-touched-files
+        scan): ONE pass over the snapshot counts the matching rows of
+        each file holding at least one, and the collect is bounded by
+        the file count, never the row count. Returns ({touched file:
+        matching rows}, untouched files, the pinned matching rows or
+        None). The counts are the rows the DML removes from each file,
+        which is what the kernel's vector-or-rewrite rule needs. Files
+        with no matching rows are carried into the next version
+        untouched: a delete matching 3 of 10^6 files touches 3 files.
+        ``candidates`` (from manifest pruning) narrows the scan itself —
+        files outside it provably hold no matches and go straight to
+        the untouched side.
+
+        Unpinned (copy-on-write) the scan reads only the predicate's
+        columns plus the file-name metadata: the rewrite re-reads the
+        touched files whole anyway. ``pin`` (deletion-vector mode) keeps
+        the matching rows with every column and their (file, position)
+        in the executors' cache, built by the counting job itself: they
+        are all a vectored file contributes to the kernel — positions,
+        change rows and new images — so it is scanned once."""
         files = self._state(base)
         scan_set = files if candidates is None else candidates
         if not scan_set:
-            return [], files
-        touched_rows = (
-            self._scan_files(
-                scan_set,
-                self._scan_schema(base),
-                self._dv_at(base),
-                keep_identity=True,
-                mapping=self._mapping_at(base),
-                partition_by=self._partition_by_at(base),
-            )
-            .where(cond)
-            .select(self._FILE_NAME)
-            .distinct()
-            .collect()
+            return {}, files, None
+        matched = self._dml_scan(base, scan_set, keep_identity=True).where(
+            cond
         )
+        if pin:
+            matched = matched.persist()
+        try:
+            hits = {
+                r[0]: r[1]
+                for r in matched.groupBy(self._FILE_NAME).count().collect()
+            }
+        except BaseException:
+            matched.unpersist()
+            raise
         # the scan reports basenames; manifest names keep partition dirs
         # — basenames stay unique (uuid-named), so match on them
-        touched = {r[self._FILE_NAME] for r in touched_rows}
         return (
-            [f for f in files if os.path.basename(f) in touched],
-            [f for f in files if os.path.basename(f) not in touched],
+            {
+                f: hits[os.path.basename(f)]
+                for f in files
+                if os.path.basename(f) in hits
+            },
+            [f for f in files if os.path.basename(f) not in hits],
+            matched if pin else None,
         )
 
     def _dml_scan(
@@ -4399,67 +4541,112 @@ class VersionedTable:
         base: int,
         files: list[str],
         evolved_schema: dict | None = None,
+        keep_identity: bool = False,
     ) -> DataFrame:
-        """The target-side scan every rewrite-style DML reads ``files``
+        """The target-side scan every row-level DML reads ``files``
         through: the declared table schema, plus ``_row_id`` on a
         row-tracked table (survivors keep their ids through the rewrite;
         CDF rows name the changed ids), null-filled up to
         ``evolved_schema`` when the op evolves the schema, so rewrites,
-        inserts and change rows compose under one schema."""
+        inserts and change rows compose under one schema.
+        ``keep_identity`` keeps each row's (file, position) columns —
+        what a deletion vector records."""
         tracked = self._row_tracked_at(base)
         sch = self._scan_schema(base)
         if tracked:
             sch = self._with_row_id(sch)
         df = self._scan_files(
             files, sch, self._dv_at(base),
+            keep_identity=keep_identity,
             mapping=self._mapping_at(base),
             partition_by=self._partition_by_at(base),
         )
         if evolved_schema is not None:
             df, _ = self._align(
                 df, evolved_schema, False, "merge",
-                passthrough=(self._ROW_ID,) if tracked else (),
+                passthrough=(
+                    ((self._ROW_ID,) if tracked else ())
+                    + (
+                        (self._FILE_NAME, self._DV_POS)
+                        if keep_identity
+                        else ()
+                    )
+                ),
             )
         return df
+
+    @staticmethod
+    def _check_mode(mode: str) -> None:
+        if mode not in ("dv", "rewrite"):
+            raise VersionedTableError(
+                f"DML mode must be 'dv' or 'rewrite', got {mode!r}"
+            )
 
     def _rewrite_commit(
         self,
         op: str,
         base: int,
-        touched: list[str],
+        touched: dict[str, int | None],
         untouched: list[str],
         build,
         *,
+        matched: DataFrame | None,
         params: dict,
+        mode: str = "dv",
+        rewrite_fraction: float = 0.5,
         rebase_on_appends: list | None = None,
         evolved_schema: dict | None = None,
         idmap: dict | None = None,
         insert_cdf_schema: "T.StructType | None" = None,
         **commit_kw,
     ) -> int | None:
-        """The second half of every rewrite-style row-level DML (delete,
-        update, replace_where, merge) — Delta's shape for all of them:
-        rewrite the touched files, stage inserts and change rows, commit
-        add/remove/cdc in one manifest. Phase 1 (finding ``touched``) is
-        the caller's.
+        """The second half of every row-level DML (delete, update,
+        replace_where, merge), in Delta's shape: mask or rewrite the
+        touched files, stage new rows and change rows, commit
+        add/remove/dv/cdc in one manifest. Phase 1 (finding ``touched``)
+        is the caller's: it maps each touched file to the rows the op
+        removes from it, or None where the op cannot count them.
 
-        ``build(scan, allocate)`` turns the persisted touched-file scan
-        (None when nothing is touched) into ``(rewritten, cdf_frames,
-        insert)``: the rows replacing the touched files (None: they are
-        dropped outright), the change rows, and the fresh inserted rows
-        (None: no inserts). ``allocate(df)`` pins ``df`` and assigns
-        ``idmap``'s identity values in-plan; only inserts allocate, so
-        the commit advances the identity high-water mark by exactly the
-        insert files' footer ``#rows``.
+        The per-file rule (Delta's deletion vectors, merge-on-read):
+        with ``mode='dv'`` a touched file keeps its data and gains a
+        ``_dv/`` vector masking the rows that leave, unless its
+        CUMULATIVE removed rows — its existing vector plus this op's —
+        reach ``rewrite_fraction`` of its ``#rows``. Such a heavily
+        churned file (or one whose count is None) is rewritten: its
+        survivors go to a fresh file and its vector dies with it, which
+        bounds vector accumulation. Files whose manifests predate the
+        ``#rows`` stat have no denominator and always take vectors.
+        ``mode='rewrite'`` rewrites every touched file (copy-on-write).
 
-        The rewrite, insert and CDF writes are independent jobs over the
-        persisted frames, staged concurrently (:meth:`_overlapped`) and
-        labelled ``vt:<op>:rewrite|insert|cdf``; each data-file thread
-        also reads its own files' footer stats, so the commit re-reads
-        no footer: untouched files reuse their manifest stats. The same
-        stats find the 0-row files an empty frame stages (a rewrite
-        whose rows are all deleted, a merge that inserts nothing): they
-        are deleted and never committed, at no job cost — except on a
+        ``build(scan, allocate)`` turns the touched-file scan (None when
+        nothing is touched) into a :class:`_Change`: which scanned rows
+        leave (``leave``) and stay (``keep``), and which new rows arrive
+        — the changed rows' new images and the inserts — plus the change
+        rows. ``matched`` is phase 1's pinned scan of the rows that
+        leave, with their (file, position) (None in copy-on-write mode)
+        — the kernel takes it over and unpersists it: the scan
+        ``build`` gets holds the rewritten
+        files whole but only these rows of vectored files, whose other
+        rows stay in place and are never read again. When any file is
+        vectored the scan carries each row's (file, position), which
+        ``leave`` keeps. The kernel writes the leaving rows' positions
+        of vectored files as one vector sidecar, the kept rows of
+        rewritten files plus the new images as fresh files, and the
+        inserts as fresh files.
+        ``allocate(df)`` pins ``df`` and assigns ``idmap``'s identity
+        values in-plan; only inserts allocate, so the commit advances
+        the identity high-water mark by exactly the insert files' footer
+        ``#rows``.
+
+        The writes are jobs over the persisted scan, labelled
+        ``vt:<op>:rewrite|insert|dv|cdf``. The change rows go first and
+        build the scan's cache; the other writes then run concurrently
+        (:meth:`_overlapped`) over the built cache. Each data-file
+        thread also reads its own files' footer stats, so the commit
+        re-reads no footer: kept files reuse their manifest stats. The
+        same stats find the 0-row files an empty frame stages (a rewrite
+        whose rows all leave, a merge that inserts nothing): they are
+        deleted and never committed, at no job cost — except on a
         schema-less legacy log, where a file footer is the only record
         of the table schema.
         ``insert_cdf_schema``: record the insert change rows from the
@@ -4468,11 +4655,24 @@ class VersionedTable:
         what it wrote. ``evolved_schema``: the schema an evolving op
         (merge_schema) commits; target-side scans align to it and a
         concurrent schema change aborts the commit."""
-        from functools import reduce
-
         pb = self._partition_by_at(base)
         mapping = self._mapping_at(base)
         stored = self._schema_at(base)
+        known = self._stats_at(base)
+        dv_cur = self._dv_at(base)
+        vectored: dict[str, int] = {}
+        if mode == "dv":
+            for f, n in touched.items():
+                total = known.get(f, {}).get("#rows")
+                if n is not None and (
+                    not isinstance(total, int)
+                    or total <= 0
+                    or (n + int(dv_cur.get(f, {}).get("rows", 0))) / total
+                    < rewrite_fraction
+                ):
+                    vectored[f] = n
+        rewrite = [f for f in touched if f not in vectored]
+        ident = (self._FILE_NAME, self._DV_POS)
         pinned: list[DataFrame] = []
 
         def allocate(df: DataFrame) -> DataFrame:
@@ -4488,7 +4688,9 @@ class VersionedTable:
 
             def run():
                 with self._job_label(f"{op}:{phase}"):
-                    fs = self._write_data_files(frame, pb, mapping)
+                    fs = self._write_data_files(
+                        frame.drop(*ident), pb, mapping
+                    )
                     st = self._collect_stats(fs)
                 if stored is not None:
                     for f in fs:
@@ -4499,31 +4701,85 @@ class VersionedTable:
 
             return run
 
-        scan_t = (
-            self._dml_scan(base, touched, evolved_schema).persist()
-            if touched
-            else None
-        )
-        try:
-            rewritten, cdf_frames, insert = build(scan_t, allocate)
+        def labelled(phase: str, write, frame: DataFrame | None):
+            if frame is None:
+                return None
 
-            def cdf():
-                with self._job_label(f"{op}:cdf"):
-                    return self._write_cdc_files(
-                        reduce(lambda a, b: a.unionByName(b), cdf_frames),
-                        mapping,
+            def run():
+                with self._job_label(f"{op}:{phase}"):
+                    return write(frame)
+
+            return run
+
+        # one pinned scan: rewritten files whole, vectored files only the
+        # rows that leave (their kept rows stay in place) — with nothing
+        # rewritten, that is phase 1's pinned rows as they are
+        scan_t = matched if touched else None
+        if rewrite:
+            scan_t = _union_all(
+                [
+                    self._dml_scan(
+                        base, rewrite, evolved_schema,
+                        keep_identity=bool(vectored),
+                    ),
+                    matched.where(
+                        F.col(self._FILE_NAME).isin(
+                            [os.path.basename(f) for f in vectored]
+                        )
                     )
-
-            rw, ins, cdc = self._overlapped(
-                staged("rewrite", rewritten),
-                staged("insert", insert),
-                cdf if cdf_frames else None,
+                    if vectored
+                    else None,
+                ]
+            ).persist()
+        try:
+            change = build(scan_t, allocate)
+            keep = change.keep
+            if keep is not None and vectored:
+                # vectored files keep their rows in place: only the
+                # rewritten files' survivors are written again
+                keep = (
+                    keep.where(
+                        F.col(self._FILE_NAME).isin(
+                            [os.path.basename(f) for f in rewrite]
+                        )
+                    )
+                    if rewrite
+                    else None
+                )
+            masked = None
+            if vectored and change.leave is not None:
+                masked = change.leave.where(
+                    F.col(self._FILE_NAME).isin(
+                        [os.path.basename(f) for f in vectored]
+                    )
+                ).select(*ident)
+            # the change rows read the pinned scan first and so build it
+            # once: started beside the other writes, each would submit
+            # its own build of the not-yet-cached scan
+            cdf = labelled(
+                "cdf",
+                lambda df: self._write_cdc_files(df, mapping),
+                _union_all([c.drop(*ident) for c in change.cdf]),
+            )
+            cdc = cdf() if cdf is not None else None
+            rw, ins, dv_files = self._overlapped(
+                staged(
+                    "rewrite",
+                    _union_all(
+                        [
+                            p.drop(*ident)
+                            for p in (keep, change.images)
+                            if p is not None
+                        ]
+                    ),
+                ),
+                staged("insert", change.insert),
+                labelled("dv", self._write_dv_files, masked),
             )
         finally:
-            if scan_t is not None:
-                scan_t.unpersist()
-            for p in pinned:
-                p.unpersist()
+            for p in (scan_t, matched, *pinned):
+                if p is not None:
+                    p.unpersist()
         rw_files, rw_stats = rw or ([], {})
         ins_files, ins_stats = ins or ([], {})
         cdc = cdc or []
@@ -4535,8 +4791,19 @@ class VersionedTable:
                     ).withColumn("_change_type", F.lit("insert")),
                     mapping,
                 )
-        new_files = rw_files + ins_files
-        known = self._stats_at(base)
+        # files kept by name (untouched or vectored), in snapshot order;
+        # a vector dies with its rewritten or dropped file and grows by
+        # this op's sidecar on each vectored file
+        kept_set = set(untouched) | set(vectored)
+        kept = [f for f in self._state(base) if f in kept_set]
+        new_dv = {f: e for f, e in dv_cur.items() if f in kept_set}
+        for f, n in vectored.items():
+            if n:
+                e = new_dv.get(f, {"files": [], "rows": 0})
+                new_dv[f] = {
+                    "files": [*e["files"], *(dv_files or [])],
+                    "rows": int(e["rows"]) + int(n),
+                }
         if evolved_schema is not None:
             # the rows were aligned against the base's schema (on a
             # legacy log, the files' DERIVED schema — the same fallback
@@ -4556,79 +4823,72 @@ class VersionedTable:
                 enforced_identity=idmap,
             )
         return self._commit(
-            untouched + new_files,
+            kept + rw_files + ins_files,
             op,
             base,
             cdc=cdc,
             known_stats={
-                **{f: known[f] for f in untouched if f in known},
+                **{f: known[f] for f in kept if f in known},
                 **rw_stats,
                 **ins_stats,
             },
             partition_by=pb,
+            dv=new_dv,
             rebase_on_appends=rebase_on_appends,
-            params=params,
+            params={**params, "mode": mode},
             **commit_kw,
         )
 
     def delete(
         self,
         predicate,
-        mode: str = "rewrite",
+        mode: str = "dv",
         dv_rewrite_fraction: float = 0.5,
     ) -> int | None:
         """DELETE WHERE ``predicate`` as a new version (Delta's row-level
-        delete). Two phases: find touched files (one column-pruned scan),
-        then rewrite ONLY those files without their matching rows —
-        untouched files are carried by name and their manifest stats are
-        reused, so the write AND the footer-stat cost are proportional to
-        the files actually hit, not the table. The deleted rows are
-        written to ``_cdc/`` with ``_change_type='delete'`` (Delta CDF),
-        so incremental consumers can apply the delete without a snapshot
-        diff. NULL-predicate rows are kept (SQL: WHERE matches only
-        TRUE). Returns the new version, or None when nothing matched (no
-        commit — the snapshot is already the result).
+        delete). Two phases: find touched files (one column-pruned scan
+        that also counts each file's matching rows), then mask or
+        rewrite ONLY those files — untouched files are carried by name
+        and their manifest stats are reused, so the write AND the
+        footer-stat cost are proportional to the files actually hit, not
+        the table. The deleted rows are written to ``_cdc/`` with
+        ``_change_type='delete'`` (Delta CDF), so incremental consumers
+        can apply the delete without a snapshot diff. NULL-predicate
+        rows are kept (SQL: WHERE matches only TRUE). Returns the new
+        version, or None when nothing matched (no commit — the snapshot
+        is already the result).
+
+        ``mode='dv'`` (the default; Delta's deletion vectors,
+        merge-on-read): a touched file keeps its data and the matched
+        rows' (file, position) pairs go to a ``_dv/`` sidecar — a
+        selective delete on a 100 TB table rewrites zero data bytes, and
+        readers filter the positions out. A file whose CUMULATIVE
+        deleted fraction — existing vector rows plus this delete's
+        matches, over its ``#rows`` — reaches ``dv_rewrite_fraction`` is
+        rewritten instead (its vector purged): the churn guard against
+        unbounded vector accumulation. Pass a value > 1 to force pure
+        vectors. ``mode='rewrite'`` rewrites every touched file without
+        its matched rows (copy-on-write). ``compact()`` (or any rewrite
+        touching the file) purges a vector by materializing the
+        subtraction.
 
         Snapshot isolation holds: prior versions still reference the
-        original files; vacuum reclaims them once out of retention.
-        Conflict rule (Delta's file-level OCC): with the triple
-        predicate form, a concurrent PURE APPEND whose files provably
-        cannot match the predicate REBASES in — the delete re-lists the
-        appended files and commits; an append that may hold a matching
-        row, or any non-append concurrent commit, aborts the delete
-        (its touched split is stale). Generic string/Column predicates
-        keep the abort-on-anything rule — disjointness is unprovable
-        from stats.
+        original files and vectors; vacuum reclaims them once out of
+        retention. Conflict rule (Delta's file-level OCC): with the
+        triple predicate form, a concurrent PURE APPEND whose files
+        provably cannot match the predicate REBASES in — the delete
+        re-lists the appended files and commits; an append that may hold
+        a matching row, or any non-append concurrent commit, aborts the
+        delete (its touched split is stale). Generic string/Column
+        predicates keep the abort-on-anything rule — disjointness is
+        unprovable from stats.
 
         ``predicate`` is a SQL string, a Column, or the ``[(col, op,
         literal), …]`` triple list ``read(prune=…)`` takes — the triple
         form additionally MANIFEST-PRUNES the discovery scan, so a
         keyed delete on a clustered table opens only the files whose
-        bounds can match instead of one column of every file.
-
-        ``mode='dv'`` (Delta's deletion vectors, merge-on-read): instead
-        of rewriting the touched files, the matched rows' (file,
-        position) pairs are written to a ``_dv/`` sidecar and the commit
-        re-lists the SAME data files — a selective delete on a 100 TB
-        table rewrites zero data bytes; readers subtract the positions
-        with a broadcast anti-join. CDF delete rows are recorded either
-        way. ``compact()`` (or any rewrite touching the file) purges the
-        vector by materializing the subtraction.
-
-        ``dv_rewrite_fraction`` (Delta's own tuning): a file whose
-        CUMULATIVE deleted fraction — existing vector rows plus this
-        delete's matches, over the file's row count — reaches the
-        threshold is REWRITTEN instead of vectored (and its vectors
-        purged), while lightly-hit files still take vectors. This is the
-        churn guard: without it, repeated dv deletes accumulate vector
-        rows and sidecar files without bound, growing every reader's
-        broadcast anti-join until it breaks. Pass a value > 1 to force
-        pure-vector behavior; files whose manifests predate the
-        ``#rows`` stat always take vectors (no denominator)."""
-        if mode not in ("rewrite", "dv"):
-            raise VersionedTableError(
-                f"delete mode must be 'rewrite' or 'dv', got {mode!r}"
-            )
+        bounds can match instead of one column of every file."""
+        self._check_mode(mode)
         base = self.latest_version()
         if base is None:
             raise VersionedTableError(f"no committed versions at {self.path}")
@@ -4639,169 +4899,58 @@ class VersionedTable:
         cond, candidates, triples = self._dml_condition_and_candidates(
             base, predicate
         )
-        if mode == "dv":
-            return self._delete_dv(
-                base, cond, candidates, triples, dv_rewrite_fraction,
-                predicate_repr=self._param_repr(predicate),
-            )
         with self._job_label("delete:discovery"):
-            touched, untouched = self._split_touched(
-                base, cond, candidates
+            touched, untouched, matched = self._split_touched(
+                base, cond, candidates, pin=mode == "dv"
             )
         if not touched:
+            if matched is not None:
+                matched.unpersist()
             return None
-        # survivors rewrite (keeping their _row_id: deleted ids leave
-        # with their rows and never reissue), the matched rows become
-        # CDF delete rows
+        # survivors stay (keeping their _row_id: deleted ids leave with
+        # their rows and never reissue), the matched rows leave and
+        # become CDF delete rows
         return self._rewrite_commit(
             "delete",
             base,
             touched,
             untouched,
-            lambda scan_t, _allocate: (
-                scan_t.where(~cond),
-                [
+            lambda scan_t, _allocate: _Change(
+                leave=scan_t.where(cond),
+                keep=scan_t.where(~cond),
+                cdf=[
                     scan_t.where(cond).withColumn(
                         "_change_type", F.lit("delete")
                     )
                 ],
-                None,
             ),
-            params={
-                "mode": "rewrite",
-                "predicate": self._param_repr(predicate),
-            },
+            matched=matched,
+            params={"predicate": self._param_repr(predicate)},
+            mode=mode,
+            rewrite_fraction=dv_rewrite_fraction,
             rebase_on_appends=self._phys_triples(
                 triples, self._mapping_at(base)
             ),
         )
 
-    def _delete_dv(
-        self,
-        base: int,
-        cond,
-        candidates,
-        triples=None,
-        rewrite_fraction: float = 0.5,
-        predicate_repr: object = None,
+    def update(
+        self, predicate, assignments: dict, mode: str = "dv"
     ) -> int | None:
-        """Deletion-vector DELETE: record the matched rows' (file
-        basename, row position) pairs and commit the (mostly) unchanged
-        file list. One pruned scan finds the matches. Files whose
-        cumulative deleted fraction reaches ``rewrite_fraction`` fall
-        back to a rewrite — the churn guard against unbounded vector
-        accumulation (see :meth:`delete`)."""
-        files = self._state(base)
-        scan_set = files if candidates is None else candidates
-        if not scan_set:
-            return None
-        dv_cur = self._dv_at(base)
-        stats = self._stats_at(base)
-        by_basename = {os.path.basename(f): f for f in files}
-        pb = self._partition_by_at(base)
-        mapping = self._mapping_at(base)
-        sch = self._scan_schema(base)
-        if self._row_tracked_at(base):
-            # _row_id rides the scan: CDF delete rows carry the doomed
-            # ids, and the threshold-rewrite below preserves survivors'
-            sch = self._with_row_id(sch)
-        matched = (
-            self._scan_files(
-                scan_set,
-                sch,
-                dv_cur,
-                keep_identity=True,
-                mapping=mapping,
-                partition_by=pb,
-            )
-            .where(cond)
-            .persist()
-        )
-        try:
-            per_file = {
-                r[0]: r[1]
-                for r in matched.groupBy(self._FILE_NAME).count().collect()
-            }
-            if not per_file:
-                return None
-            # churn policy: a file whose CUMULATIVE deleted fraction
-            # (existing vector rows + this delete's matches, over its
-            # #rows stat) reaches the threshold is rewritten now — its
-            # vectors purge with it. Files without a #rows stat (legacy
-            # manifests) have no denominator and stay vectored.
-            rewrite_rel: set[str] = set()
-            for bn, n in per_file.items():
-                rel = by_basename[bn]
-                total = stats.get(rel, {}).get("#rows")
-                if not isinstance(total, int) or total <= 0:
-                    continue
-                cum = int(n) + int(dv_cur.get(rel, {}).get("rows", 0))
-                if cum / total >= rewrite_fraction:
-                    rewrite_rel.add(rel)
-            vector_bn = [
-                bn for bn in per_file if by_basename[bn] not in rewrite_rel
-            ]
-            dv_files: list[str] = []
-            if vector_bn:
-                dv_files = self._write_dv_files(
-                    matched.where(
-                        F.col(self._FILE_NAME).isin(vector_bn)
-                    ).select(self._FILE_NAME, self._DV_POS)
-                )
-            new_files: list[str] = []
-            if rewrite_rel:
-                # rewrite the heavily-deleted files without their matched
-                # rows; the scan applies their EXISTING vectors too, so
-                # the rewrite materializes the whole subtraction at once
-                # (sch already carries _row_id on a row-tracked table,
-                # so survivors keep their ids through this rewrite)
-                new_files = self._write_data_files(
-                    self._scan_files(
-                        sorted(rewrite_rel), sch, dv_cur,
-                        mapping=mapping, partition_by=pb,
-                    ).where(~cond),
-                    pb,
-                    mapping,
-                )
-            cdc = self._write_cdc_files(
-                matched.drop(self._FILE_NAME, self._DV_POS).withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                mapping,
-            )
-        finally:
-            matched.unpersist()
-        # vector entries: merged for surviving files, dead for rewritten
-        new_dv = {f: e for f, e in dv_cur.items() if f not in rewrite_rel}
-        for bn in vector_bn:
-            rel = by_basename[bn]
-            e = dict(new_dv.get(rel, {"files": [], "rows": 0}))
-            e["files"] = list(e["files"]) + dv_files
-            e["rows"] = int(e["rows"]) + int(per_file[bn])
-            new_dv[rel] = e
-        kept = [f for f in files if f not in rewrite_rel]
-        return self._commit(
-            kept + new_files,
-            "delete",
-            base,
-            cdc=cdc,
-            known_stats={f: stats[f] for f in kept if f in stats},
-            partition_by=pb,
-            dv=new_dv,
-            rebase_on_appends=self._phys_triples(triples, mapping),
-            params={"mode": "dv", "predicate": predicate_repr},
-        )
-
-    def update(self, predicate, assignments: dict) -> int | None:
         """UPDATE SET ``assignments`` WHERE ``predicate`` as a new
         version. ``assignments`` maps existing column names to SQL
         expression strings (or Columns) evaluated against the OLD row —
         standard UPDATE semantics, so ``{"a": "b", "b": "a"}`` swaps.
         Same file-pruned two-phase plan as :meth:`delete`, including the
-        manifest-pruned triple predicate form; the change files carry
-        both ``update_preimage`` and ``update_postimage`` rows (Delta
-        CDF's update pair). Returns the new version, or None when
-        nothing matched."""
+        manifest-pruned triple predicate form and ``mode``: with
+        ``'dv'`` (the default) a lightly hit file keeps its data under a
+        deletion vector masking the matched rows, whose new images land
+        in fresh files (Delta's UPDATE with deletion vectors); a file
+        whose cumulative masked rows would reach half its rows, or every
+        touched file with ``'rewrite'``, is rewritten with its
+        survivors. The change files carry both ``update_preimage`` and
+        ``update_postimage`` rows (Delta CDF's update pair). Returns the
+        new version, or None when nothing matched."""
+        self._check_mode(mode)
         base = self.latest_version()
         if base is None:
             raise VersionedTableError(f"no committed versions at {self.path}")
@@ -4875,10 +5024,12 @@ class VersionedTable:
             return out.drop(hit)
 
         with self._job_label("update:discovery"):
-            touched, untouched = self._split_touched(
-                base, cond, candidates
+            touched, untouched, matched = self._split_touched(
+                base, cond, candidates, pin=mode == "dv"
             )
         if not touched:
+            if matched is not None:
+                matched.unpersist()
             return None
         cons = self._constraints_at(base)
         # derived from the idmap already in hand — no second log walk.
@@ -4889,18 +5040,23 @@ class VersionedTable:
         tracked = any(sp.get("hidden") for sp in idmap.values())
 
         def _build(scan_t, _allocate):
-            # re-align the rewritten rows: an assignment whose expression
-            # drifts a column's type (v = 'oops') must fail HERE, not
-            # poison later declared-schema scans of the rewritten files
-            rewritten, _ = self._align(
-                _updated(scan_t, cond), self._schema_at(base), False,
-                "update",
+            # the matched rows leave; their new images arrive,
+            # re-aligned: an assignment whose expression drifts a
+            # column's type (v = 'oops') must fail HERE, not poison
+            # later declared-schema scans of the new files
+            matched = scan_t.where(cond)
+            images, _ = self._align(
+                _updated(
+                    matched.drop(self._FILE_NAME, self._DV_POS), F.lit(True)
+                ),
+                self._schema_at(base), False, "update",
                 passthrough=(self._ROW_ID,) if tracked else (),
             )
-            matched = scan_t.where(cond)
-            return (
-                self._checked(rewritten, cons),
-                [
+            return _Change(
+                leave=matched,
+                keep=scan_t.where(~cond),
+                images=self._checked(images, cons),
+                cdf=[
                     matched.withColumn(
                         "_change_type", F.lit("update_preimage")
                     ),
@@ -4908,7 +5064,6 @@ class VersionedTable:
                         "_change_type", F.lit("update_postimage")
                     ),
                 ],
-                None,
             )
 
         return self._rewrite_commit(
@@ -4917,10 +5072,12 @@ class VersionedTable:
             touched,
             untouched,
             _build,
+            matched=matched,
             params={
                 "predicate": self._param_repr(predicate),
                 "assignments": self._param_repr(assignments),
             },
+            mode=mode,
             rebase_on_appends=self._phys_triples(
                 triples, self._mapping_at(base)
             ),
@@ -4936,8 +5093,9 @@ class VersionedTable:
         restated as struct field access so the whole condition stays in
         codegen. The flat columns remain the TARGET side (bare names in
         a condition mean the target row). Returns (pair frame, the data
-        column list)."""
-        cols = matched_t.columns
+        column list); a (file, position) identity the scan carries stays
+        flat on the pair frame, outside both aliases."""
+        cols = self._data_columns(matched_t)
         if "source" in cols or "target" in cols:
             raise VersionedTableError(
                 "conditional merge reserves 'source'/'target' as struct "
@@ -4983,8 +5141,11 @@ class VersionedTable:
         multiplicity survives the keys-only projection into the inner
         join either way — source keys are unique among matched rows
         (cardinality-checked), so each target row meets exactly one
-        source row."""
-        cols = matched_t.columns
+        source row. A (file, position) identity on ``matched_t`` rides
+        the target-side frames (apply_pre, carry), never the updated
+        rows."""
+        cols = self._data_columns(matched_t)
+        ident = [c for c in matched_t.columns if c not in cols]
 
         def _regen(df: DataFrame) -> DataFrame:
             # column-level SET can change a generated column's
@@ -5008,7 +5169,7 @@ class VersionedTable:
                 .select(*cols)
             )
             return matched_t, updated, None
-        pair, cols = self._matched_pairs(matched_t, source, on)
+        pair, _ = self._matched_pairs(matched_t, source, on)
         if update_set is None:
             # whole-row update takes the SOURCE's values — except
             # identity columns, whose allocated value lives on the
@@ -5034,10 +5195,16 @@ class VersionedTable:
             )
         cond = self._as_condition(condition)
         return (
-            pair.where(cond).select(*cols),
+            pair.where(cond).select(*cols, *ident),
             _regen(pair.where(cond).select(*updated_cols)),
-            pair.where(~cond).select(*cols),
+            pair.where(~cond).select(*cols, *ident),
         )
+
+    def _data_columns(self, df: DataFrame) -> list[str]:
+        """``df``'s columns without the scan's (file, position) identity."""
+        return [
+            c for c in df.columns if c not in (self._FILE_NAME, self._DV_POS)
+        ]
 
     def merge(
         self,
@@ -5052,6 +5219,7 @@ class VersionedTable:
         when_not_matched_by_source_condition=None,
         when_matched_set: dict[str, str] | None = None,
         merge_schema: bool = False,
+        mode: str = "dv",
     ) -> int | None:
         """MERGE ``source`` into the table on equi-keys ``on`` (Delta's
         MERGE INTO, the upsert/CDC-apply primitive). ``when_matched``:
@@ -5076,11 +5244,18 @@ class VersionedTable:
         merge never saw, so any concurrent commit aborts it.
 
         File-pruned like delete/update: touched files are those holding a
-        KEY-matched target row (found with one semi-join scan); only they
-        are rewritten, inserts land in fresh files, everything else is
-        carried by name with stats reused. Change files record the full
-        CDF story: update_preimage/update_postimage (or delete) for
-        matched rows, insert for new rows.
+        KEY-matched target row (found with one semi-join scan that also
+        counts them); only they change, inserts land in fresh files,
+        everything else is carried by name with stats reused. ``mode``
+        is :meth:`delete`'s: with ``'dv'`` (the default) the matched rows
+        a clause applies to are masked in place by a deletion vector and
+        their updated images land in fresh files, unless a file's
+        cumulative masked rows would reach half its rows — then it is
+        rewritten, as every touched file is with ``'rewrite'`` and under
+        a by-source clause (whose doomed rows are not counted per file).
+        Change files record the full CDF story:
+        update_preimage/update_postimage (or delete) for matched rows,
+        insert for new rows.
 
         A source with duplicate keys among the matched rows raises —
         "which source row wins?" is ambiguous (Delta's multiple-source-
@@ -5131,6 +5306,7 @@ class VersionedTable:
         additive evolution. The CDF rows are recorded under the evolved
         schema (preimages/deletes null-fill). Without the flag an extra
         source column is an error, never silent truncation."""
+        self._check_mode(mode)
         if when_matched not in ("update", "delete", None):
             raise VersionedTableError(
                 f"when_matched must be 'update', 'delete' or None, "
@@ -5370,6 +5546,7 @@ class VersionedTable:
                 when_not_matched_by_source_condition,
                 when_matched_set,
                 evolved_schema,
+                mode,
             )
         finally:
             source.unpersist()
@@ -5395,10 +5572,13 @@ class VersionedTable:
         when_not_matched_by_source_condition=None,
         when_matched_set: dict[str, str] | None = None,
         evolved_schema: dict | None = None,
+        mode: str = "dv",
     ) -> int | None:
-        """Classify the target files, then hand the rewrite to
+        """Classify the target files, then hand them to
         :meth:`_rewrite_commit`. Touched files are those holding a
-        KEY-matched target row (narrowed by a matched condition).
+        KEY-matched target row (narrowed by a matched condition); the
+        discovery counts each file's matched rows, which are the rows
+        the matched clause removes from it.
 
         With ``when_not_matched_by_source='delete'`` every target file
         may hold doomed unmatched rows, so nothing is carried by name:
@@ -5409,8 +5589,6 @@ class VersionedTable:
         (an unmatched row survives unless the condition says otherwise),
         so every file is touched. The by-source read set is the whole
         table, so it commits with the abort-on-anything conflict rule."""
-        from functools import reduce
-
         if mapping is None:
             mapping = self._mapping_at(base)
         # the schema the REWRITE side must land under: when the merge
@@ -5437,16 +5615,12 @@ class VersionedTable:
         # persisted key frames, so the fused probe costs rows (0 or 1),
         # not a separate action
         probes: list[DataFrame] = []
+        matched = None
         if candidates and bcond is None and (
             by_source or when_matched is not None
         ):
-            disc = self._scan_files(
-                candidates,
-                self._scan_schema(base),
-                self._dv_at(base),
-                keep_identity=True,
-                mapping=mapping,
-                partition_by=pb,
+            disc = self._dml_scan(
+                base, candidates, evolved_schema, keep_identity=True
             )
             if when_matched_condition is not None and not by_source:
                 # condition-narrowed discovery: a file whose key matches
@@ -5455,13 +5629,18 @@ class VersionedTable:
                 # evaluates the full match condition in its touched-file
                 # scan for the same reason). By-source must still
                 # rewrite such a file: its unmatched rows are doomed
-                pair_c, _ = self._matched_pairs(disc, source, on)
+                pair_c, cols = self._matched_pairs(disc, source, on)
                 disc = pair_c.where(
                     self._as_condition(when_matched_condition)
-                )
+                ).select(*cols, self._FILE_NAME, self._DV_POS)
             else:
                 disc = disc.join(src_keys, on=on, how="left_semi")
-            probes.append(disc.select(self._FILE_NAME).distinct())
+            if mode == "dv":
+                # as _split_touched(pin=True): the rows the matched
+                # clause removes stay pinned, and a vectored file
+                # contributes only these to the kernel (no second scan)
+                matched = disc = disc.persist()
+            probes.append(disc.groupBy(self._FILE_NAME).count())
         if when_matched is not None and candidates:
             probes.append(
                 source.join(cand_keys, on=on, how="left_semi")
@@ -5469,26 +5648,39 @@ class VersionedTable:
                 .count()
                 .where(F.col("count") > 1)
                 .limit(1)
-                .select(F.lit("__dup__").alias(self._FILE_NAME))
-            )
-        t_set: set[str] = set()
-        if probes:
-            with self._job_label("merge:discovery"):
-                t_rows = reduce(
-                    lambda a, b: a.unionByName(b), probes
-                ).collect()
-            t_set = {r[self._FILE_NAME] for r in t_rows}
-            if "__dup__" in t_set:
-                raise VersionedTableError(
-                    "merge source has duplicate keys among matched rows — "
-                    "a target row would match multiple source rows; "
-                    "de-duplicate the source on the merge keys first"
+                .select(
+                    F.lit("__dup__").alias(self._FILE_NAME),
+                    F.col("count"),
                 )
+            )
+        hits: dict[str, int] = {}
+        if probes:
+            try:
+                with self._job_label("merge:discovery"):
+                    t_rows = _union_all(probes).collect()
+                hits = {r[0]: r[1] for r in t_rows}
+                if "__dup__" in hits:
+                    raise VersionedTableError(
+                        "merge source has duplicate keys among matched "
+                        "rows — a target row would match multiple source "
+                        "rows; de-duplicate the source on the merge keys "
+                        "first"
+                    )
+            except BaseException:
+                if matched is not None:
+                    matched.unpersist()
+                raise
         if by_source and bcond is not None:
-            touched, untouched, dropped = list(files), [], []
+            touched, untouched, dropped = dict.fromkeys(files), [], []
         else:
-            touched = [f for f in files if os.path.basename(f) in t_set]
-            rest = [f for f in files if os.path.basename(f) not in t_set]
+            # by-source: a touched file also loses its unmatched rows,
+            # which the discovery did not count — it is rewritten
+            touched = {
+                f: None if by_source else hits[os.path.basename(f)]
+                for f in files
+                if os.path.basename(f) in hits
+            }
+            rest = [f for f in files if os.path.basename(f) not in hits]
             untouched, dropped = ([], rest) if by_source else (rest, [])
         inserts = None
         if when_not_matched == "insert":
@@ -5506,6 +5698,8 @@ class VersionedTable:
             # it decides whether the merge commits at all: beside a
             # rewrite, an empty insert stages a 0-row file the kernel
             # drops for free
+            if matched is not None:
+                matched.unpersist()
             return None  # nothing matched AND nothing new
         cons = self._constraints_at(base)
         pt = (
@@ -5516,23 +5710,26 @@ class VersionedTable:
 
         def _build(scan_t, allocate):
             cdf: list[DataFrame] = []
-            rewritten = None
+            leave: list[DataFrame] = []
+            keep: list[DataFrame | None] = []
+            images = None
             if scan_t is not None:
                 kept = scan_t.join(src_keys, on=on, how="left_anti")
                 if by_source:
                     # unmatched rows in touched files go — unless a
                     # by-source condition spares them
                     doomed = kept if bcond is None else kept.where(bcond)
+                    leave.append(doomed)
                     cdf.append(
                         doomed.withColumn("_change_type", F.lit("delete"))
                     )
                     kept = None if bcond is None else kept.where(~bcond)
                 matched_t = scan_t.join(src_keys, on=on, how="left_semi")
-                parts = [kept]
+                keep.append(kept)
                 if when_matched is None:
-                    # matched rows carried as-is (rewritten only because
-                    # their files lose doomed by-source rows)
-                    parts.append(matched_t)
+                    # matched rows carried as-is (their files change only
+                    # because they lose doomed by-source rows)
+                    keep.append(matched_t)
                 else:
                     # split the matched rows by the clause condition: the
                     # clause applies to apply_pre (each target row —
@@ -5545,17 +5742,18 @@ class VersionedTable:
                         when_matched_set, self._generated_at(base),
                         sorted(idmap),
                     )
+                    leave.append(apply_pre)
                     if when_matched == "update":
                         if when_matched_set is not None:
                             # SET expressions can drift a column's type —
-                            # re-align so the rewritten files can't poison
+                            # re-align so the new files can't poison
                             # later declared-schema scans (same rule as
                             # update()'s assignments)
                             updated, _ = self._align(
                                 updated, eff_schema, False, "merge",
                                 passthrough=pt,
                             )
-                        parts.append(self._checked(updated, cons))
+                        images = self._checked(updated, cons)
                         cdf.append(
                             apply_pre.withColumn(
                                 "_change_type", F.lit("update_preimage")
@@ -5574,10 +5772,7 @@ class VersionedTable:
                                 "_change_type", F.lit("delete")
                             )
                         )
-                    parts.append(carry)
-                parts = [p for p in parts if p is not None]
-                if parts:
-                    rewritten = reduce(lambda a, b: a.unionByName(b), parts)
+                    keep.append(carry)
             ins = None
             if inserts is not None:
                 allocated = allocate(inserts)
@@ -5593,7 +5788,13 @@ class VersionedTable:
                         "_change_type", F.lit("delete")
                     )
                 )
-            return rewritten, cdf, ins
+            return _Change(
+                leave=_union_all(leave),
+                keep=_union_all(keep),
+                images=images,
+                insert=ins,
+                cdf=cdf,
+            )
 
         params = {
             "on": list(on),
@@ -5621,7 +5822,9 @@ class VersionedTable:
             touched,
             untouched,
             _build,
+            matched=matched,
             params=params,
+            mode=mode,
             # a concurrent append whose files cannot intersect the source
             # key envelope cannot hold a matchable key: the matched/insert
             # split is unaffected, so the merge rebases over it (Delta's
@@ -6176,28 +6379,14 @@ class VersionedTable:
                 scan_schema = T.StructType(
                     [*sch.fields, T.StructField("_change_type", T.StringType())]
                 )
-            if not is_cdc and clone_dv:
-                # dv subtraction happens via an anti-join, after which
-                # the _metadata column no longer resolves — take the
-                # (file, position) identity the dv scan already
-                # materializes instead of re-deriving the file name
-                scan0 = self._scan_files(
-                    [f for f, _ in pairs],
-                    scan_schema,
-                    clone_dv,
-                    keep_identity=True,
-                    mapping=self._mapping_at(to_version),
-                    partition_by=self._partition_by_at(to_version),
-                ).drop(self._DV_POS)
-            else:
-                scan0 = self._with_file_name(
-                    self._scan_files(
-                        [f for f, _ in pairs],
-                        scan_schema,
-                        mapping=self._mapping_at(to_version),
-                        partition_by=self._partition_by_at(to_version),
-                    )
-                )
+            scan0 = self._scan_files(
+                [f for f, _ in pairs],
+                scan_schema,
+                None if is_cdc else clone_dv,
+                keep_identity=True,
+                mapping=self._mapping_at(to_version),
+                partition_by=self._partition_by_at(to_version),
+            ).drop(self._DV_POS)
             scan = scan0.join(
                 F.broadcast(vmap), on=self._FILE_NAME, how="inner"
             )
@@ -6213,9 +6402,7 @@ class VersionedTable:
                 .withColumn("_change_type", F.lit(""))
                 .withColumn("_commit_version", F.lit(0).cast("bigint"))
             )
-        from functools import reduce
-
-        return reduce(lambda a, b: a.unionByName(b), frames)
+        return _union_all(frames)
 
     def compact(
         self,

@@ -8,7 +8,7 @@ rewrites EVERYTHING:
   * the DELETE itself: dv mode (positions sidecar, zero data rewrite)
     vs rewrite mode (full copy-on-write of every touched file);
   * the READ after: a full count over the dv'd snapshot (pays the
-    broadcast position anti-join) vs over the rewritten snapshot.
+    position filter) vs over the rewritten snapshot.
 
 Usage: python scripts/dv_stress.py  (prints one JSON row)
 """
@@ -81,7 +81,7 @@ def main() -> None:
 
         b = build(spark, os.path.join(root, "b"))
         b.read().count()
-        t_rw, _ = timed(lambda: b.delete(pred))
+        t_rw, _ = timed(lambda: b.delete(pred, mode="rewrite"))
         t_read_rw, n_rw = timed(lambda: b.read().count())
         t_agg_rw, s_rw = timed(
             lambda: b.read().agg(F.sum("v")).collect()[0][0]
@@ -122,7 +122,7 @@ def churn(spark, root: str) -> None:
     """Repeated-delete accumulation (SCALE.md 'dv_churn'): 10 successive
     ~6% dv deletes. With the dv_rewrite_fraction threshold OFF the
     vectors and sidecars grow without bound and every reader's
-    anti-join pays for all of them; with the DEFAULT 0.5 threshold the
+    position filter pays for all of them; with the DEFAULT 0.5 threshold the
     cumulative fraction trips a rewrite and the vector payload stays
     bounded."""
 

@@ -382,6 +382,7 @@ def test_merge_evolution_keeps_file_pruned_discovery(spark, tmp_path):
         spark.createDataFrame([(5, -5, "x")], "k long, v long, tag string"),
         ["k"],
         merge_schema=True,
+        mode="rewrite",
     )
     after = set(vt._state(vt.latest_version()))
     carried = before & after
@@ -389,6 +390,39 @@ def test_merge_evolution_keeps_file_pruned_discovery(spark, tmp_path):
     assert len(carried) == 9
     got = {r.k: (r.v, r.tag) for r in vt.read().where("k in (5, 50)").collect()}
     assert got[5] == (-5, "x") and got[50] == (50, None)
+
+
+def test_dv_merge_evolution_keeps_file_pruned_discovery(spark, tmp_path):
+    # the vector-mode twin: the evolving merge still touches only the
+    # file holding key 5, masks that one row in place and carries every
+    # file; the vectored file's rows read the new column as NULL
+    from pyspark.sql import functions as F
+
+    from as_etl_storage_spark.writers.versioned import VersionedTable
+
+    vt = VersionedTable(spark, str(tmp_path / "mepdv"))
+    for lo in range(0, 100, 10):
+        df = spark.range(lo, lo + 10).select(
+            F.col("id").alias("k"), F.col("id").alias("v")
+        ).coalesce(1)
+        if lo == 0:
+            vt.overwrite(df)
+        else:
+            vt.append(df)
+    before = set(vt._state(vt.latest_version()))
+    v = vt.merge(
+        spark.createDataFrame([(5, -5, "x")], "k long, v long, tag string"),
+        ["k"],
+        merge_schema=True,
+    )
+    assert before <= set(vt._state(v))
+    assert [e["rows"] for e in vt._dv_at(v).values()] == [1]
+    got = {
+        r.k: (r.v, r.tag)
+        for r in vt.read().where("k in (5, 6, 50)").collect()
+    }
+    assert got == {5: (-5, "x"), 6: (6, None), 50: (50, None)}
+    assert vt.count() == 100
 
 
 def _lambda_bodies(plan: str) -> list[str]:

@@ -1585,7 +1585,7 @@ def test_delete_rewrites_only_touched_files(spark, tmp_path):
     before = vt._state(1)
     low_file = before[0]   # ids 0..49 (append order is preserved)
     high_file = before[1]  # ids 50..99
-    v = vt.delete("id >= 90")
+    v = vt.delete("id >= 90", mode="rewrite")
     assert v == 2
     after = vt._state(v)
     assert low_file in after          # untouched file carried by name
@@ -1924,7 +1924,7 @@ def test_dml_aborts_on_concurrent_commit(spark, tmp_path):
     base = vt.latest_version()
     # the DML writer computes its rewrite against `base`...
     cond = vt._as_condition("id >= 90")
-    touched, untouched = vt._split_touched(base, cond)
+    touched, untouched, _ = vt._split_touched(base, cond)
     scan_t = vt._scan_files(touched)
     kept = vt._write_data_files(scan_t.where(~cond))
     cdc = vt._write_cdc_files(
@@ -2988,7 +2988,7 @@ def test_in_list_pruning_read_and_dml(spark, tmp_path):
     assert empty.count() == 0 and empty.columns == ["id", "v"]
     # DML: delete by key list rewrites only the touched files
     before = set(vt._state(vt.latest_version()))
-    v = vt.delete([("id", "in", [5, 250])])
+    v = vt.delete([("id", "in", [5, 250])], mode="rewrite")
     after = set(vt._state(v))
     assert len(before - after) == 2  # only the two covering files rewritten
     assert vt.read().count() == 398
@@ -3110,7 +3110,7 @@ def test_deletion_vector_interplay_dml_compact_restore_vacuum(
     vt.delete([("id", "<", 10)], mode="dv")
     v_dv = vt.latest_version()
     # UPDATE rewrites file 1 (ids 0..99): deleted rows must NOT resurrect
-    vt.update([("id", "<", 20)], {"v": "v + 1000"})
+    vt.update([("id", "<", 20)], {"v": "v + 1000"}, mode="rewrite")
     assert vt.read().where("id < 10").count() == 0
     assert vt.read().where("id = 15").collect()[0].v == 1015
     assert vt.detail()["dv_rows"] == 0  # the touched file's entry died
@@ -3136,6 +3136,24 @@ def test_deletion_vector_interplay_dml_compact_restore_vacuum(
     assert [
         f for f in _os.listdir(dv_dir) if f.endswith(".parquet")
     ] == []  # no retained version references a vector anymore
+
+
+def test_dv_update_of_vectored_file_keeps_masked_rows(spark, tmp_path):
+    """A vector-mode update of a file that already has a vector adds to
+    it: the earlier deleted rows stay masked, the updated rows' old
+    images are masked too, and the new images land in a fresh file."""
+    from pyspark.sql import functions as F
+
+    vt = VersionedTable(spark, str(tmp_path / "du"))
+    vt.overwrite(spark.range(100).withColumn("v", F.col("id")).coalesce(1))
+    (base,) = vt._state(vt.latest_version())
+    vt.delete([("id", "<", 10)])
+    v = vt.update([("id", "<", 20)], {"v": "v + 1000"})
+    assert base in vt._state(v)
+    assert vt._dv_at(v)[base]["rows"] == 20
+    assert vt.read().where("id < 10").count() == 0
+    assert vt.read().where("id = 15").collect()[0].v == 1015
+    assert vt.count() == vt.read().count() == 90
 
 
 def test_deletion_vector_merge_and_split_scan_exclude(spark, tmp_path):
@@ -3435,7 +3453,7 @@ def test_delete_rewrite_rebases_over_disjoint_append(spark, tmp_path):
         vt, "_write_data_files",
         lambda: other.append(spark.range(500, 520).coalesce(1)),
     )
-    vt.delete([("id", ">=", 90), ("id", "<", 100)])
+    vt.delete([("id", ">=", 90), ("id", "<", 100)], mode="rewrite")
     assert sorted(r.id for r in vt.read().collect()) == (
         list(range(90)) + list(range(500, 520))
     )
@@ -3453,7 +3471,175 @@ def test_generic_predicate_delete_still_aborts(spark, tmp_path):
         lambda: other.append(spark.range(500, 520).coalesce(1)),
     )
     with pytest.raises(VersionedTableError, match="stale snapshot"):
-        vt.delete("id >= 90")
+        vt.delete("id >= 90", mode="rewrite")
+
+
+def test_generic_predicate_dv_delete_still_aborts(spark, tmp_path):
+    """The vector-mode twin: a concurrent append landing while a
+    string-predicate delete stages its vector aborts the delete."""
+    root = str(tmp_path / "dgv")
+    vt = VersionedTable(spark, root)
+    other = VersionedTable(spark, root)
+    vt.overwrite(spark.range(100).coalesce(1))
+    _hook_once(
+        vt, "_write_dv_files",
+        lambda: other.append(spark.range(500, 520).coalesce(1)),
+    )
+    with pytest.raises(VersionedTableError, match="stale snapshot"):
+        vt.delete("id >= 90", mode="dv")
+    assert vt.read().count() == 120
+
+
+@pytest.mark.parametrize("overlap", [False, True])
+def test_dv_update_rebases_or_aborts_on_concurrent_append(
+    spark, tmp_path, overlap
+):
+    """Vector-mode UPDATE keeps update's file-level OCC: an append whose
+    rows cannot match the triple predicate rebases in (the base file
+    stays, masked); one that may match aborts."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / f"dvu{int(overlap)}")
+    vt = VersionedTable(spark, root)
+    other = VersionedTable(spark, root)
+    vt.overwrite(spark.range(100).select("id", F.lit(0).alias("v")).coalesce(1))
+    base_files = set(vt._state(0))
+    lo = 5 if overlap else 1000
+    _hook_once(
+        vt, "_write_dv_files",
+        lambda: other.append(
+            spark.range(lo, lo + 10).select("id", F.lit(0).alias("v"))
+            .coalesce(1)
+        ),
+    )
+    if overlap:
+        with pytest.raises(VersionedTableError, match="may match"):
+            vt.update([("id", "<", 10)], {"v": "1"}, mode="dv")
+        assert vt.read().where("v = 1").count() == 0
+        return
+    v = vt.update([("id", "<", 10)], {"v": "1"}, mode="dv")
+    assert base_files <= set(vt._state(v)), "the base file is masked"
+    assert sum(e["rows"] for e in vt._dv_at(v).values()) == 10
+    out = {r.id: r.v for r in vt.read().collect()}
+    assert len(out) == vt.count() == 110
+    assert all(v_ == (1 if i < 10 else 0) for i, v_ in out.items())
+
+
+@pytest.mark.parametrize("overlap", [False, True])
+def test_dv_merge_rebases_or_aborts_on_concurrent_append(
+    spark, tmp_path, overlap
+):
+    """Vector-mode MERGE keeps merge's OCC: an append outside the source
+    key envelope rebases in; one inside it aborts."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / f"dvm{int(overlap)}")
+    vt = VersionedTable(spark, root)
+    other = VersionedTable(spark, root)
+    vt.overwrite(
+        spark.range(100).select("id", F.lit("old").alias("v")).coalesce(1)
+    )
+    base_files = set(vt._state(0))
+    src = spark.range(10, 20).select("id", F.lit("new").alias("v"))
+    lo = 15 if overlap else 1000
+    _hook_once(
+        vt, "_write_dv_files",
+        lambda: other.append(
+            spark.range(lo, lo + 3)
+            .select("id", F.lit("concurrent").alias("v"))
+            .coalesce(1)
+        ),
+    )
+    if overlap:
+        with pytest.raises(VersionedTableError, match="may match|stale"):
+            vt.merge(src, ["id"], mode="dv")
+        assert vt.read().where("v = 'new'").count() == 0
+        return
+    v = vt.merge(src, ["id"], mode="dv")
+    assert base_files <= set(vt._state(v)), "the base file is masked"
+    assert sum(e["rows"] for e in vt._dv_at(v).values()) == 10
+    out = {r.id: r.v for r in vt.read().collect()}
+    assert len(out) == vt.count() == 103
+    assert all(out[i] == "new" for i in range(10, 20))
+    assert all(out[i] == "concurrent" for i in range(1000, 1003))
+    assert sum(v_ == "old" for v_ in out.values()) == 90
+
+
+@pytest.mark.parametrize("cap", ["DV_FILTER_MAX_ROWS", "DV_FILTER_MAX_FILES"])
+def test_dv_anti_join_fallback_matches_filter(spark, tmp_path, monkeypatch, cap):
+    """Past either cap the scan anti-joins the sidecars instead of
+    filtering bitmaps: reads, DML discovery and COUNT agree with the
+    filtered path."""
+    from as_etl_storage_spark.writers import versioned
+
+    vt = VersionedTable(spark, str(tmp_path / "dvf"))
+    vt.overwrite(spark.range(300).repartition(3))
+    vt.delete("id % 7 = 0", mode="dv")
+    want = sorted(r.id for r in vt.read().collect())
+    monkeypatch.setattr(versioned, cap, 0)
+    assert sorted(r.id for r in vt.read().collect()) == want
+    vt.update("id % 7 = 1", {"id": "id + 1000"}, mode="dv")
+    got = sorted(r.id for r in vt.read().collect())
+    assert got == sorted(i + 1000 if i % 7 == 1 else i for i in want)
+    assert vt.count() == len(want)
+
+
+def test_dv_read_cap_counts_whole_sidecars(spark, tmp_path, monkeypatch):
+    """One delete vectors every file into ONE sidecar. A read pruned to
+    one file masks few rows, but the driver would read the whole
+    sidecar: the row cap counts the sidecar's footer rows, so the read
+    anti-joins instead and never loads the positions on the driver."""
+    from as_etl_storage_spark.writers import versioned
+
+    vt = VersionedTable(spark, str(tmp_path / "dvc"))
+    for lo in range(0, 1000, 100):
+        df = spark.range(lo, lo + 100).coalesce(1)
+        if lo == 0:
+            vt.overwrite(df)
+        else:
+            vt.append(df)
+    v = vt.delete("id % 10 = 0")
+    dv = vt._dv_at(v)
+    assert len(dv) == 10
+    assert len({p for e in dv.values() for p in e["files"]}) == 1
+    prune = [("id", ">=", 300), ("id", "<", 400)]
+    versioned._dv_positions.cache_clear()
+    monkeypatch.setattr(versioned, "DV_FILTER_MAX_ROWS", 50)
+    assert sorted(r.id for r in vt.read(prune=prune).collect()) == [
+        i for i in range(300, 400) if i % 10
+    ]
+    assert versioned._dv_positions.cache_info().currsize == 0
+    monkeypatch.setattr(versioned, "DV_FILTER_MAX_ROWS", 100)
+    assert vt.read(prune=prune).count() == 90
+    assert versioned._dv_positions.cache_info().currsize == 1
+
+
+def test_vector_read_runs_no_extra_spark_job(spark, tmp_path):
+    """Merge-on-read costs no Spark job: a read of a table with a small
+    vector runs as many jobs as the same read before the delete — the
+    driver reads the positions and the scan filters them out (no
+    sidecar schema inference, no broadcast)."""
+    import time
+
+    vt = VersionedTable(spark, str(tmp_path / "dvj"))
+    vt.overwrite(spark.range(1000).coalesce(1))
+    sc = spark.sparkContext
+
+    def jobs(version):
+        group = f"dv_read_{time.monotonic_ns()}"
+        sc.setJobGroup(group, "read")
+        try:
+            vt.read(version_as_of=version).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    v = vt.delete("id % 10 = 0", mode="dv")
+    assert vt._dv_at(v), "the delete must leave a vector"
+    assert vt.read().count() == 900
+    assert jobs(v) == jobs(0)
 
 
 def test_merge_rebases_over_disjoint_append(spark, tmp_path):
@@ -5274,9 +5460,11 @@ def test_replace_where_interplay_rename_widen_dv_clone(spark, tmp_path):
 def test_merge_fuzz_against_python_model(spark, tmp_path):
     """Model-based fuzz of the full MERGE clause surface (clauses ×
     conditions × column-level SET × duplicate-key targets) against a
-    plain python model: after every seeded random merge the snapshot
-    must equal the model row-for-row, and the CDF delete/insert/update
-    counts must agree with the model's tallies."""
+    plain python model, with deletion vectors and with copy-on-write:
+    after every seeded random merge the snapshot must equal the model
+    row-for-row, and the CDF delete/insert/update counts must agree
+    with the model's tallies."""
+    import itertools
     import random
 
     rng = random.Random(7)
@@ -5289,8 +5477,8 @@ def test_merge_fuzz_against_python_model(spark, tmp_path):
     INS_CONDS = {None: lambda s: True, "a % 3 = 0": lambda s: s[1] % 3 == 0}
     BS_CONDS = {None: lambda t: True, "b > 50": lambda t: t[2] > 50}
 
-    for trial in range(4):
-        vt = VersionedTable(spark, str(tmp_path / f"mf{trial}"))
+    for trial, mode in itertools.product(range(4), ("dv", "rewrite")):
+        vt = VersionedTable(spark, str(tmp_path / f"mf{trial}{mode}"))
         # target rows: (k, a, b); duplicate keys allowed
         model = [
             (rng.randint(0, 9), rng.randint(0, 100), rng.randint(0, 100))
@@ -5349,13 +5537,14 @@ def test_merge_fuzz_against_python_model(spark, tmp_path):
                 when_not_matched_condition=ic,
                 when_not_matched_by_source_condition=bc,
                 when_matched_set=sset,
+                mode=mode,
             )
             got = sorted(
                 (r.k, r.a, r.b) for r in vt.read().collect()
             )
             want = sorted(new_model)
             assert got == want, (
-                f"trial {trial} step {_step}: clauses "
+                f"trial {trial} ({mode}) step {_step}: clauses "
                 f"(wm={wm}, mc={mc}, set={use_set}, wnm={wnm}, ic={ic}, "
                 f"wbs={wbs}, bc={bc})\n got {got}\nwant {want}"
             )
@@ -5363,6 +5552,56 @@ def test_merge_fuzz_against_python_model(spark, tmp_path):
             # res is None on a legal complete no-op — also covered: the
             # snapshot equality above already proves nothing changed
             del res
+            assert vt.count() == len(model)
+
+
+@pytest.mark.parametrize("mode", ["dv", "rewrite"])
+def test_update_fuzz_against_python_model(spark, tmp_path, mode):
+    """Model-based fuzz of UPDATE, with deletion vectors and with
+    copy-on-write: seeded random predicates and assignments over a
+    four-file table, so vectors accumulate until the per-file churn rule
+    rewrites a file. After every update the snapshot and the metadata
+    COUNT must equal the model, and the preimages must be exactly the
+    matched rows."""
+    import random
+
+    rng = random.Random(11)
+    preds = {
+        "k < 5": lambda r: r[0] < 5,
+        "a % 3 = 0": lambda r: r[1] % 3 == 0,
+        "b > 80": lambda r: r[2] > 80,
+    }
+    sets = {
+        "a = a + 1": ({"a": "a + 1"}, lambda r: (r[0], r[1] + 1, r[2])),
+        "swap": ({"a": "b", "b": "a"}, lambda r: (r[0], r[2], r[1])),
+    }
+    vt = VersionedTable(spark, str(tmp_path / "uf"))
+    model = [
+        (rng.randint(0, 9), rng.randint(0, 100), rng.randint(0, 100))
+        for _ in range(40)
+    ]
+    vt.overwrite(
+        spark.createDataFrame(model, "k: long, a: long, b: long")
+        .repartition(4)
+    )
+    for step in range(6):
+        pred, name = rng.choice(list(preds)), rng.choice(list(sets))
+        assignments, apply = sets[name]
+        matched = sorted(r for r in model if preds[pred](r))
+        v = vt.update(pred, assignments, mode=mode)
+        model = [apply(r) if preds[pred](r) else r for r in model]
+        got = sorted(tuple(r) for r in vt.read().collect())
+        assert got == sorted(model), (step, pred, name)
+        assert vt.count() == len(model)
+        if v is not None:
+            pre = vt.change_feed(v - 1, v).where(
+                "_change_type = 'update_preimage'"
+            )
+            assert sorted((r.k, r.a, r.b) for r in pre.collect()) == matched
+    vectored = any(
+        vt._dv_at(v) for v in range(1, vt.latest_version() + 1)
+    )
+    assert vectored == (mode == "dv")
 
 
 def test_vacuum_dry_run_lists_without_deleting(spark, tmp_path):
@@ -5413,7 +5652,7 @@ def test_describe_history_records_operation_parameters(spark, tmp_path):
 
     vt = VersionedTable(spark, str(tmp_path / "opp"))
     vt.overwrite(spark.range(100).withColumn("v", F.col("id")))    # v0
-    vt.delete([("id", "<", 10)])                                   # v1
+    vt.delete([("id", "<", 10)], mode="rewrite")                   # v1
     vt.delete("id >= 95", mode="dv", dv_rewrite_fraction=2.0)      # v2
     vt.update("id = 50", {"v": "v + 1"})                           # v3
     vt.merge(
@@ -5434,6 +5673,34 @@ def test_describe_history_records_operation_parameters(spark, tmp_path):
     assert rows[4]["when_matched_condition"] == "source.v > target.v"
     assert rows[5]["target_file_bytes"] == 1 << 20
     assert rows[6]["restored_version"] == 3
+
+
+def test_describe_history_records_dml_mode(spark, tmp_path):
+    """Every row-level DML records the mode it ran in: deletion vectors
+    by default, copy-on-write when asked; an unknown mode is refused
+    before anything runs."""
+    from pyspark.sql import functions as F
+
+    vt = VersionedTable(spark, str(tmp_path / "dhm"))
+    vt.overwrite(spark.range(100).withColumn("v", F.col("id")).coalesce(1))
+    vt.update("id = 5", {"v": "0"})                                # v1
+    vt.merge(
+        spark.range(10, 12).withColumn("v", F.lit(0)), ["id"],
+        mode="rewrite",
+    )                                                              # v2
+    vt.delete("id = 50")                                           # v3
+    vt.replace_where(
+        spark.range(60, 61).withColumn("v", F.lit(0)),
+        [("id", "=", 60)],
+        mode="rewrite",
+    )                                                              # v4
+    modes = {
+        r["version"]: r["params"].get("mode") for r in vt.describe_history()
+    }
+    assert modes == {0: None, 1: "dv", 2: "rewrite", 3: "dv", 4: "rewrite"}
+    with pytest.raises(VersionedTableError, match="mode must be"):
+        vt.update("id = 1", {"v": "1"}, mode="cow")
+    assert vt.latest_version() == 4
 
 
 # --------------------------------------------------- generated columns ---
@@ -5838,16 +6105,17 @@ def test_identity_column_declaration_rules(spark, tmp_path):
 
 
 def test_replace_where_fuzz_against_python_model(spark, tmp_path):
-    """Model-based fuzz of replace_where: seeded random tables, random
-    triple-form slices and random replacement frames (always inside the
-    slice) — after every commit the snapshot must equal
-    rows(NOT predicate) ∪ replacement, and the CDF delete set must be
-    exactly rows(predicate)."""
+    """Model-based fuzz of replace_where, with deletion vectors and with
+    copy-on-write: seeded random tables, random triple-form slices and
+    random replacement frames (always inside the slice) — after every
+    commit the snapshot must equal rows(NOT predicate) ∪ replacement,
+    and the CDF delete set must be exactly rows(predicate)."""
+    import itertools
     import random
 
     rng = random.Random(13)
-    for trial in range(3):
-        vt = VersionedTable(spark, str(tmp_path / f"rwf{trial}"))
+    for trial, mode in itertools.product(range(3), ("dv", "rewrite")):
+        vt = VersionedTable(spark, str(tmp_path / f"rwf{trial}{mode}"))
         model = [
             (k, rng.randint(0, 99))
             for k in rng.sample(range(0, 200), rng.randint(8, 24))
@@ -5873,11 +6141,12 @@ def test_replace_where_fuzz_against_python_model(spark, tmp_path):
                 if new
                 else spark.createDataFrame([], "k: long, v: long"),
                 pred,
+                mode=mode,
             )
             want = sorted(kept + new)
             got = sorted((r.k, r.v) for r in vt.read().collect())
             assert got == want, (
-                f"trial {trial} step {_step} slice [{lo},{hi}) "
+                f"trial {trial} ({mode}) step {_step} slice [{lo},{hi}) "
                 f"new={new}\n got {got}\nwant {want}"
             )
             feed = vt.change_feed(from_version=v - 1, to_version=v)
@@ -5889,8 +6158,9 @@ def test_replace_where_fuzz_against_python_model(spark, tmp_path):
                 (r.k, r.v)
                 for r in feed.where("_change_type = 'insert'").collect()
             )
-            assert dels == sorted(deleted), (trial, _step, dels, deleted)
-            assert ins == sorted(new), (trial, _step, ins, new)
+            assert dels == sorted(deleted), (trial, mode, _step, dels, deleted)
+            assert ins == sorted(new), (trial, mode, _step, ins, new)
+            assert vt.count() == len(want)
             model = want
 
 
@@ -7004,7 +7274,7 @@ def test_bloom_prunes_keyed_dml_and_compact_scope(spark, tmp_path):
     vt = _bloom_table(spark, str(tmp_path / "t"))
     before = set(vt._state(vt.latest_version()))
     key = "key-000006"  # bucket i=2 (6 = 1*4 + 2)
-    vt.delete([("k", "=", key)])
+    vt.delete([("k", "=", key)], mode="rewrite")
     after = set(vt._state(vt.latest_version()))
     # exactly one file rewritten: the others carried byte-identical
     assert len(before - after) == 1, (before - after)
@@ -8077,10 +8347,29 @@ def test_merge_commits_no_empty_insert_file(spark, tmp_path):
     vt = VersionedTable(spark, str(tmp_path / "t"))
     vt.overwrite(spark.range(10).selectExpr("id AS k", "id AS v").coalesce(1))
     src = spark.createDataFrame([(1, 100), (50, 500)], "k long, v long")
-    v = vt.merge(src, on=["k"], when_not_matched_condition="v < 0")
+    v = vt.merge(
+        src, on=["k"], when_not_matched_condition="v < 0", mode="rewrite"
+    )
     stats = vt._stats_at(v)
     rows = [stats[f]["#rows"] for f in vt._state(v)]
     assert 0 not in rows and sum(rows) == 10
+    assert sorted(r.v for r in vt.read().where("k = 1").collect()) == [100]
+
+
+def test_dv_merge_commits_no_empty_insert_file(spark, tmp_path):
+    """The vector-mode twin: the key-matched row is masked in place, its
+    new image lands in a fresh file, and the empty insert frame's 0-row
+    file is deleted instead of committed."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.overwrite(spark.range(10).selectExpr("id AS k", "id AS v").coalesce(1))
+    (base,) = vt._state(vt.latest_version())
+    src = spark.createDataFrame([(1, 100), (50, 500)], "k long, v long")
+    v = vt.merge(src, on=["k"], when_not_matched_condition="v < 0")
+    stats = vt._stats_at(v)
+    rows = [stats[f]["#rows"] for f in vt._state(v)]
+    assert 0 not in rows and sorted(rows) == [1, 10]
+    assert vt._dv_at(v)[base]["rows"] == 1
+    assert vt.count() == 10
     assert sorted(r.v for r in vt.read().where("k = 1").collect()) == [100]
 
 
