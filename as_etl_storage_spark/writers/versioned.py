@@ -56,6 +56,7 @@ from __future__ import annotations
 import functools
 import itertools
 import json
+import operator
 import os
 import re
 import time
@@ -236,6 +237,11 @@ class _Change(NamedTuple):
     insert: DataFrame | None = None
     #: change-data frames (Delta CDF), each with its ``_change_type``
     cdf: list = []
+
+
+#: the comparison each ``(col, op, literal)`` triple names
+_COMPARE = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+            ">": operator.gt, ">=": operator.ge}
 
 
 def _union_all(frames: list) -> DataFrame | None:
@@ -4130,7 +4136,8 @@ class VersionedTable:
         Readers of prior versions are unaffected (snapshot isolation).
         On a row-tracked table kept rows keep their ids (the target side
         scans with ``_row_id``) and incoming rows allocate fresh ones —
-        replaced rows are NEW rows, their predecessors' ids retire."""
+        replaced rows are NEW rows, their predecessors' ids retire. A
+        batch holding one key twice raises (the file sink's check)."""
         base = self.latest_version()
         if base is None:
             return self.overwrite(df)
@@ -4148,6 +4155,9 @@ class VersionedTable:
             df, self._schema_at(base), False, "replace",
             generated=self._generated_at(base),
         )
+        from as_etl_storage_spark.writers.writer import check_unique_keys
+
+        check_unique_keys(incoming, merge_keys, VersionedTableError)
         pb = self._partition_by_at(base)
         mapping = self._mapping_at(base)
         pinned = None
@@ -4242,6 +4252,10 @@ class VersionedTable:
         return self._as_condition(predicate), files, None
 
     _DV_POS = "__vt_pos"
+    # a merge pair's source row (a struct) and its clause outcome: TRUE
+    # applies, FALSE carries, NULL (second pass) matched no source key
+    _SRC = "__vt_src"
+    _HIT = "__vt_hit"
 
     # names reserved for internal row identity (__vt_*) and the
     # manifest's per-file scalar slots (#rows/#bytes) — ONE definition,
@@ -4251,6 +4265,8 @@ class VersionedTable:
             "__vt_file",
             "__vt_pos",
             "__vt_upd",
+            "__vt_src",
+            "__vt_hit",
             # identity-allocation temp columns (_with_identity_allocation):
             # a user column by these names would be silently clobbered by
             # withColumn and then dropped from the written rows
@@ -4623,14 +4639,17 @@ class VersionedTable:
         leave (``leave``) and stay (``keep``), and which new rows arrive
         — the changed rows' new images and the inserts — plus the change
         rows. ``matched`` is phase 1's pinned scan of the rows that
-        leave, with their (file, position) (None in copy-on-write mode)
-        — the kernel takes it over and unpersists it: the scan
-        ``build`` gets holds the rewritten
+        leave, with their (file, position) (None in copy-on-write mode),
+        or a merge's pinned match pairs (both modes), which add each
+        pair's clause outcome and source row — the kernel takes it over
+        and unpersists it: the scan ``build`` gets holds the rewritten
         files whole but only these rows of vectored files, whose other
-        rows stay in place and are never read again. When any file is
-        vectored the scan carries each row's (file, position), which
-        ``leave`` keeps. The kernel writes the leaving rows' positions
-        of vectored files as one vector sidecar, the kept rows of
+        rows stay in place and are never read again. With pairs, each
+        rewritten row is joined to its pair by (file, position) (Delta's
+        second pass). When any file is vectored, or pairs are given, the
+        scan carries each row's (file, position), which ``leave`` keeps.
+        The kernel writes the leaving rows' positions of vectored files
+        as one vector sidecar, the kept rows of
         rewritten files plus the new images as fresh files, and the
         inserts as fresh files.
         ``allocate(df)`` pins ``df`` and assigns ``idmap``'s identity
@@ -4673,6 +4692,11 @@ class VersionedTable:
                     vectored[f] = n
         rewrite = [f for f in touched if f not in vectored]
         ident = (self._FILE_NAME, self._DV_POS)
+        # a merge's pinned pairs: each one's clause outcome and source row
+        pair_cols = [
+            c for c in (self._HIT, self._SRC)
+            if matched is not None and c in matched.columns
+        ]
         pinned: list[DataFrame] = []
 
         def allocate(df: DataFrame) -> DataFrame:
@@ -4716,12 +4740,22 @@ class VersionedTable:
         # rewritten, that is phase 1's pinned rows as they are
         scan_t = matched if touched else None
         if rewrite:
+            scan = self._dml_scan(
+                base, rewrite, evolved_schema,
+                keep_identity=bool(vectored or pair_cols),
+            )
+            if pair_cols:
+                # Delta's second pass: each rewritten row takes its pair's
+                # columns by (file, position) — NULL where it matched
+                # nothing — so ``build`` tags every row from one frame
+                scan = scan.join(
+                    matched.select(*ident, *pair_cols),
+                    on=list(ident),
+                    how="left",
+                )
             scan_t = _union_all(
                 [
-                    self._dml_scan(
-                        base, rewrite, evolved_schema,
-                        keep_identity=bool(vectored),
-                    ),
+                    scan,
                     matched.where(
                         F.col(self._FILE_NAME).isin(
                             [os.path.basename(f) for f in vectored]
@@ -5086,68 +5120,91 @@ class VersionedTable:
     def _matched_pairs(
         self, matched_t: DataFrame, source: DataFrame, on: list[str]
     ) -> tuple[DataFrame, list[str]]:
-        """Each matched target row paired with its (unique, cardinality-
-        checked) source row, carrying ``target``/``source`` STRUCT
-        columns so clause conditions can reference both sides by name —
-        ``source.ts > target.ts`` — exactly Delta's merge aliases,
-        restated as struct field access so the whole condition stays in
-        codegen. The flat columns remain the TARGET side (bare names in
-        a condition mean the target row). Returns (pair frame, the data
-        column list); a (file, position) identity the scan carries stays
-        flat on the pair frame, outside both aliases."""
+        """MERGE's match: each target row of ``matched_t`` paired with
+        the source row of its key (one inner equi-join), the source row
+        riding as ONE struct ``__vt_src``. Unless a table column takes
+        the name (``merge`` then refuses conditions and SET maps), the
+        pairs carry Delta's ``target``/``source`` aliases as structs, so
+        ``source.ts > target.ts`` stays in codegen and Catalyst prunes
+        the scan to the columns it reads. Flat columns (bare names) are
+        the TARGET side, a (file, position) identity among them.
+        Returns (pair frame, the data column list)."""
         cols = self._data_columns(matched_t)
+        pair = matched_t.join(
+            source.select(
+                *on,
+                F.struct(*[F.col(c) for c in source.columns]).alias(
+                    self._SRC
+                ),
+            ),
+            on=on,
+            how="inner",
+        )
         if "source" in cols or "target" in cols:
-            raise VersionedTableError(
-                "conditional merge reserves 'source'/'target' as struct "
-                "aliases for clause conditions; rename those columns "
-                "or use an unconditional clause"
-            )
-        tgt = matched_t.withColumn(
+            return pair, cols
+        return self._with_aliases(pair, cols), cols
+
+    def _with_aliases(self, df: DataFrame, cols: list[str]) -> DataFrame:
+        """``df`` (pairs: flat target ``cols`` plus ``__vt_src``) with
+        the ``target``/``source`` struct aliases clause expressions
+        reference."""
+        return df.withColumn(
             "target", F.struct(*[F.col(c) for c in cols])
-        )
-        src = source.select(
-            *on,
-            F.struct(*[F.col(c) for c in source.columns]).alias("source"),
-        )
-        return tgt.join(src, on=on, how="inner"), cols
+        ).withColumn("source", F.col(self._SRC))
 
     def _matched_split(
         self,
-        matched_t: DataFrame,
-        source: DataFrame,
-        on: list[str],
-        condition,
+        tagged: DataFrame,
         update_set: dict[str, str] | None = None,
         generated: dict[str, str] | None = None,
         identity_cols: list[str] | None = None,
-    ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-        """Split the matched target rows by a clause condition:
-        (apply_pre, updated, carry) — the rows the clause applies to
-        (target side, the CDF preimages), their source-valued
-        replacements (one per target row), and the condition-FALSE rows
-        carried unchanged (None when the clause is unconditional: every
-        matched row applies). A NULL condition outcome means "clause
-        does not apply" (SQL: only TRUE matches), so those rows carry.
+    ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+        """Split the key-matched rows of a tagged merge frame (target
+        rows with their pair's ``__vt_hit`` and ``__vt_src``) by the
+        clause outcome, with no join: (apply_pre, updated, carry) — the
+        rows the clause applies to (the CDF preimages), their
+        replacements (one per target row: duplicate-key targets keep
+        their multiplicity; None for a matched delete) and the
+        condition-FALSE (or NULL: SQL matches only TRUE) rows carried.
 
         ``update_set`` (Delta's column-level ``whenMatchedUpdate(set=
         {...})``): col → SQL expression over the ``source.``/``target.``
         aliases (bare names = target side); SET columns take the
         expression's value, every other column KEEPS the target's —
-        whole-row replacement (UpdateAll) when None.
-
-        The plain unconditional path never builds the struct aliases
-        (so the 'source'/'target' name reservation only applies when a
-        condition or SET map actually needs them): per-target-row
-        multiplicity survives the keys-only projection into the inner
-        join either way — source keys are unique among matched rows
-        (cardinality-checked), so each target row meets exactly one
-        source row. A (file, position) identity on ``matched_t`` rides
-        the target-side frames (apply_pre, carry), never the updated
-        rows."""
-        cols = self._data_columns(matched_t)
-        ident = [c for c in matched_t.columns if c not in cols]
-
-        def _regen(df: DataFrame) -> DataFrame:
+        whole-row replacement (UpdateAll) when None, except identity
+        columns (``_row_id`` on a row-tracked table among them), whose
+        value lives on the TARGET row (the source carries NULL slots by
+        contract). The (file, position) identity rides the target-side
+        frames (apply_pre, carry), never the updated rows."""
+        cols = self._data_columns(tagged)
+        ident = [
+            c for c in (self._FILE_NAME, self._DV_POS) if c in tagged.columns
+        ]
+        hit = F.col(self._HIT)
+        applied = tagged.where(hit)
+        if self._SRC not in tagged.columns:
+            updated = None  # a matched delete pins no source row
+        elif update_set is None:
+            id_lower = {c.lower() for c in (identity_cols or ())}
+            updated = applied.select(
+                *[
+                    (
+                        F.col(c)
+                        if c.lower() in id_lower
+                        else F.col(self._SRC).getField(c)
+                    ).alias(c)
+                    for c in cols
+                ]
+            )
+        else:
+            updated = self._with_aliases(applied, cols).select(
+                *[
+                    F.expr(update_set[c]).alias(c)
+                    if c in update_set
+                    else F.col(c)
+                    for c in cols
+                ]
+            )
             # column-level SET can change a generated column's
             # DEPENDENCY while keeping the target's stale generated
             # value — recompute from the post-SET row (Delta recomputes
@@ -5155,56 +5212,19 @@ class VersionedTable:
             # are refused upstream, so this is well-defined). Whole-row
             # updates take the SOURCE's values, already validated at
             # align.
-            if update_set is None or not generated:
-                return df
-            for gname, gexpr in sorted(generated.items()):
-                df = df.withColumn(gname, F.expr(gexpr))
-            return df
-
-        id_lower = {c.lower() for c in (identity_cols or ())}
-        if condition is None and update_set is None and not id_lower:
-            updated = (
-                matched_t.select(*on)
-                .join(source, on=on, how="inner")
-                .select(*cols)
-            )
-            return matched_t, updated, None
-        pair, _ = self._matched_pairs(matched_t, source, on)
-        if update_set is None:
-            # whole-row update takes the SOURCE's values — except
-            # identity columns, whose allocated value lives on the
-            # TARGET row (the source carries NULL slots by contract)
-            updated_cols = [
-                F.col(
-                    f"target.{c}" if c.lower() in id_lower else f"source.{c}"
-                ).alias(c)
-                for c in cols
-            ]
-        else:
-            updated_cols = [
-                F.expr(update_set[c]).alias(c)
-                if c in update_set
-                else F.col(f"target.{c}").alias(c)
-                for c in cols
-            ]
-        if condition is None:
-            return (
-                matched_t,
-                _regen(pair.select(*updated_cols)),
-                None,
-            )
-        cond = self._as_condition(condition)
+            for gname, gexpr in sorted((generated or {}).items()):
+                updated = updated.withColumn(gname, F.expr(gexpr))
         return (
-            pair.where(cond).select(*cols, *ident),
-            _regen(pair.where(cond).select(*updated_cols)),
-            pair.where(~cond).select(*cols, *ident),
+            applied.select(*cols, *ident),
+            updated,
+            tagged.where(~hit).select(*cols, *ident),
         )
 
     def _data_columns(self, df: DataFrame) -> list[str]:
-        """``df``'s columns without the scan's (file, position) identity."""
-        return [
-            c for c in df.columns if c not in (self._FILE_NAME, self._DV_POS)
-        ]
+        """``df``'s columns without the scan's (file, position) identity
+        and a merge pair's source row and clause outcome."""
+        internal = (self._FILE_NAME, self._DV_POS, self._SRC, self._HIT)
+        return [c for c in df.columns if c not in internal]
 
     def merge(
         self,
@@ -5230,9 +5250,11 @@ class VersionedTable:
         clause): ``'delete'`` removes target rows whose key matches NO
         source row — with update+insert this makes MERGE a full mirror
         of the source (the CDC-sync / retention primitive); None (the
-        default) leaves them. ``replace()`` is exactly
-        ``merge(df, keys)`` minus the change feed — kept for the narrow
-        writer surface.
+        default) leaves them. ``replace()`` is NOT this upsert: it
+        removes every target row holding an incoming key (rather than
+        updating each one), retires their row ids on a row-tracked
+        table, records no change files and rewrites the whole table.
+
 
         The by-source clause changes the cost shape: every target file
         may hold unmatched rows, so nothing can be carried by name —
@@ -5244,8 +5266,10 @@ class VersionedTable:
         merge never saw, so any concurrent commit aborts it.
 
         File-pruned like delete/update: touched files are those holding a
-        KEY-matched target row (found with one semi-join scan that also
-        counts them); only they change, inserts land in fresh files,
+        KEY-matched target row the matched clause applies to (found by
+        ONE pinned join of the source with the candidate target rows,
+        whose aggregate also counts them; see :meth:`_merge_with_keys`);
+        only they change, inserts land in fresh files,
         everything else is carried by name with stats reused. ``mode``
         is :meth:`delete`'s: with ``'dv'`` (the default) the matched rows
         a clause applies to are masked in place by a deletion vector and
@@ -5394,6 +5418,14 @@ class VersionedTable:
                 f"merge keys {sorted(missing)} not in columns {target.columns}"
             )
         merged_cols = list(target.columns) + extras
+        if (
+            when_matched_condition is not None or when_matched_set is not None
+        ) and {"source", "target"} & set(merged_cols):
+            raise VersionedTableError(
+                "conditional merge reserves 'source'/'target' as struct "
+                "aliases for clause conditions; rename those columns "
+                "or use an unconditional clause"
+            )
         if when_matched_set is not None:
             unknown = sorted(set(when_matched_set) - set(merged_cols))
             if unknown:
@@ -5461,31 +5493,20 @@ class VersionedTable:
         )
         mapping = self._mapping_at(base)
         # MATERIALIZE the aligned source: merge evaluates it across
-        # several jobs (envelope agg, discovery, rewrite, CDC, insert
-        # anti-join) — a non-deterministic source (rand-filtered, fresh
-        # sample, re-read from a mutating location) re-evaluated per job
-        # could classify a key "matched" in discovery and "not matched"
-        # in the insert anti-join, silently losing or duplicating rows.
+        # several jobs (envelope agg, the match, the insert anti-join) —
+        # a non-deterministic source (rand-filtered, fresh sample,
+        # re-read from a mutating location) re-evaluated per job could
+        # classify a key "matched" in discovery and "not matched" in the
+        # insert anti-join, silently losing or duplicating rows.
         # persist() pins one evaluation for every downstream job.
         source = source.persist()
-        # the source key frame feeds every downstream join as a
-        # semi/anti/broadcast side — none of which care about key
-        # multiplicity — so it is a pure PROJECTION of the persisted
-        # source. The former .distinct().persist() added a full shuffle
-        # plus its AQE job barriers per merge and bought nothing: hash
-        # builds dedup keys anyway, and min/max over duplicates equals
-        # min/max over distinct (r18 commit-protocol trim).
-        src_keys = source.select(*on)
         files = self._state(base)
-        pb = self._partition_by_at(base)
         # bound every target-side job by the source's key envelope (one
         # small MAP-SIDE aggregate over the persisted source — no
         # distinct, no shuffle beyond the single-row combine): a target
         # file whose bounds fall outside [min, max] on any key column
-        # cannot hold a KEY match, so it is never opened — not by the
-        # discovery scan, not by the cardinality check, not by the
-        # insert anti-join. Delta's merge pushes the same min/max into
-        # its target scan.
+        # cannot hold a KEY match, so the match never opens it. Delta's
+        # merge pushes the same min/max into its target scan.
         with self._job_label("merge:envelope"):
             env = source.agg(
                 *[
@@ -5509,23 +5530,6 @@ class VersionedTable:
             if triples
             else files
         )
-        # keys of the candidate files ARE the matchable target keys: a
-        # key in a pruned file lies outside the envelope on some column
-        # and can equal no source key. NOT deduplicated: every consumer
-        # is a semi/anti/hash-build side where key multiplicity is
-        # irrelevant (the hash build dedups), and the distinct's shuffle
-        # cost a full AQE stage cascade per merge (r18 trim); the persist
-        # still pins one candidate-file key scan for all consumers
-        cand_keys = (
-            self._scan_files(
-                candidates, self._scan_schema(base), self._dv_at(base),
-                mapping=mapping, partition_by=pb,
-            )
-            .select(*on)
-            .persist()
-            if candidates
-            else target.limit(0).select(*on)
-        )
         try:
             return self._merge_with_keys(
                 source,
@@ -5534,9 +5538,6 @@ class VersionedTable:
                 when_not_matched,
                 base,
                 files,
-                pb,
-                src_keys,
-                cand_keys,
                 candidates,
                 triples,
                 when_not_matched_by_source,
@@ -5550,7 +5551,6 @@ class VersionedTable:
             )
         finally:
             source.unpersist()
-            cand_keys.unpersist()
 
     def _merge_with_keys(
         self,
@@ -5560,13 +5560,10 @@ class VersionedTable:
         when_not_matched: str | None,
         base: int,
         files: list[str],
-        pb: list[str],
-        src_keys: DataFrame,
-        cand_keys: DataFrame,
         candidates: list[str],
-        envelope: list[tuple[str, str, object]] | None = None,
-        when_not_matched_by_source: str | None = None,
-        mapping: dict[str, str] | None = None,
+        envelope: list[tuple[str, str, object]],
+        when_not_matched_by_source: str | None,
+        mapping: dict[str, str],
         when_matched_condition=None,
         when_not_matched_condition=None,
         when_not_matched_by_source_condition=None,
@@ -5574,23 +5571,27 @@ class VersionedTable:
         evolved_schema: dict | None = None,
         mode: str = "dv",
     ) -> int | None:
-        """Classify the target files, then hand them to
-        :meth:`_rewrite_commit`. Touched files are those holding a
-        KEY-matched target row (narrowed by a matched condition); the
-        discovery counts each file's matched rows, which are the rows
-        the matched clause removes from it.
+        """Pin the match, classify the target files from it, then hand
+        them to :meth:`_rewrite_commit` (Delta's two-pass MERGE). The
+        match is ONE inner join of the source with the candidate target
+        rows (:meth:`_matched_pairs`), pinned with each pair's (file,
+        position) and clause outcome; every later step reads it. One
+        aggregate counts each file's pairs and applying rows — a target
+        row with two pairs is the duplicate-key violation — and the
+        inserts are the source rows whose key no pair holds (every key
+        match blocks an insert). Vector-mode pairs carry every target
+        column, so a vectored file's leaving rows, images and change
+        rows come from them; copy-on-write pairs stay column-pruned.
+        Touched files hold a row the matched clause applies to: a file
+        whose key matches are all condition-false is carried by name.
 
-        With ``when_not_matched_by_source='delete'`` every target file
-        may hold doomed unmatched rows, so nothing is carried by name:
-        files outside the candidate set, or holding no key match,
-        contain ONLY doomed rows — they are dropped WHOLESALE (read once
-        for their CDF delete rows, never rewritten); only key-matched
-        files rewrite. A by-source CONDITION disables the wholesale drop
-        (an unmatched row survives unless the condition says otherwise),
-        so every file is touched. The by-source read set is the whole
-        table, so it commits with the abort-on-anything conflict rule."""
-        if mapping is None:
-            mapping = self._mapping_at(base)
+        With ``when_not_matched_by_source='delete'`` every file may hold
+        doomed unmatched rows, so nothing is carried by name: files with
+        no key match hold ONLY doomed rows and are dropped WHOLESALE
+        (read once for their CDF delete rows); only key-matched files
+        rewrite. A by-source CONDITION touches every file. The by-source
+        read set is the whole table, so it commits with the
+        abort-on-anything conflict rule."""
         # the schema the REWRITE side must land under: when the merge
         # evolves the schema (merge_schema + source extras), touched
         # files are rewritten with the new column null-filled for kept
@@ -5608,234 +5609,248 @@ class VersionedTable:
             if when_not_matched_by_source_condition is not None
             else None
         )
-        # ONE discovery collect: the touched-file names plus the
-        # cardinality rule's probe (among KEY-matched rows, a duplicated
-        # source key means one target row has two candidate
-        # replacements). They are independent subtrees over the same
-        # persisted key frames, so the fused probe costs rows (0 or 1),
-        # not a separate action
-        probes: list[DataFrame] = []
-        matched = None
-        if candidates and bcond is None and (
-            by_source or when_matched is not None
-        ):
-            disc = self._dml_scan(
-                base, candidates, evolved_schema, keep_identity=True
+        pairs = None
+        if candidates:
+            pair, cols = self._matched_pairs(
+                self._dml_scan(
+                    base, candidates, evolved_schema, keep_identity=True
+                ),
+                source,
+                on,
             )
-            if when_matched_condition is not None and not by_source:
-                # condition-narrowed discovery: a file whose key matches
-                # are all condition-false holds nothing the clause
-                # applies to — carried by name, never rewritten (Delta
-                # evaluates the full match condition in its touched-file
-                # scan for the same reason). By-source must still
-                # rewrite such a file: its unmatched rows are doomed
-                pair_c, cols = self._matched_pairs(disc, source, on)
-                disc = pair_c.where(
-                    self._as_condition(when_matched_condition)
-                ).select(*cols, self._FILE_NAME, self._DV_POS)
-            else:
-                disc = disc.join(src_keys, on=on, how="left_semi")
-            if mode == "dv":
-                # as _split_touched(pin=True): the rows the matched
-                # clause removes stay pinned, and a vectored file
-                # contributes only these to the kernel (no second scan)
-                matched = disc = disc.persist()
-            probes.append(disc.groupBy(self._FILE_NAME).count())
-        if when_matched is not None and candidates:
-            probes.append(
-                source.join(cand_keys, on=on, how="left_semi")
-                .groupBy(*on)
-                .count()
-                .where(F.col("count") > 1)
-                .limit(1)
-                .select(
-                    F.lit("__dup__").alias(self._FILE_NAME),
-                    F.col("count"),
-                )
-            )
-        hits: dict[str, int] = {}
-        if probes:
-            try:
+            pairs = pair.select(
+                *(cols if mode == "dv" else on),
+                self._FILE_NAME,
+                self._DV_POS,
+                *([self._SRC] if when_matched == "update" else []),
+                (
+                    F.lit(True)
+                    if when_matched_condition is None
+                    else self._as_condition(when_matched_condition)
+                ).alias(self._HIT),
+            ).persist()
+        try:
+            hits: dict[str, int] = {}
+            if pairs is not None and (
+                when_matched is not None or by_source
+            ):
                 with self._job_label("merge:discovery"):
-                    t_rows = _union_all(probes).collect()
-                hits = {r[0]: r[1] for r in t_rows}
-                if "__dup__" in hits:
+                    per_file = (
+                        pairs.groupBy(self._FILE_NAME)
+                        .agg(
+                            F.count_if(self._HIT).alias("applies"),
+                            F.count("*").alias("pairs"),
+                            F.count_distinct(self._DV_POS).alias("rows"),
+                        )
+                        .collect()
+                    )
+                if when_matched is not None and any(
+                    r["pairs"] > r["rows"] for r in per_file
+                ):
                     raise VersionedTableError(
                         "merge source has duplicate keys among matched "
                         "rows — a target row would match multiple source "
                         "rows; de-duplicate the source on the merge keys "
                         "first"
                     )
-            except BaseException:
-                if matched is not None:
-                    matched.unpersist()
-                raise
-        if by_source and bcond is not None:
-            touched, untouched, dropped = dict.fromkeys(files), [], []
-        else:
-            # by-source: a touched file also loses its unmatched rows,
-            # which the discovery did not count — it is rewritten
-            touched = {
-                f: None if by_source else hits[os.path.basename(f)]
-                for f in files
-                if os.path.basename(f) in hits
-            }
-            rest = [f for f in files if os.path.basename(f) not in hits]
-            untouched, dropped = ([], rest) if by_source else (rest, [])
-        inserts = None
-        if when_not_matched == "insert":
-            inserts = source.join(cand_keys, on=on, how="left_anti")
-            if when_not_matched_condition is not None:
-                # narrows the insert clause: source rows failing it are
-                # dropped, not inserted (bare names = source columns)
-                inserts = inserts.where(
-                    self._as_condition(when_not_matched_condition)
+                # by-source: a file with any key match also loses its
+                # unmatched rows, which are not counted — it is rewritten
+                hits = {
+                    r[self._FILE_NAME]: None if by_source else r["applies"]
+                    for r in per_file
+                    if by_source or r["applies"]
+                }
+            if by_source and bcond is not None:
+                touched, untouched, dropped = dict.fromkeys(files), [], []
+            else:
+                touched = {
+                    f: hits[os.path.basename(f)]
+                    for f in files
+                    if os.path.basename(f) in hits
+                }
+                rest = [f for f in files if f not in touched]
+                untouched, dropped = ([], rest) if by_source else (rest, [])
+            inserts = None
+            if when_not_matched == "insert":
+                inserts = (
+                    source
+                    if pairs is None
+                    else source.join(
+                        pairs.select(*on), on=on, how="left_anti"
+                    )
                 )
-        if not touched and not dropped and (
-            inserts is None or inserts.isEmpty()
-        ):
-            # the isEmpty() probe (a full anti-join job) runs only when
-            # it decides whether the merge commits at all: beside a
-            # rewrite, an empty insert stages a 0-row file the kernel
-            # drops for free
-            if matched is not None:
-                matched.unpersist()
-            return None  # nothing matched AND nothing new
-        cons = self._constraints_at(base)
-        pt = (
-            (self._ROW_ID,)
-            if any(sp.get("hidden") for sp in idmap.values())
-            else ()
-        )
+                if when_not_matched_condition is not None:
+                    # narrows the insert clause: source rows failing it
+                    # are dropped, not inserted (bare names = source
+                    # columns)
+                    inserts = inserts.where(
+                        self._as_condition(when_not_matched_condition)
+                    )
+            if not touched and not dropped and (
+                inserts is None or inserts.isEmpty()
+            ):
+                # the isEmpty() probe (a full anti-join job) runs only
+                # when it decides whether the merge commits at all:
+                # beside a rewrite, an empty insert stages a 0-row file
+                # the kernel drops for free
+                return None  # nothing matched AND nothing new
+            cons = self._constraints_at(base)
+            pt = (
+                (self._ROW_ID,)
+                if any(sp.get("hidden") for sp in idmap.values())
+                else ()
+            )
 
-        def _build(scan_t, allocate):
-            cdf: list[DataFrame] = []
-            leave: list[DataFrame] = []
-            keep: list[DataFrame | None] = []
-            images = None
-            if scan_t is not None:
-                kept = scan_t.join(src_keys, on=on, how="left_anti")
-                if by_source:
-                    # unmatched rows in touched files go — unless a
-                    # by-source condition spares them
-                    doomed = kept if bcond is None else kept.where(bcond)
-                    leave.append(doomed)
+            def _build(scan_t, allocate):
+                # scan_t: the tagged rows — rewritten files whole (the
+                # second pass), vectored files' pairs only
+                cdf: list[DataFrame] = []
+                leave: list[DataFrame] = []
+                keep: list[DataFrame | None] = []
+                images = None
+                if scan_t is not None and pairs is None:
+                    # no candidate file (a by-source condition touches
+                    # every file anyway): no row matched a source key
+                    scan_t = scan_t.withColumn(
+                        self._HIT, F.lit(None).cast("boolean")
+                    )
+                if scan_t is not None:
+                    cols = self._data_columns(scan_t)
+                    ident = [
+                        c
+                        for c in (self._FILE_NAME, self._DV_POS)
+                        if c in scan_t.columns
+                    ]
+                    kept = scan_t.where(F.col(self._HIT).isNull()).select(
+                        *cols, *ident
+                    )
+                    if by_source:
+                        # unmatched rows in touched files go — unless a
+                        # by-source condition spares them
+                        doomed = kept if bcond is None else kept.where(bcond)
+                        leave.append(doomed)
+                        cdf.append(
+                            doomed.withColumn("_change_type", F.lit("delete"))
+                        )
+                        kept = None if bcond is None else kept.where(~bcond)
+                    keep.append(kept)
+                    if when_matched is None:
+                        # matched rows carried as-is (their files change
+                        # only because they lose doomed by-source rows)
+                        keep.append(
+                            scan_t.where(F.col(self._HIT).isNotNull()).select(
+                                *cols, *ident
+                            )
+                        )
+                    elif pairs is not None:
+                        # the clause applies to apply_pre; condition-false
+                        # rows carry. On a row-tracked table _row_id is in
+                        # the identity list, so updates keep the TARGET's id
+                        apply_pre, updated, carry = self._matched_split(
+                            scan_t, when_matched_set,
+                            self._generated_at(base), sorted(idmap),
+                        )
+                        leave.append(apply_pre)
+                        if when_matched == "update":
+                            if when_matched_set is not None:
+                                # SET expressions can drift a column's
+                                # type — re-align so the new files can't
+                                # poison later declared-schema scans (same
+                                # rule as update()'s assignments)
+                                updated, _ = self._align(
+                                    updated, eff_schema, False, "merge",
+                                    passthrough=pt,
+                                )
+                            images = self._checked(updated, cons)
+                            cdf.append(
+                                apply_pre.withColumn(
+                                    "_change_type", F.lit("update_preimage")
+                                )
+                            )
+                            # one postimage PER updated target row,
+                            # pairing the preimages (not one per source key)
+                            cdf.append(
+                                updated.withColumn(
+                                    "_change_type", F.lit("update_postimage")
+                                )
+                            )
+                        else:  # delete
+                            cdf.append(
+                                apply_pre.withColumn(
+                                    "_change_type", F.lit("delete")
+                                )
+                            )
+                        keep.append(carry)
+                ins = None
+                if inserts is not None:
+                    allocated = allocate(inserts)
+                    ins = self._checked(allocated, cons)
                     cdf.append(
-                        doomed.withColumn("_change_type", F.lit("delete"))
+                        allocated.withColumn("_change_type", F.lit("insert"))
                     )
-                    kept = None if bcond is None else kept.where(~bcond)
-                matched_t = scan_t.join(src_keys, on=on, how="left_semi")
-                keep.append(kept)
-                if when_matched is None:
-                    # matched rows carried as-is (their files change only
-                    # because they lose doomed by-source rows)
-                    keep.append(matched_t)
-                else:
-                    # split the matched rows by the clause condition: the
-                    # clause applies to apply_pre (each target row —
-                    # Delta's whenMatchedUpdateAll multiplicity:
-                    # duplicate-key targets keep theirs), condition-false
-                    # rows carry. On a row-tracked table _row_id is in
-                    # the identity list, so updates keep the TARGET's id
-                    apply_pre, updated, carry = self._matched_split(
-                        matched_t, source, on, when_matched_condition,
-                        when_matched_set, self._generated_at(base),
-                        sorted(idmap),
+                if dropped:
+                    # read once for the change feed only — these files are
+                    # dropped from the snapshot by NAME, zero rewrite
+                    cdf.append(
+                        self._dml_scan(
+                            base, dropped, evolved_schema
+                        ).withColumn("_change_type", F.lit("delete"))
                     )
-                    leave.append(apply_pre)
-                    if when_matched == "update":
-                        if when_matched_set is not None:
-                            # SET expressions can drift a column's type —
-                            # re-align so the new files can't poison
-                            # later declared-schema scans (same rule as
-                            # update()'s assignments)
-                            updated, _ = self._align(
-                                updated, eff_schema, False, "merge",
-                                passthrough=pt,
-                            )
-                        images = self._checked(updated, cons)
-                        cdf.append(
-                            apply_pre.withColumn(
-                                "_change_type", F.lit("update_preimage")
-                            )
-                        )
-                        # one postimage PER updated target row, pairing
-                        # the preimages (not one per source key)
-                        cdf.append(
-                            updated.withColumn(
-                                "_change_type", F.lit("update_postimage")
-                            )
-                        )
-                    else:  # delete
-                        cdf.append(
-                            apply_pre.withColumn(
-                                "_change_type", F.lit("delete")
-                            )
-                        )
-                    keep.append(carry)
-            ins = None
-            if inserts is not None:
-                allocated = allocate(inserts)
-                ins = self._checked(allocated, cons)
-                cdf.append(
-                    allocated.withColumn("_change_type", F.lit("insert"))
+                return _Change(
+                    leave=_union_all(leave),
+                    keep=_union_all(keep),
+                    images=images,
+                    insert=ins,
+                    cdf=cdf,
                 )
-            if dropped:
-                # read once for the change feed only — these files are
-                # dropped from the snapshot by NAME, zero rewrite
-                cdf.append(
-                    self._dml_scan(base, dropped, evolved_schema).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            return _Change(
-                leave=_union_all(leave),
-                keep=_union_all(keep),
-                images=images,
-                insert=ins,
-                cdf=cdf,
-            )
 
-        params = {
-            "on": list(on),
-            "when_matched": when_matched,
-            "when_not_matched": when_not_matched,
-            "when_matched_condition": self._param_repr(
-                when_matched_condition
-            ),
-            "when_not_matched_condition": self._param_repr(
-                when_not_matched_condition
-            ),
-            "when_matched_set": self._param_repr(when_matched_set),
-        }
-        if by_source:
-            params["when_not_matched_by_source"] = "delete"
-            params["when_not_matched_by_source_condition"] = (
-                self._param_repr(when_not_matched_by_source_condition)
+            params = {
+                "on": list(on),
+                "when_matched": when_matched,
+                "when_not_matched": when_not_matched,
+                "when_matched_condition": self._param_repr(
+                    when_matched_condition
+                ),
+                "when_not_matched_condition": self._param_repr(
+                    when_not_matched_condition
+                ),
+                "when_matched_set": self._param_repr(when_matched_set),
+            }
+            if by_source:
+                params["when_not_matched_by_source"] = "delete"
+                params["when_not_matched_by_source_condition"] = (
+                    self._param_repr(when_not_matched_by_source_condition)
+                )
+            # new_files may legitimately be EMPTY (a by-source merge
+            # deleting everything, inserting nothing): the snapshot
+            # commits as files: [] and read() serves it from the
+            # log-recorded schema
+            return self._rewrite_commit(
+                "merge",
+                base,
+                touched,
+                untouched,
+                _build,
+                matched=pairs,
+                params=params,
+                mode=mode,
+                # a concurrent append whose files cannot intersect the
+                # source key envelope cannot hold a matchable key: the
+                # matched/insert split is unaffected, so the merge rebases
+                # over it (Delta's ConcurrentAppendException scope for
+                # MERGE). Not by-source: the appended rows would need a
+                # deletion it never saw
+                rebase_on_appends=(
+                    None
+                    if by_source
+                    else self._phys_triples(envelope, mapping)
+                ),
+                evolved_schema=evolved_schema,
+                idmap=idmap,
             )
-        # new_files may legitimately be EMPTY (a by-source merge deleting
-        # everything, inserting nothing): the snapshot commits as
-        # files: [] and read() serves it from the log-recorded schema
-        return self._rewrite_commit(
-            "merge",
-            base,
-            touched,
-            untouched,
-            _build,
-            matched=matched,
-            params=params,
-            mode=mode,
-            # a concurrent append whose files cannot intersect the source
-            # key envelope cannot hold a matchable key: the matched/insert
-            # split is unaffected, so the merge rebases over it (Delta's
-            # ConcurrentAppendException scope for MERGE). Not by-source:
-            # the appended rows would need a deletion it never saw
-            rebase_on_appends=(
-                None if by_source else self._phys_triples(envelope, mapping)
-            ),
-            evolved_schema=evolved_schema,
-            idmap=idmap,
-        )
+        finally:
+            if pairs is not None:
+                pairs.unpersist()
 
     # -- read -----------------------------------------------------------
     _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "in", "isnull", "notnull")
@@ -6141,15 +6156,73 @@ class VersionedTable:
             elif op == "notnull":
                 term = col.isNotNull()
             else:
-                term = {
-                    "=": col == F.lit(v),
-                    "<": col < F.lit(v),
-                    "<=": col <= F.lit(v),
-                    ">": col > F.lit(v),
-                    ">=": col >= F.lit(v),
-                }[op]
+                # only the named comparison is built: each Column is a
+                # py4j round trip
+                term = _COMPARE[op](col, F.lit(v))
             cond = cond & term
         return cond
+
+    def _change_range(
+        self,
+        name: str,
+        from_version: int | None,
+        to_version: int | None,
+        from_timestamp: object,
+        vacuumed: str,
+    ) -> tuple[int, list[tuple[int, dict]], dict]:
+        """The version walk :meth:`changes` and :meth:`change_feed`
+        share; ``name`` names the caller in each error, ``vacuumed``
+        ends the error for a vacuumed version in the range. Resolves
+        ``from_timestamp`` (an instant before the first commit means
+        "from the beginning"), checks the range and returns
+        (``to_version``, each data-changing version in the range with
+        its manifest, the clone vectors). Layout-only versions (compact:
+        same rows, new packing) are skipped. A CLONE's v0 may carry live
+        deletion vectors (cloned from the source): its files must be
+        delivered WITH the subtraction or rows deleted before the clone
+        resurrect in every consumer. Only v0 can be a clone, so the
+        vector map cannot collide with any later append's files."""
+        if from_timestamp is not None:
+            if from_version is not None:
+                raise VersionedTableError(
+                    "pass from_version OR from_timestamp, not both"
+                )
+            try:
+                from_version = self.resolve_timestamp(from_timestamp)
+            except VersionedTableError:
+                from_version = -1  # before the first commit
+        elif from_version is None:
+            raise VersionedTableError(
+                f"{name}() needs from_version or from_timestamp"
+            )
+        vs = self._versions()
+        if not vs:
+            raise VersionedTableError(f"no committed versions at {self.path}")
+        to_version = vs[-1] if to_version is None else to_version
+        if to_version not in vs:
+            raise VersionedTableError(
+                f"version {to_version} not found; available {vs[0]}..{vs[-1]}"
+            )
+        if from_version > to_version:
+            raise VersionedTableError(
+                f"{name} range is backwards: from {from_version} "
+                f"to {to_version}"
+            )
+        walked: list[tuple[int, dict]] = []
+        clone_dv: dict = {}
+        for v in range(from_version + 1, to_version + 1):
+            if v not in vs:
+                raise VersionedTableError(
+                    f"version {v} in the {name} range was vacuumed; "
+                    f"{vacuumed}"
+                )
+            m = self._manifest(v)
+            if _layout_only(m):
+                continue
+            if m.get("op") == "clone":
+                clone_dv.update(m.get("dv") or {})
+            walked.append((v, m))
+        return to_version, walked, clone_dv
 
     def changes(
         self,
@@ -6184,50 +6257,12 @@ class VersionedTable:
         startingTimestamp): rows added after the snapshot current at
         that instant — resolved through :meth:`resolve_timestamp`, an
         instant before the first commit meaning "from the beginning"."""
-        if from_timestamp is not None:
-            if from_version is not None:
-                raise VersionedTableError(
-                    "pass from_version OR from_timestamp, not both"
-                )
-            try:
-                from_version = self.resolve_timestamp(from_timestamp)
-            except VersionedTableError:
-                from_version = -1  # before the first commit
-        elif from_version is None:
-            raise VersionedTableError(
-                "changes() needs from_version or from_timestamp"
-            )
-        vs = self._versions()
-        if not vs:
-            raise VersionedTableError(f"no committed versions at {self.path}")
-        to_version = vs[-1] if to_version is None else to_version
-        if to_version not in vs:
-            raise VersionedTableError(
-                f"version {to_version} not found; available {vs[0]}..{vs[-1]}"
-            )
-        if from_version > to_version:
-            raise VersionedTableError(
-                f"changes range is backwards: from {from_version} "
-                f"to {to_version}"
-            )
+        to_version, walked, dv_for_scan = self._change_range(
+            "changes", from_version, to_version, from_timestamp,
+            "incremental read is impossible — full re-read required",
+        )
         added: list[str] = []
-        # a CLONE's v0 may carry live deletion vectors (cloned from the
-        # source): its files must be delivered WITH the subtraction or
-        # rows deleted before the clone resurrect in every consumer.
-        # Only v0 can be a clone, so the dv map cannot collide with any
-        # later append's files (and DML versions are refused below).
-        dv_for_scan: dict = {}
-        for v in range(from_version + 1, to_version + 1):
-            if v not in vs:
-                raise VersionedTableError(
-                    f"version {v} in the changes range was vacuumed; "
-                    f"incremental read is impossible — full re-read required"
-                )
-            m = self._manifest(v)
-            if _layout_only(m):
-                continue  # compact: same rows, new packing — no change
-            if m.get("op") == "clone":
-                dv_for_scan.update(m.get("dv") or {})
+        for v, m in walked:
             if "add" in m:
                 added.extend(m["add"])
             elif m["op"] in ("append", "clone"):
@@ -6298,48 +6333,13 @@ class VersionedTable:
         re-deriving row identity from payload); deleted ids never
         reappear; inserts carry their freshly allocated ids. Change rows
         from versions committed BEFORE enablement read it as NULL."""
-        if from_timestamp is not None:
-            if from_version is not None:
-                raise VersionedTableError(
-                    "pass from_version OR from_timestamp, not both"
-                )
-            try:
-                from_version = self.resolve_timestamp(from_timestamp)
-            except VersionedTableError:
-                from_version = -1
-        elif from_version is None:
-            raise VersionedTableError(
-                "change_feed() needs from_version or from_timestamp"
-            )
-        vs = self._versions()
-        if not vs:
-            raise VersionedTableError(f"no committed versions at {self.path}")
-        to_version = vs[-1] if to_version is None else to_version
-        if to_version not in vs:
-            raise VersionedTableError(
-                f"version {to_version} not found; available {vs[0]}..{vs[-1]}"
-            )
-        if from_version > to_version:
-            raise VersionedTableError(
-                f"change_feed range is backwards: from {from_version} "
-                f"to {to_version}"
-            )
+        to_version, walked, clone_dv = self._change_range(
+            "change_feed", from_version, to_version, from_timestamp,
+            "the change history is gone — full re-read required",
+        )
         insert_files: list[tuple[str, int]] = []
         cdc_files: list[tuple[str, int]] = []
-        # clone-v0 deletion vectors: see changes() — rows deleted before
-        # the clone must not resurface as 'insert' in the feed
-        clone_dv: dict = {}
-        for v in range(from_version + 1, to_version + 1):
-            if v not in vs:
-                raise VersionedTableError(
-                    f"version {v} in the change_feed range was vacuumed; "
-                    f"the change history is gone — full re-read required"
-                )
-            m = self._manifest(v)
-            if _layout_only(m):
-                continue
-            if m.get("op") == "clone":
-                clone_dv.update(m.get("dv") or {})
+        for v, m in walked:
             if "cdc" in m:
                 cdc_files.extend((f, v) for f in m["cdc"])
             elif "add" in m:

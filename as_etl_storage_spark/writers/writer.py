@@ -50,6 +50,21 @@ class WriteResult:
     reject_path: str = ""
 
 
+def check_unique_keys(df: DataFrame, keys, error: type) -> None:
+    """Raise ``error`` when two rows of the replace batch ``df`` share
+    ``keys``. MySQL REPLACE keeps the *last* row for duplicate keys
+    within one batch; a DataFrame has no row order, so the result would
+    be nondeterministic (same stance as Delta MERGE's multiple-matches
+    error). Both replace sinks, file and versioned, run this check."""
+    dup = df.groupBy(*keys).count().where(F.col("count") > 1).limit(1).collect()
+    if dup:
+        raise error(
+            f"replace batch has duplicate merge keys (e.g. "
+            f"{dict(zip(keys, [dup[0][k] for k in keys]))}); REPLACE "
+            "order-dependence is undefined on an unordered DataFrame"
+        )
+
+
 class WriterError(RuntimeError):
     pass
 
@@ -257,23 +272,7 @@ class ParquetWriter:
                 f"columns); target {target.columns} vs incoming {df.columns}"
             )
         incoming = df.select(*target.columns)  # align column order
-        # MySQL REPLACE keeps the *last* row for duplicate keys within one
-        # batch; a DataFrame has no row order, so duplicate keys in the
-        # incoming batch would make the merge nondeterministic — reject them
-        # (same stance as Delta MERGE's multiple-matches error).
-        dup = (
-            incoming.groupBy(*keys)
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise WriterError(
-                f"replace batch has duplicate merge keys (e.g. "
-                f"{dict(zip(keys, [dup[0][k] for k in keys]))}); REPLACE "
-                "order-dependence is undefined on an unordered DataFrame"
-            )
+        check_unique_keys(incoming, keys, WriterError)
         kept = target.join(incoming.select(*keys).distinct(), on=keys, how="left_anti")
         rows = Observation()
         merged = kept.unionByName(

@@ -300,13 +300,22 @@ class TestWriter:
         with pytest.raises(WriterError, match="schema mismatch"):
             run_job(spark, job)
 
-    def test_replace_duplicate_batch_keys_rejected(self, spark, tmp_path):
+    @pytest.mark.parametrize("versioned", [False, True])
+    def test_replace_duplicate_batch_keys_rejected(
+        self, spark, tmp_path, versioned
+    ):
+        from as_etl_storage_spark.writers.versioned import VersionedTableError
         from as_etl_storage_spark.writers.writer import WriterError
 
-        run_job(spark, self._job(tmp_path))
+        run_job(spark, self._job(tmp_path, versioned=versioned))
         # incoming batch with duplicate merge keys (o_custkey repeats)
-        job = self._job(tmp_path, mode="replace", mergeKeys=["o_custkey"])
-        with pytest.raises(WriterError, match="duplicate merge keys"):
+        job = self._job(
+            tmp_path, mode="replace", mergeKeys=["o_custkey"],
+            versioned=versioned,
+        )
+        with pytest.raises(
+            (WriterError, VersionedTableError), match="duplicate merge keys"
+        ):
             run_job(spark, job)
 
     def test_schema_evolution_additive(self, spark, tmp_path):

@@ -3642,6 +3642,64 @@ def test_vector_read_runs_no_extra_spark_job(spark, tmp_path):
     assert jobs(v) == jobs(0)
 
 
+def test_merge_runs_one_match_join(spark, tmp_path):
+    """MERGE pins one match join and derives every step from it: a
+    plain unique-key vector-mode upsert runs at most 12 Spark jobs (10
+    on a 4-core host; a separate candidate-key scan, duplicate probe and
+    per-write re-joins made it 16). A source whose duplicate keys match nothing, plus a
+    NULL-key row, still inserts every row: the duplicate check counts
+    only pairs."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    vt = VersionedTable(spark, str(tmp_path / "mj"))
+    vt.overwrite(
+        spark.range(4000).select("id", F.lit("old").alias("v")).repartition(4)
+    )
+    src = spark.range(100, 4400, 20).select("id", F.lit("new").alias("v"))
+    src.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    sc = spark.sparkContext
+    group = f"merge_jobs_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "merge")
+    try:
+        v = vt.merge(src, ["id"])
+    finally:
+        sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert vt._dv_at(v), "the merge must take the vector path"
+    out = {r.id: r.v for r in vt.read().collect()}
+    assert len(out) == 4000 + 20
+    assert all(out[i] == "new" for i in range(100, 4400, 20))
+    assert out[101] == "old"
+    assert jobs <= 12, jobs
+
+    dup = spark.createDataFrame(
+        [(9000, "a"), (9000, "b"), (None, "c"), (7, "d")], "id long, v string"
+    )
+    vt.merge(dup, ["id"])
+    got = sorted(
+        (r.id if r.id is not None else -1, r.v)
+        for r in vt.read().where("id >= 9000 OR id IS NULL OR id = 7").collect()
+    )
+    assert got == [(-1, "c"), (7, "d"), (9000, "a"), (9000, "b")]
+
+
+def test_replace_rejects_duplicate_batch_keys(spark, tmp_path):
+    """replace() runs the file sink's duplicate-key check: a batch
+    holding one key twice raises and commits no version."""
+    vt = VersionedTable(spark, str(tmp_path / "rpd"))
+    vt.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    v_pre = vt.latest_version()
+    bad = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (3, "z")], "k long, v string"
+    )
+    with pytest.raises(VersionedTableError, match="duplicate merge keys"):
+        vt.replace(bad, ["k"])
+    assert vt.latest_version() == v_pre
+    assert sorted(tuple(r) for r in vt.read().collect()) == [(1, "a"), (2, "b")]
+
 def test_merge_rebases_over_disjoint_append(spark, tmp_path):
     """MERGE's source-key envelope bounds its read set: a concurrent
     append outside the envelope rebases in; inside, it aborts."""
