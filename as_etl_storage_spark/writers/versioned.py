@@ -4606,8 +4606,9 @@ class VersionedTable:
         untouched: list[str],
         build,
         *,
-        matched: DataFrame | None,
         params: dict,
+        matched: DataFrame | None = None,
+        pairs: DataFrame | None = None,
         mode: str = "dv",
         rewrite_fraction: float = 0.5,
         rebase_on_appends: list | None = None,
@@ -4639,19 +4640,18 @@ class VersionedTable:
         leave (``leave``) and stay (``keep``), and which new rows arrive
         — the changed rows' new images and the inserts — plus the change
         rows. ``matched`` is phase 1's pinned scan of the rows that
-        leave, with their (file, position) (None in copy-on-write mode),
-        or a merge's pinned match pairs (both modes), which add each
-        pair's clause outcome and source row — the kernel takes it over
-        and unpersists it: the scan ``build`` gets holds the rewritten
-        files whole but only these rows of vectored files, whose other
-        rows stay in place and are never read again. With pairs, each
-        rewritten row is joined to its pair by (file, position) (Delta's
-        second pass). When any file is vectored, or pairs are given, the
-        scan carries each row's (file, position), which ``leave`` keeps.
-        The kernel writes the leaving rows' positions of vectored files
-        as one vector sidecar, the kept rows of
-        rewritten files plus the new images as fresh files, and the
-        inserts as fresh files.
+        leave, with their (file, position) (None in copy-on-write mode);
+        a merge passes its pinned match ``pairs`` instead, which add each
+        pair's clause outcome ``__vt_hit`` and source row. The kernel
+        takes either over and unpersists it: the scan ``build`` gets
+        holds the rewritten files whole but only these rows of vectored
+        files, whose other rows stay in place. With ``pairs``, each
+        rewritten row is left-joined to its pair by (file, position)
+        (Delta's second pass; NULL ``__vt_hit`` where it has none). The
+        scan carries (file, position) when any file is vectored or
+        ``pairs`` are given. The kernel writes the vectored files'
+        leaving positions as one vector sidecar, the rewritten files'
+        kept rows plus the new images and the inserts as fresh files.
         ``allocate(df)`` pins ``df`` and assigns ``idmap``'s identity
         values in-plan; only inserts allocate, so the commit advances
         the identity high-water mark by exactly the insert files' footer
@@ -4692,11 +4692,7 @@ class VersionedTable:
                     vectored[f] = n
         rewrite = [f for f in touched if f not in vectored]
         ident = (self._FILE_NAME, self._DV_POS)
-        # a merge's pinned pairs: each one's clause outcome and source row
-        pair_cols = [
-            c for c in (self._HIT, self._SRC)
-            if matched is not None and c in matched.columns
-        ]
+        rows = matched if pairs is None else pairs
         pinned: list[DataFrame] = []
 
         def allocate(df: DataFrame) -> DataFrame:
@@ -4736,27 +4732,24 @@ class VersionedTable:
             return run
 
         # one pinned scan: rewritten files whole, vectored files only the
-        # rows that leave (their kept rows stay in place) — with nothing
-        # rewritten, that is phase 1's pinned rows as they are
-        scan_t = matched if touched else None
+        # pinned rows (their kept rows stay in place) — with nothing
+        # rewritten, the pinned rows as they are
+        scan_t = rows if touched else None
         if rewrite:
             scan = self._dml_scan(
                 base, rewrite, evolved_schema,
-                keep_identity=bool(vectored or pair_cols),
+                keep_identity=bool(vectored) or pairs is not None,
             )
-            if pair_cols:
-                # Delta's second pass: each rewritten row takes its pair's
-                # columns by (file, position) — NULL where it matched
-                # nothing — so ``build`` tags every row from one frame
+            if pairs is not None:
                 scan = scan.join(
-                    matched.select(*ident, *pair_cols),
+                    pairs.drop(*self._data_columns(pairs)),
                     on=list(ident),
                     how="left",
                 )
             scan_t = _union_all(
                 [
                     scan,
-                    matched.where(
+                    rows.where(
                         F.col(self._FILE_NAME).isin(
                             [os.path.basename(f) for f in vectored]
                         )
@@ -4811,7 +4804,7 @@ class VersionedTable:
                 labelled("dv", self._write_dv_files, masked),
             )
         finally:
-            for p in (scan_t, matched, *pinned):
+            for p in (scan_t, rows, *pinned):
                 if p is not None:
                     p.unpersist()
         rw_files, rw_stats = rw or ([], {})
@@ -5177,9 +5170,7 @@ class VersionedTable:
         contract). The (file, position) identity rides the target-side
         frames (apply_pre, carry), never the updated rows."""
         cols = self._data_columns(tagged)
-        ident = [
-            c for c in (self._FILE_NAME, self._DV_POS) if c in tagged.columns
-        ]
+        ident = (self._FILE_NAME, self._DV_POS)
         hit = F.col(self._HIT)
         applied = tagged.where(hit)
         if self._SRC not in tagged.columns:
@@ -5254,7 +5245,6 @@ class VersionedTable:
         removes every target row holding an incoming key (rather than
         updating each one), retires their row ids on a row-tracked
         table, records no change files and rewrites the whole table.
-
 
         The by-source clause changes the cost shape: every target file
         may hold unmatched rows, so nothing can be carried by name —
@@ -5609,7 +5599,7 @@ class VersionedTable:
             if when_not_matched_by_source_condition is not None
             else None
         )
-        pairs = None
+        upd = when_matched == "update"
         if candidates:
             pair, cols = self._matched_pairs(
                 self._dml_scan(
@@ -5618,22 +5608,39 @@ class VersionedTable:
                 source,
                 on,
             )
+            # only a file that may take a vector reads its rows from the
+            # pairs; a rewritten file's come from the second pass
+            vec = mode == "dv" and when_matched is not None and not by_source
             pairs = pair.select(
-                *(cols if mode == "dv" else on),
+                *(cols if vec else on),
                 self._FILE_NAME,
                 self._DV_POS,
-                *([self._SRC] if when_matched == "update" else []),
+                *([self._SRC] if upd else []),
                 (
                     F.lit(True)
                     if when_matched_condition is None
                     else self._as_condition(when_matched_condition)
                 ).alias(self._HIT),
-            ).persist()
+            )
+            if when_matched is None and by_source:
+                # with no matched clause the second pass only carries
+                # rows: one pair per target row, whatever the source
+                pairs = pairs.dropDuplicates(
+                    [self._FILE_NAME, self._DV_POS]
+                )
+            pairs = pairs.persist()
+        else:
+            # no candidate file: no pair (an empty relation, no job)
+            pairs = source.where(F.lit(False)).select(
+                *on,
+                F.lit(None).cast("string").alias(self._FILE_NAME),
+                F.lit(None).cast("long").alias(self._DV_POS),
+                *([F.struct(*source.columns).alias(self._SRC)] if upd else []),
+                F.lit(None).cast("boolean").alias(self._HIT),
+            )
         try:
             hits: dict[str, int] = {}
-            if pairs is not None and (
-                when_matched is not None or by_source
-            ):
+            if when_matched is not None or by_source:
                 with self._job_label("merge:discovery"):
                     per_file = (
                         pairs.groupBy(self._FILE_NAME)
@@ -5672,12 +5679,8 @@ class VersionedTable:
                 untouched, dropped = ([], rest) if by_source else (rest, [])
             inserts = None
             if when_not_matched == "insert":
-                inserts = (
-                    source
-                    if pairs is None
-                    else source.join(
-                        pairs.select(*on), on=on, how="left_anti"
-                    )
+                inserts = source.join(
+                    pairs.select(*on), on=on, how="left_anti"
                 )
                 if when_not_matched_condition is not None:
                     # narrows the insert clause: source rows failing it
@@ -5708,19 +5711,9 @@ class VersionedTable:
                 leave: list[DataFrame] = []
                 keep: list[DataFrame | None] = []
                 images = None
-                if scan_t is not None and pairs is None:
-                    # no candidate file (a by-source condition touches
-                    # every file anyway): no row matched a source key
-                    scan_t = scan_t.withColumn(
-                        self._HIT, F.lit(None).cast("boolean")
-                    )
                 if scan_t is not None:
                     cols = self._data_columns(scan_t)
-                    ident = [
-                        c
-                        for c in (self._FILE_NAME, self._DV_POS)
-                        if c in scan_t.columns
-                    ]
+                    ident = (self._FILE_NAME, self._DV_POS)
                     kept = scan_t.where(F.col(self._HIT).isNull()).select(
                         *cols, *ident
                     )
@@ -5742,7 +5735,7 @@ class VersionedTable:
                                 *cols, *ident
                             )
                         )
-                    elif pairs is not None:
+                    else:
                         # the clause applies to apply_pre; condition-false
                         # rows carry. On a row-tracked table _row_id is in
                         # the identity list, so updates keep the TARGET's id
@@ -5831,7 +5824,7 @@ class VersionedTable:
                 touched,
                 untouched,
                 _build,
-                matched=pairs,
+                pairs=pairs,
                 params=params,
                 mode=mode,
                 # a concurrent append whose files cannot intersect the
@@ -5849,8 +5842,7 @@ class VersionedTable:
                 idmap=idmap,
             )
         finally:
-            if pairs is not None:
-                pairs.unpersist()
+            pairs.unpersist()
 
     # -- read -----------------------------------------------------------
     _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "in", "isnull", "notnull")

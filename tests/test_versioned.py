@@ -3646,9 +3646,9 @@ def test_merge_runs_one_match_join(spark, tmp_path):
     """MERGE pins one match join and derives every step from it: a
     plain unique-key vector-mode upsert runs at most 12 Spark jobs (10
     on a 4-core host; a separate candidate-key scan, duplicate probe and
-    per-write re-joins made it 16). A source whose duplicate keys match nothing, plus a
-    NULL-key row, still inserts every row: the duplicate check counts
-    only pairs."""
+    per-write re-joins made it 16). A source whose duplicate keys match
+    nothing, plus a NULL-key row, still inserts every row: the duplicate
+    check counts only pairs."""
     import time
 
     from pyspark.sql import functions as F
@@ -4124,6 +4124,31 @@ def test_merge_by_source_delete_variants(spark, tmp_path):
     # validation
     with pytest.raises(VersionedTableError, match="by_source"):
         vt3.merge(src2, ["id"], when_not_matched_by_source="drop")
+
+
+@pytest.mark.parametrize("mode", ["dv", "rewrite"])
+def test_merge_by_source_keeps_rows_once_under_duplicate_source_keys(
+    spark, tmp_path, mode
+):
+    """With no matched clause a source key may repeat: each key-matched
+    target row is carried exactly once, its CDF records only the
+    by-source deletes, and the insert clause still sees the repeat."""
+    from pyspark.sql import functions as F
+
+    vt = VersionedTable(spark, str(tmp_path / "mbd"))
+    vt.overwrite(spark.range(10).select("id", F.lit("t").alias("v")))
+    src = spark.createDataFrame(
+        [(3, "a"), (3, "b"), (5, "c"), (12, "d"), (12, "e")], "id long, v string"
+    )
+    v = vt.merge(
+        src, ["id"], when_matched=None,
+        when_not_matched_by_source="delete", mode=mode,
+    )
+    assert sorted((r.id, r.v) for r in vt.read().collect()) == [
+        (3, "t"), (5, "t"), (12, "d"), (12, "e"),
+    ]
+    cdf = vt.change_feed(v - 1, v).groupBy("_change_type").count().collect()
+    assert {r[0]: r[1] for r in cdf} == {"delete": 8, "insert": 2}
 
 
 def test_merge_by_source_aborts_on_any_concurrent_commit(spark, tmp_path):
