@@ -4660,14 +4660,11 @@ class VersionedTable:
         The writes are jobs over the persisted scan, labelled
         ``vt:<op>:rewrite|insert|dv|cdf``. The change rows go first and
         build the scan's cache; the other writes then run concurrently
-        (:meth:`_overlapped`) over the built cache. Each data-file
-        thread also reads its own files' footer stats, so the commit
-        re-reads no footer: kept files reuse their manifest stats. The
-        same stats find the 0-row files an empty frame stages (a rewrite
-        whose rows all leave, a merge that inserts nothing): they are
-        deleted and never committed, at no job cost — except on a
-        schema-less legacy log, where a file footer is the only record
-        of the table schema.
+        (:meth:`_overlapped`). Each data-file thread reads its own
+        files' footer stats, so the commit re-reads no footer; the same
+        stats find the 0-row files an empty frame stages, which are
+        deleted and never committed (except on a schema-less legacy
+        log, where a footer is the only record of the table schema).
         ``insert_cdf_schema``: record the insert change rows from the
         COMMITTED insert files instead (one more job after staging) — a
         non-deterministic, unpinned incoming frame must record exactly
@@ -5561,32 +5558,24 @@ class VersionedTable:
         evolved_schema: dict | None = None,
         mode: str = "dv",
     ) -> int | None:
-        """Pin the match, classify the target files from it, then hand
-        them to :meth:`_rewrite_commit` (Delta's two-pass MERGE). The
-        match is ONE inner join of the source with the candidate target
-        rows (:meth:`_matched_pairs`), pinned with each pair's (file,
+        """Delta's two-pass MERGE: pin the match, classify the target
+        files from it, hand them to :meth:`_rewrite_commit`. The match
+        is ONE inner join of the source with the candidate target rows
+        (:meth:`_matched_pairs`), pinned with each pair's (file,
         position) and clause outcome; every later step reads it. One
-        aggregate counts each file's pairs and applying rows — a target
-        row with two pairs is the duplicate-key violation — and the
-        inserts are the source rows whose key no pair holds (every key
-        match blocks an insert). Vector-mode pairs carry every target
-        column, so a vectored file's leaving rows, images and change
-        rows come from them; copy-on-write pairs stay column-pruned.
-        Touched files hold a row the matched clause applies to: a file
-        whose key matches are all condition-false is carried by name.
+        aggregate counts each file's pairs and applying rows (a target
+        row with two pairs is the duplicate-key violation); inserts are
+        the source rows whose key no pair holds. A file whose key
+        matches are all condition-false is carried by name.
 
-        With ``when_not_matched_by_source='delete'`` every file may hold
-        doomed unmatched rows, so nothing is carried by name: files with
-        no key match hold ONLY doomed rows and are dropped WHOLESALE
-        (read once for their CDF delete rows); only key-matched files
-        rewrite. A by-source CONDITION touches every file. The by-source
-        read set is the whole table, so it commits with the
-        abort-on-anything conflict rule."""
-        # the schema the REWRITE side must land under: when the merge
-        # evolves the schema (merge_schema + source extras), touched
-        # files are rewritten with the new column null-filled for kept
-        # rows, so the whole downstream composition (unions, CDF) runs
-        # on one schema
+        With ``when_not_matched_by_source='delete'`` nothing is carried
+        by name: files with no key match hold ONLY doomed rows and are
+        dropped WHOLESALE (read once for their CDF delete rows); only
+        key-matched files rewrite, and a by-source CONDITION touches
+        every file. Its read set is the whole table, so it commits with
+        the abort-on-anything conflict rule."""
+        # the schema the rewrite side lands under (an evolving merge
+        # null-fills the new column for kept rows)
         eff_schema = (
             evolved_schema
             if evolved_schema is not None
